@@ -430,9 +430,10 @@ def plan_aqe_skew_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     recalibration attempt in r15 failed exactly there).  What the r14
     values got WRONG was the factor: 1.0 marked EVERY partition skewed
     (non-hot partitions always exceed 1.0x the median), so all 16 got
-    shredded to 16 KB slices — factor 2.0 restores the default semantics
-    (only the genuinely hot partition splits; the ~100x-median hot one
-    clears 2.0x on every corpus the 20k floor admits).
+    shredded to 16 KB slices — factor 2.0 restores the default's
+    only-hot-partitions behaviour (Spark's default factor is 5.0; the
+    ~100x-median hot partition clears 2.0x on every corpus the 20k floor
+    admits, and no other partition does).
     AQE splits a skewed partition at MAPPER granularity, so a single-row-
     group local file (one map task) can never split — the round-robin
     ``repartition(16)`` stands in for the thousands of map tasks a real

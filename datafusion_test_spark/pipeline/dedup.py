@@ -465,42 +465,45 @@ def simhash_pairs(
     distance < 4 bands... we accept band-miss recall loss, the standard
     trade).
 
-    Bit votes: explode tokens, per (doc, bit) sum ±1 votes, reassemble the
-    signature with bit shifts — fully columnar, scales as one shuffle on
-    (doc_id) after an explode bounded by token count × 1 (votes kept as a
-    64-element array, not 64 rows).  Band buckets over _DF_CAP docs are
-    dropped (hot-bucket guard) before the self-join.
+    Bit votes: explode tokens, per (doc, bit) count set bits against the
+    token count (the sign of the ±1 vote sum), reassemble the signature
+    with bit shifts — fully columnar, scales as one shuffle on (doc_id)
+    after an explode bounded by token count × 1 (votes kept as 65 count
+    columns, not 64 rows).  Band buckets over _DF_CAP docs are dropped
+    (hot-bucket guard) before the self-join.
     """
     tok = _words_of(docs, spark.sparkContext.defaultParallelism).select(
         "doc_id", F.explode("w").alias("t")
     ).withColumn("h", F.xxhash64("t"))
-    # Per-bit ±1 vote sums as 64 aggregate expressions over the token rows —
-    # no 64× row explosion, and every sum combines map-side before the one
-    # shuffle on doc_id.  Measured negative result (round 4): packing the
-    # votes as set-bit counts in 4×16-bit lanes per long (16 sums + a count
-    # instead of 64 sums, signature bit-identical via vote = 2·cnt − n_tok)
-    # changed the warm sf0.1 wall by < 5% — the band self-join dominates,
-    # not the vote aggregation — so the simpler unpacked form stays.
-    # The 64 vote sums, the 64-term signature fold, and the 4 band structs
-    # are built as SQL STRINGS parsed in ONE py4j call each (r15; the
+    # Per-bit votes as 64 set-bit counts plus the token count over the token
+    # rows — no 64× row explosion, and every count combines map-side before
+    # the one shuffle on doc_id.  Bit i's ±1 vote sum is 2·c_i − n, so it
+    # is positive iff 2·c_i > n: the signature is bit-identical to summing
+    # ±1 votes.  Measured negative result (round 4): packing the counts in
+    # 4×16-bit lanes per long changed the warm sf0.1 wall by < 5% — the
+    # band self-join dominates, not the vote aggregation.
+    # The counts, the 64-term signature fold, and the 4 band structs are
+    # built as SQL STRINGS parsed in ONE py4j call each (r15; the
     # _expr.spark_*_sql discipline from r14's IVF work): the Column-object
     # loop cost ~1.3 s of py4j chatter per build — more than the query's
-    # execution.  Expressions are semantically identical (same CASE/CAST
-    # shapes), so signatures are bit-identical to the r4 form.
+    # execution.  Counts are never NULL and the fold ORs disjoint bits, so
+    # the aggregate's output method carries no null checks and no
+    # overflow-checked adds: it stays under HotSpot's 8,000-byte JIT limit
+    # (nullable ±1 sums folded with `+` compiled to 9,081 bytes).
     voted = tok.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n"),
         *[
-            F.expr(f"sum(CAST(shiftright(h, {i}) & 1 AS INT) * 2 - 1) AS b{i}")
+            F.expr(f"count_if(shiftright(h, {i}) & 1 = 1) AS c{i}")
             for i in range(64)
-        ]
+        ],
     )
-    sig_sql = " + ".join(
-        f"(CASE WHEN b{i} > 0 THEN CAST({(1 << i) if i < 63 else -(1 << 63)}"
-        f" AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
+    sig_sql = " | ".join(
+        f"(CASE WHEN shiftleft(c{i}, 1) > n"
+        f" THEN CAST({(1 << i) if i < 63 else -(1 << 63)} AS BIGINT)"
+        f" ELSE CAST(0 AS BIGINT) END)"
         for i in range(64)
     )
-    sig = voted.selectExpr(
-        "doc_id", f"CAST(0 AS BIGINT) + {sig_sql} AS simhash"
-    )
+    sig = voted.selectExpr("doc_id", f"{sig_sql} AS simhash")
     bands_sql = ", ".join(
         f"struct(CAST({bi} AS INT) AS band,"
         f" shiftright(simhash, {16 * bi}) & 65535 AS bkey)"

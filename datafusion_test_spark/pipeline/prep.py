@@ -58,11 +58,12 @@ def pipeline_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # 3. language ID — text.langid_exprs, the same expressions text_langid
-    # declares (single source; see its docstring)
-    _, _, pred = langid_exprs()
-    tagged = scored.withColumn("pred_lang", pred).filter(
-        F.col("pred_lang") != "und"
-    )
+    # declares (single source; see its docstring).  pred is 'und' exactly
+    # when best <= 0, so the gate tests best: the optimizer pushes this
+    # text-only filter below the dedup window, where the whole pred CASE
+    # compiled to a 9,349-byte method, past HotSpot's 8,000-byte JIT limit.
+    _, best, pred = langid_exprs()
+    tagged = scored.filter(best > 0).withColumn("pred_lang", pred)
 
     # 4. funnel summary per (detected, labeled) language — the labeled lang
     # keeps the output discriminating even though the stopword heuristic

@@ -54,6 +54,49 @@ def num_shuffles(df: DataFrame) -> int:
     return len(re.findall(r"Exchange (hash|range|rangepartitioning|RoundRobin|SinglePartition)", plan_string(df)))
 
 
+def max_method_bytes(df: DataFrame) -> int:
+    """Largest JVM method, in bytecode bytes, that whole-stage codegen emits
+    for `df`'s plan, including the plans of cached relations it scans.
+    HotSpot never JIT-compiles a method over 8,000 bytes
+    (`DontCompileHugeMethods`), so a larger one runs interpreted per row.
+
+    Compiles each WholeStageCodegenExec's source with CodeGenerator.compile
+    (Spark's `debug.codegenStringSeq`) over the non-adaptive prepared plan —
+    the one AQE starts from — so the figure is deterministic and belongs to
+    this plan alone, unlike the session-wide sampled CodegenMetrics.
+    """
+    jvm = df.sparkSession._jvm.org.apache.spark.sql.execution
+    session = df._jdf.sparkSession()
+    seen: set[int] = set()  # cached plans by SparkPlan.id: walk each once
+
+    def sizes(plan) -> list[int]:
+        stages = jvm.debug.package.codegenStringSeq(plan)
+        out = [stages.apply(i)._3().maxMethodCodeSize() for i in range(stages.length())]
+        leaves = plan.collectLeaves()
+        for i in range(leaves.length()):
+            leaf = leaves.apply(i)
+            if leaf.getClass().getSimpleName() == "InMemoryTableScanExec":
+                cached = leaf.relation().cachedPlan()
+                if cached.id() in seen:
+                    continue
+                seen.add(cached.id())
+                if cached.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+                    cached = jvm.QueryExecution.prepareExecutedPlan(
+                        session, cached.inputPlan()
+                    )
+                out += sizes(cached)
+        return out
+
+    found = sizes(
+        jvm.QueryExecution.prepareExecutedPlan(
+            session, df._jdf.queryExecution().sparkPlan()
+        )
+    )
+    if any(s < 0 for s in found):
+        raise RuntimeError("a whole-stage codegen subtree failed to compile")
+    return max(found, default=0)
+
+
 def summarize(df: DataFrame) -> str:
     return (
         f"joins={join_strategies(df)} shuffles={num_shuffles(df)} "

@@ -94,14 +94,17 @@ def tune(spark: SparkSession) -> SparkSession:
     The memo is guarded by ONE sentinel conf read per call (ADVICE r14):
     a driver-provided session whose runtime confs are mutated by external
     code after the first tune() re-pins the FULL set the moment the
-    sentinel drifts — ~0.3 ms/call instead of the ~5 ms full re-apply,
-    keeping the docstring's 'driver-provided or ours' contract honest."""
+    sentinel drifts — ~0.3 ms/call instead of the ~5 ms full re-apply.
+    Only drift of the sentinel (timeZone) is detected: external code that
+    changes any other key and leaves timeZone at UTC goes unnoticed until
+    timeZone drifts too.  A sentinel read that raises re-applies the full
+    set rather than trusting the memo."""
     if spark in _TUNED:
         try:
             if spark.conf.get(_SENTINEL_CONF) == RUNTIME_CONFS[_SENTINEL_CONF]:
                 return spark
         except Exception:
-            return spark  # conf API unavailable; nothing to re-pin with
+            pass  # probe failed: drift unknown, so re-pin below
     for k, v in RUNTIME_CONFS.items():
         try:
             spark.conf.set(k, v)

@@ -9,8 +9,8 @@ Reference parity:
 - cancel_query           src/main.rs:56-105 — cancellation race (harness in
   ../cancel.py)
 
-The generator is fully columnar — `spark.range` + `rand(seed)` + a base62
-character-table lookup, zero Python UDFs — so at 100 TB it generates
+The generator is fully columnar — `spark.range` + `rand(seed)` +
+`randstr(10, seed)`, zero Python UDFs — so at 100 TB it generates
 partition-parallel at scan speed (the reference generates 35M rows the same
 way, vectorized per RecordBatch).
 """
@@ -28,24 +28,21 @@ from pyspark.sql import functions as F
 from ..io import table
 from ..session import tune
 
-_B62 = "0123456789ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz"
 _STRING_COLS = ["E", "F", "G", "H", "I", "J", "K"]
 
 
 def _rand_string(seed: int):
-    """10-char base62 string, columnar: 10 independent char lookups.
+    """10 chars drawn uniformly from [0-9a-zA-Z] — the reference's
+    `Alphanumeric` pool — seeded per partition like `rand`.
 
-    substr on the literal charset, NOT element_at(split(lit(...))) — the
-    split would re-tokenize the 62-char alphabet per row per character
-    (measured ~4x slower generation at 2M rows).
+    One built-in `randstr` per column, not 10 per-character lookups: the
+    lookups made whole-stage codegen emit a 14,054-byte method, which
+    HotSpot never JIT-compiles (`DontCompileHugeMethods`, 8,000 bytes), so
+    every row ran interpreted.  tests/test_sources.py guards the limit.
+    Column seeds sit 1000 apart: each partition adds its index to the seed,
+    so adjacent seeds would repeat one column's stream in the next.
     """
-    chars = [
-        F.expr(
-            f"substr('{_B62}', CAST(floor(rand({seed * 1000 + k}) * 62) AS INT) + 1, 1)"
-        )
-        for k in range(10)
-    ]
-    return F.concat(*chars)
+    return F.randstr(F.lit(10), F.lit(seed * 1000))
 
 
 def generate_random_table(

@@ -169,3 +169,29 @@ def test_tune_repins_after_external_conf_mutation(spark):
             assert spark.conf.get(k, v) == v
     finally:
         spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+def test_tune_repins_when_sentinel_probe_raises(spark, monkeypatch):
+    """A sentinel read that raises must not trust the memo: tune() falls
+    through to the full re-apply instead of returning the session as-is."""
+    from datafusion_test_spark.session import RUNTIME_CONFS, tune
+
+    tune(spark)
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "false")
+    real_get = spark.conf.get
+
+    def failing_get(key, *args):
+        if key == "spark.sql.session.timeZone":
+            raise RuntimeError("conf API unavailable")
+        return real_get(key, *args)
+
+    try:
+        with monkeypatch.context() as m:
+            m.setattr(spark.conf, "get", failing_get)
+            tune(spark)
+        for k, v in RUNTIME_CONFS.items():
+            assert spark.conf.get(k, v) == v, k
+    finally:
+        for k, v in RUNTIME_CONFS.items():
+            spark.conf.set(k, v)

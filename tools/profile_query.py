@@ -4,7 +4,10 @@ For each named headline query: time the BUILD phase (``fn(spark, sf_dir)`` —
 driver-side plan construction plus any eager actions such as
 localCheckpoints and Lloyd rounds) separately from the EXEC phase (the noop
 sink write, guide §1.4), count the Spark jobs each phase launched (via a
-job group + statusTracker), and optionally dump ``explain("formatted")``.
+job group + statusTracker), report the largest whole-stage-codegen method
+(``max_method_bytes``: over 8,000 bytes HotSpot never JIT-compiles it, so
+that stage runs in the bytecode interpreter), and optionally dump
+``explain("formatted")``.
 
 Usage:
     python tools/profile_query.py [--reps N] [--explain DIR] [--sf DIR] name ...
@@ -12,7 +15,7 @@ Usage:
 
 Prints one JSON line per query:
     {"name": ..., "build_sec": [...], "exec_sec": [...], "jobs_build": n,
-     "jobs_exec": n, "total_best": s}
+     "jobs_exec": n, "total_best": s, "max_method_bytes": n}
 """
 
 from __future__ import annotations
@@ -26,6 +29,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from datafusion_test_spark import registry
 from datafusion_test_spark.io import table
+from datafusion_test_spark.plans.introspect import max_method_bytes
 from datafusion_test_spark.session import get_session
 
 
@@ -61,6 +65,8 @@ def profile(spark, name, fn, sf_dir, reps, explain_dir=None):
                 f.write(df._jdf.queryExecution().explainString(
                     spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")))
     sc.setJobGroup(None, None)
+    # after the timed reps: compiling here would warm the codegen cache
+    method_bytes = max_method_bytes(df)
     return {
         "name": name,
         "build_sec": builds,
@@ -68,6 +74,7 @@ def profile(spark, name, fn, sf_dir, reps, explain_dir=None):
         "jobs_build": jobs_b,
         "jobs_exec": jobs_e,
         "total_best": round(min(b + e for b, e in zip(builds, execs)), 3),
+        "max_method_bytes": method_bytes,
     }
 
 
