@@ -129,7 +129,7 @@ def parallel(spark: SparkSession, df: DataFrame) -> DataFrame:
     TPC-H Q1 at sf0.1 is 2.0 s single-split vs 1.45 s repartitioned).  On a
     real lake the scan already has thousands of splits and this is a no-op
     check — repartition always shuffles, so it must never run
-    unconditionally (same policy as pipeline.dedup._words_of)."""
+    unconditionally."""
     par = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < par:
         df = df.repartition(par)

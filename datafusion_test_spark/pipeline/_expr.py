@@ -143,21 +143,6 @@ def sql_cosine(a: str, b: str) -> str:
     return f"({sql_dot(a, b)} / (sqrt({sql_norm2(a)}) * sqrt({sql_norm2(b)})))"
 
 
-# SQL-text form of the shingle expression over a token-array column `w`.
-# IMPORTANT perf note: always evaluate this INLINE in the same select as its
-# consumer (explode/size).  Aliasing the shingle array in an intermediate
-# Project forces UnsafeArrayData serialization of the string array between
-# operators — measured 7x slower at sf0.1 than inline evaluation.
-def shingle_sql(w: str = "w", n: int = 3) -> str:
-    parts = ", ".join(f"element_at({w}, i+{k})" for k in range(n))
-    return (
-        f"CASE WHEN size({w}) >= {n} THEN "
-        f"array_distinct(transform(sequence(1, size({w}) - {n - 1}), "
-        f"i -> concat_ws(' ', {parts}))) "
-        f"ELSE CAST(array() AS array<string>) END"
-    )
-
-
 def shingles_of_words(w: Column, n: int = 3) -> Column:
     """Distinct word n-gram shingles from an ALREADY-MATERIALIZED token
     array column.  Callers must project the split() into a real column

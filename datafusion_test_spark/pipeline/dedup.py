@@ -42,7 +42,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..io import table
+from ..io import parallel, table
 from ._expr import (
     cosine_prenormed,
     md5_capped_sample,
@@ -94,20 +94,15 @@ def _doc_words(spark, sf_dir):
     same at 100 TB.  Downstream shingle work goes through
     _exploded_shingles (the hang-proof explode shape).
     """
-    par = spark.sparkContext.defaultParallelism
-    return _words_of(table(spark, sf_dir, "documents"), par)
+    return _words_of(spark, table(spark, sf_dir, "documents"))
 
 
-def _words_of(docs: DataFrame, par: int) -> DataFrame:
+def _words_of(spark, docs: DataFrame) -> DataFrame:
     """(doc_id, text) -> (doc_id, w), repartitioned ONLY if the scan is
-    under-parallel.  The testdata is a single small parquet file -> one
-    input split, which would serialize the CPU-heavy shingle work onto one
-    core; on a real lake the scan already has thousands of splits and the
-    round-robin shuffle would be pure waste, so it is skipped (repartition
-    always shuffles — it is never a no-op)."""
-    if docs.rdd.getNumPartitions() < par:
-        docs = docs.repartition(par)
-    return docs.select("doc_id", F.split("text", " ").alias("w"))
+    under-parallel (io.parallel).  The testdata is a single small parquet
+    file -> one input split, which would serialize the CPU-heavy shingle
+    work onto one core."""
+    return parallel(spark, docs).select("doc_id", F.split("text", " ").alias("w"))
 
 
 def _exploded_shingles(
@@ -347,7 +342,7 @@ def minhash_pairs(
     perms = [(2 * k + 1, 7919 * (k + 1)) for k in range(32)]
 
     tok = _exploded_shingles(
-        _words_of(docs, spark.sparkContext.defaultParallelism), alias="s"
+        _words_of(spark, docs), alias="s"
     ).withColumn("h", F.pmod(F.xxhash64("s"), F.lit(p)))
     # 32 permutation mins and 8 band structs as SQL strings — one py4j
     # parse per expression instead of ~6 Column calls per term (r15, same
@@ -472,7 +467,7 @@ def simhash_pairs(
     columns, not 64 rows).  Band buckets over _DF_CAP docs are dropped
     (hot-bucket guard) before the self-join.
     """
-    tok = _words_of(docs, spark.sparkContext.defaultParallelism).select(
+    tok = _words_of(spark, docs).select(
         "doc_id", F.explode("w").alias("t")
     ).withColumn("h", F.xxhash64("t"))
     # Per-bit votes as 64 set-bit counts plus the token count over the token
@@ -577,11 +572,7 @@ def dedup_embed_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the stream side of the join, and a single-split local file put ALL
     # of it on one task (plan audit: 4.5 s single-core).  On a real lake
     # the scan has thousands of splits and this is a no-op check.
-    a_src = e
-    par = spark.sparkContext.defaultParallelism
-    if a_src.rdd.getNumPartitions() < par:
-        a_src = a_src.repartition(par)
-    a, b = a_src.alias("a"), e.alias("b")
+    a, b = parallel(spark, e).alias("a"), e.alias("b")
     cos = cosine_prenormed(
         F.col("a.embedding"),
         F.col("b.embedding"),

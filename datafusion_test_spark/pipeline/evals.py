@@ -49,7 +49,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .._util import DEC, finite, half_up, sql_half_up, two_phase_prefix
-from ..io import table
+from ..io import parallel, table
 
 _POS, _NEG = "purchase", "click"
 _PRF_THRESHOLD = 50.0
@@ -565,9 +565,7 @@ def eval_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (r14 plan audit; guide §2.5 input skew).  Spread the 16-byte base
     # rows once when the scan is under-parallel (io.parallel policy: a
     # real lake's scan already has thousands of splits — no-op there).
-    par = spark.sparkContext.defaultParallelism
-    if base.rdd.getNumPartitions() < par:
-        base = base.repartition(par)
+    base = parallel(spark, base)
     # B-fold expansion as a sequence-explode (same rows as the old
     # broadcast-spine crossJoin, minus the BroadcastNestedLoopJoin
     # machinery), with the md5 draw MATERIALIZED in its own projection:

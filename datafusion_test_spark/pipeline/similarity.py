@@ -29,7 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from .._util import sql_half_up
-from ..io import table
+from ..io import parallel, table
 from ._expr import cosine, cosine_prenormed, norm2, sql_cosine
 
 _DIM = 64
@@ -399,10 +399,7 @@ def sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # once and materialize; every consumer (2 Lloyd rounds, the final
     # assignment, q, the counts) reads the same blocks (io.parallel
     # policy: skip when the scan is already parallel)
-    par = spark.sparkContext.defaultParallelism
-    if e.rdd.getNumPartitions() < par:
-        e = e.repartition(par)
-    e = e.localCheckpoint(eager=True)
+    e = parallel(spark, e).localCheckpoint(eager=True)
     cent = ivf_centroids(spark, e)
     # carry the embedding through the map-only assignment so the candidate
     # set needs no join back onto e (r14: one less exchange per consumer)
@@ -610,10 +607,7 @@ def _twin_e(spark: SparkSession, sf_dir: str) -> DataFrame:
         # spread the single-split scan before checkpointing: every PQ/IVF
         # training pass over the twin corpus is HOF-compute-heavy and
         # would otherwise run on the union's 1+1 partitions (r14)
-        par = spark.sparkContext.defaultParallelism
-        if e.rdd.getNumPartitions() < par:
-            e = e.repartition(par)
-        e = e.localCheckpoint(eager=True)
+        e = parallel(spark, e).localCheckpoint(eager=True)
         _ANN_CACHE[key] = e
     return e
 
@@ -1217,10 +1211,7 @@ def sim_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one file per bucket directory (the production distribution mode
     # for partitioned writes), instead of one serial task writing all
     # 2^bits directories
-    par = spark.sparkContext.defaultParallelism
-    if e.rdd.getNumPartitions() < par:
-        e = e.repartition(par)
-    sig = e.withColumn(
+    sig = parallel(spark, e).withColumn(
         "bucket", rh_signature(F.col("embedding"), bits=bits, dim=_DIM)
     ).repartition(int(spark.conf.get("spark.sql.shuffle.partitions")), "bucket")
     out = os.path.join(scratch_dir("dfts_lshidx_"), "lsh_index")

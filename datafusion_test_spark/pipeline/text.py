@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .._util import ascii_lower, dsum, half_up, r4, sql_dsum, sql_half_up
-from ..io import table
+from ..io import parallel, table
 from ._expr import sql_indexed_unnest
 
 # BPE-ish word/number/punctuation tokenizer (shared by Spark and oracle).
@@ -579,10 +579,8 @@ def corpus_jaccard_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ._expr import shingles_of_words
     from .dedup import _drop_hot
 
-    docs = table(spark, sf_dir, "documents").select("source", "text")
-    par = spark.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < par:  # single-split testdata (cf. _words_of)
-        docs = docs.repartition(par)
+    # single-split testdata (cf. dedup._words_of)
+    docs = parallel(spark, table(spark, sf_dir, "documents").select("source", "text"))
     w = docs.select("source", F.split("text", " ").alias("w"))
     sh = (
         w.select("source", F.explode(shingles_of_words(F.col("w"))).alias("sh"))

@@ -17,13 +17,45 @@ core count; on a real cluster the same code runs unchanged — only
 ``spark.sql.shuffle.partitions`` / executor sizing move with the data volume
 (at 100 TB: partitions sized so each shuffle partition is ~128-512 MB, i.e.
 O(200k-800k) partitions via AQE's coalescing from a high initial number).
+
+JVM start.  ``get_session`` starts the driver JVM from a JDK dynamic
+class-data-sharing (CDS) archive: the class metadata a previous driver loaded
+is mapped from a file instead of being parsed and linked again, which about
+halves the JVM's start and first actions.  The archive lives in
+``${XDG_CACHE_HOME:-~/.cache}/datafusion_test_spark/cds/`` as
+``<key>-<bytes>.jsa``; the key hashes the JDK (``JAVA_HOME`` realpath and its
+``release`` file), the pyspark version and the ``$SPARK_HOME/jars`` listing
+(names, sizes, mtimes), and archives with any other key are pruned.  With no
+valid archive the JVM is started with ``-XX:ArchiveClassesAtExit`` and writes
+one (~146 MB) to a per-process temp file as it exits; an ``atexit`` hook
+publishes it with ``os.replace`` only when the JVM exited with status 0, so a
+truncated dump is never mapped (a truncated archive crashes HotSpot with
+SIGBUS, which ``-Xshare:auto`` does not catch; the byte count in the name is
+checked for the same reason).  An archive is mapped under ``-Xshare:auto``
+with ``-XX:+VerifySharedSpaces``, so a stale or corrupt one falls back to a
+plain start.  JDK 17 neither dumps nor maps with a non-empty directory on the
+classpath, and Spark puts its conf dir there, so while the gateway launches
+``SPARK_CONF_DIR`` points at an empty directory in the cache dir -- only when
+the real conf dir holds nothing but ``*.template`` files.  That directory is
+on the classpath the archive records, so an archive is only valid in the
+cache dir it was made in.  Every fallback is
+automatic and recorded in :func:`cds_state`.  A session the driver provides,
+or a process whose gateway is already up, gets no new flag and no
+environment change.
 """
 
 from __future__ import annotations
 
+import atexit
+import hashlib
 import os
+import shutil
+import subprocess
 import weakref
 
+import pyspark
+from pyspark import SparkContext
+from pyspark.find_spark_home import _find_spark_home
 from pyspark.sql import SparkSession
 
 # Runtime-settable confs applied to ANY session (including one handed to us by
@@ -115,8 +147,192 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
+# How this process's driver JVM started: "use" (mapped the CDS archive),
+# "dump" (writes one as it exits) or "off:<reason>" (plain start).  One JVM
+# per process, so one value per process; None until get_session has run.
+_CDS_STATE: str | None = None
+
+# JVM flags on every CDS start: CDS warnings (hundreds of "skipping class"
+# lines at dump time) stay off stdout; errors still print.
+_CDS_LOG = "-Xlog:cds*=error"
+
+# How long interpreter exit waits for the JVM to write its archive (a 146 MB
+# dump takes a few seconds); a JVM still running after it keeps its temp file,
+# which a later start prunes.
+_DUMP_WAIT_S = 120
+
+
+def cds_state() -> str | None:
+    """How this process's driver JVM started: ``use``, ``dump`` or
+    ``off:<reason>`` (see the module docstring); None before get_session."""
+    return _CDS_STATE
+
+
+def _java_home() -> str:
+    """The JDK spark-submit runs: $JAVA_HOME, else the one ``java`` is in."""
+    if os.environ.get("JAVA_HOME"):
+        return os.path.realpath(os.environ["JAVA_HOME"])
+    java = shutil.which("java")
+    return os.path.dirname(os.path.dirname(os.path.realpath(java))) if java else ""
+
+
+def _cds_key(spark_home: str) -> str:
+    """Hash of everything an archive is only valid for: the JDK, the
+    pyspark version and the jars on the driver classpath."""
+    jdk = _java_home()
+    h = hashlib.sha256(f"{jdk}\0{pyspark.__version__}\0".encode())
+    try:
+        with open(os.path.join(jdk, "release"), "rb") as f:
+            h.update(f.read())
+    except OSError:
+        pass  # no release file: the realpath alone names the JDK
+    try:
+        jars = sorted(os.scandir(os.path.join(spark_home, "jars")), key=lambda e: e.name)
+    except OSError:
+        jars = []
+    for e in jars:
+        st = e.stat()
+        h.update(f"{e.name}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
+    return h.hexdigest()[:16]
+
+
+def _pid_alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass
+    return True
+
+
+def _prune(cds: str, key: str) -> str | None:
+    """The valid archive for ``key`` (its byte count matches its name), if
+    any.  Removes every other archive, and the temp files of dumps whose
+    process is gone."""
+    keep = None
+    for e in os.scandir(cds):
+        if e.name.endswith(".jsa"):
+            k, _, size = e.name[: -len(".jsa")].rpartition("-")
+            if keep is None and k == key and size.isdigit() and e.stat().st_size == int(size):
+                keep = e.path
+                continue
+        elif e.name.endswith(".part"):
+            pid = e.name[: -len(".part")].rpartition(".")[2]
+            if pid.isdigit() and _pid_alive(int(pid)):
+                continue  # a dump still being written
+        else:
+            continue  # the stand-in conf dir
+        try:
+            os.remove(e.path)
+        except OSError:
+            pass  # pruned by a concurrent start
+    return keep
+
+
+def _cds_plan() -> tuple[str, str | None, str | None, str | None]:
+    """-> (state, driver JVM flags, stand-in conf dir, archive or dump temp)
+    for a fresh gateway launch; the flags are None for a plain start."""
+    spark_home = _find_spark_home()
+    conf = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    try:
+        real = [n for n in os.listdir(conf) if not n.endswith(".template")]
+    except FileNotFoundError:
+        real = []
+    except OSError:  # unreadable: it may hold real files
+        real = [conf]
+    if real:
+        return "off:conf dir has non-template files", None, None, None
+    cache = os.environ.get("XDG_CACHE_HOME") or os.path.expanduser("~/.cache")
+    cds = os.path.join(cache, "datafusion_test_spark", "cds")
+    empty = os.path.join(cds, "empty-conf")
+    try:
+        os.makedirs(empty, exist_ok=True)
+        for n in os.listdir(empty):  # it stands in for the conf dir: keep it empty
+            os.remove(os.path.join(empty, n))
+        if not os.access(cds, os.W_OK):
+            raise PermissionError(cds)
+        key = _cds_key(spark_home)
+        archive = _prune(cds, key)
+    except OSError:
+        return "off:cache dir not writable", None, None, None
+    if archive is not None:
+        flags = f'-XX:SharedArchiveFile="{archive}" -XX:+VerifySharedSpaces'
+        return "use", f"{flags} {_CDS_LOG}", empty, archive
+    tmp = os.path.join(cds, f"{key}.{os.getpid()}.part")
+    return "dump", f'-XX:ArchiveClassesAtExit="{tmp}" {_CDS_LOG}', empty, tmp
+
+
+def _publish_at_exit(proc: subprocess.Popen, tmp: str) -> None:
+    """Let the gateway JVM exit, then move its dump ``<key>.<pid>.part`` to
+    ``<key>-<bytes>.jsa`` -- only when the JVM exited with status 0, so a
+    dump cut short is never published."""
+    if proc.poll() is None:
+        proc.stdin.close()  # the gateway exits at EOF on its stdin
+        try:
+            proc.wait(timeout=_DUMP_WAIT_S)
+        except subprocess.TimeoutExpired:
+            return  # still writing: a later start prunes the temp file
+    try:
+        if proc.returncode == 0:
+            key = tmp[: -len(".part")].rpartition(".")[0]
+            os.replace(tmp, f"{key}-{os.path.getsize(tmp)}.jsa")
+        else:
+            os.remove(tmp)
+    except OSError:
+        pass  # nothing was written: the next start dumps again
+
+
+def _archive_mapped(spark: SparkSession, archive: str) -> bool:
+    """Whether the driver JVM mapped ``archive`` (HotSpot maps a CDS archive
+    it accepted and unmaps one it rejects).  True where /proc is absent."""
+    pid = spark.sparkContext._jvm.java.lang.ProcessHandle.current().pid()
+    target = os.path.realpath(archive)
+    try:
+        with open(f"/proc/{pid}/maps") as f:
+            return any(line.rstrip("\n").endswith(target) for line in f)
+    except OSError:
+        return True
+
+
+def _launch(builder: SparkSession.Builder) -> tuple[SparkSession, str]:
+    """``builder.getOrCreate()`` for a fresh gateway, started from the CDS
+    archive when the plan allows (module docstring, "JVM start"), and the
+    CDS state of that start."""
+    state, flags, conf_dir, path = _cds_plan()
+    if flags is None:
+        return builder.getOrCreate(), state
+    # perfbench and users pass --driver-java-options (extraJavaOptions);
+    # defaultJavaOptions is prepended to those, never replaced by them
+    builder = builder.config("spark.driver.defaultJavaOptions", flags)
+    before = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = conf_dir
+    try:
+        spark = builder.getOrCreate()
+    finally:
+        if before is None:
+            del os.environ["SPARK_CONF_DIR"]
+        else:
+            os.environ["SPARK_CONF_DIR"] = before
+    if state == "dump":
+        proc = getattr(SparkContext._gateway, "proc", None)
+        if proc is not None:
+            atexit.register(_publish_at_exit, proc, path)
+    elif not _archive_mapped(spark, path):
+        state = "off:archive rejected by the JVM"
+        try:
+            os.remove(path)  # the next start dumps a fresh one
+        except OSError:
+            pass  # already pruned by a concurrent start
+    return spark, state
+
+
 def get_session(app_name: str = "datafusion_test_spark") -> SparkSession:
-    """Build (or reuse) a local SparkSession sized from SPARK_GRAFT_CPUS."""
+    """Build (or reuse) a local SparkSession sized from SPARK_GRAFT_CPUS.
+
+    A fresh gateway JVM starts from the CDS archive (module docstring);
+    :func:`cds_state` says how it started."""
+    global _CDS_STATE
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "4")
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -136,6 +352,10 @@ def get_session(app_name: str = "datafusion_test_spark") -> SparkSession:
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    if SparkContext._gateway is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        spark, _CDS_STATE = _launch(builder)
+    else:  # keep the state of a JVM this module started
+        _CDS_STATE = _CDS_STATE or "off:gateway already running"
+        spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return tune(spark)

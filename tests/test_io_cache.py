@@ -85,7 +85,8 @@ def test_cogroup_sites_take_a_fresh_side():
     for cogroup binding).  This lint fails ANY package function that
     cogroups after reading the same table twice without taking at least
     one side with fresh=True — so the safety is no longer a single
-    hand-patched site."""
+    hand-patched site.  The table name and fresh flag count whether they
+    are passed by position or by keyword."""
     import ast
     import pathlib
 
@@ -114,22 +115,17 @@ def test_cogroup_sites_take_a_fresh_side():
                         and n.func.attr == "table"
                     )
                 )
-                if (
-                    is_table_call
-                    and len(n.args) >= 3
-                    and isinstance(n.args[2], ast.Constant)
-                ):
-                    fresh = any(
-                        kw.arg == "fresh"
-                        and isinstance(kw.value, ast.Constant)
-                        and kw.value.value
-                        for kw in n.keywords
-                    ) or (
-                        len(n.args) >= 4
-                        and isinstance(n.args[3], ast.Constant)
-                        and n.args[3].value
+                if not is_table_call:
+                    continue
+                # table(spark, sf_dir, name, fresh): each argument positional
+                # or by keyword
+                kws = {kw.arg: kw.value for kw in n.keywords}
+                name = n.args[2] if len(n.args) >= 3 else kws.get("name")
+                fresh = n.args[3] if len(n.args) >= 4 else kws.get("fresh")
+                if isinstance(name, ast.Constant):
+                    reads.setdefault(name.value, []).append(
+                        isinstance(fresh, ast.Constant) and bool(fresh.value)
                     )
-                    reads.setdefault(n.args[2].value, []).append(fresh)
             for name, flags in reads.items():
                 if len(flags) >= 2 and not any(flags):
                     offenders.append(

@@ -7,7 +7,9 @@ sink write, guide §1.4), count the Spark jobs each phase launched (via a
 job group + statusTracker), report the largest whole-stage-codegen method
 (``max_method_bytes``: over 8,000 bytes HotSpot never JIT-compiles it, so
 that stage runs in the bytecode interpreter), and optionally dump
-``explain("formatted")``.
+``explain("formatted")``.  ``cds`` says how the driver JVM started
+(``session.cds_state()``: ``use``, ``dump`` or ``off:<reason>``), since a
+start without the class-data-sharing archive runs its first queries colder.
 
 Usage:
     python tools/profile_query.py [--reps N] [--explain DIR] [--sf DIR] name ...
@@ -15,7 +17,7 @@ Usage:
 
 Prints one JSON line per query:
     {"name": ..., "build_sec": [...], "exec_sec": [...], "jobs_build": n,
-     "jobs_exec": n, "total_best": s, "max_method_bytes": n}
+     "jobs_exec": n, "total_best": s, "max_method_bytes": n, "cds": state}
 """
 
 from __future__ import annotations
@@ -30,7 +32,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from datafusion_test_spark import registry
 from datafusion_test_spark.io import table
 from datafusion_test_spark.plans.introspect import max_method_bytes
-from datafusion_test_spark.session import get_session
+from datafusion_test_spark.session import cds_state, get_session
 
 
 def _jobs_in_group(sc, group: str) -> int:
@@ -120,7 +122,7 @@ def main():
     table(spark, sf_dir, "lineitem").count()
     for name in names:
         rec = profile(spark, name, qs[name], sf_dir, reps, explain_dir)
-        print(json.dumps(rec), flush=True)
+        print(json.dumps({**rec, "cds": cds_state()}), flush=True)
 
 
 if __name__ == "__main__":
