@@ -50,6 +50,7 @@ from pyspark.sql import functions as F
 
 from .._util import DEC, finite, half_up, sql_half_up, two_phase_prefix
 from ..io import parallel, table
+from .prep import _PP_MIN_MARGIN, preference_pairs
 
 _POS, _NEG = "purchase", "click"
 _PRF_THRESHOLD = 50.0
@@ -872,27 +873,27 @@ def eval_elo_bt(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LB_MIN_MARGIN = 10.0  # shared with prep._PP_MIN_MARGIN (same pair recipe)
+_LB_MIN_MARGIN = _PP_MIN_MARGIN  # the oracles' copy of the pair recipe
 
 
 def eval_length_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Preference-data length-confound audit — the check a team runs
-    right after building DPO pairs (pipeline_preference_pairs,
-    prep.py:84): is "chosen" just "longer"?  Reward models are known to
-    prefer verbose responses (the RLHF length-bias literature, e.g.
+    right after building DPO pairs (pipeline_preference_pairs): is
+    "chosen" just "longer"?  Reward models are known to prefer verbose
+    responses (the RLHF length-bias literature, e.g.
     Singhal et al. 2023 "A Long Way to Go: Investigating Length
     Correlations in RLHF"), and a pair set whose winners are
     systematically the longer response trains a verbosity policy, not a
     quality one.
 
     Pairs are built with EXACTLY the pipeline_preference_pairs recipe
-    (per prompt/user: chosen = first by value DESC, rejected = first by
-    value ASC, row_number tie-breaks, >= 2 completions, reward margin >=
-    10) so the audit covers the same data the pair builder ships.
-    Response length is the completion payload size (length(props),
-    codepoints — identical semantics both engines); pairs where either
-    payload is NULL are excluded by an explicit observed-pairs filter
-    (the r6 nulls-gate discipline).
+    (prep.preference_pairs — per prompt/user: chosen = first by value
+    DESC, rejected = first by value ASC, row_number tie-breaks, >= 2
+    completions, reward margin >= 10) so the audit covers the same data
+    the pair builder ships.  Response length is the completion payload
+    size (length(props), codepoints — identical semantics both engines);
+    pairs where either payload is NULL are excluded by an explicit
+    observed-pairs filter (the r6 nulls-gate discipline).
 
     Per |length-gap| bucket (tie / 1-9 / 10-49 / 50-199 / 200+,
     integer CASE thresholds shared verbatim with the oracle) the audit
@@ -903,39 +904,13 @@ def eval_length_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
     length-biased one drifts toward 1.0 as the gap grows.
 
     Scale (100 TB): both row_number windows partition by the prompt key
-    and plan over ONE hash exchange (the prep.py twin's shape); the pair
-    join keys on the prompt; the final aggregate is a map-side-combined
-    groupBy onto <= 5 bucket rows.  No corpus-wide state anywhere.
+    and plan over ONE hash exchange (the prep.preference_pairs shape);
+    the pair join keys on the prompt; the final aggregate is a
+    map-side-combined groupBy onto <= 5 bucket rows.  No corpus-wide
+    state anywhere.
     """
-    e = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    w_top = Window.partitionBy("user_id").orderBy(
-        F.desc("value"), F.asc("event_id")
-    )
-    w_bot = Window.partitionBy("user_id").orderBy(
-        F.asc("value"), F.asc("event_id")
-    )
-    ranked = e.select(
-        "user_id",
-        "event_id",
-        "value",
-        F.length("props").alias("len"),
-        F.row_number().over(w_top).alias("r_top"),
-        F.row_number().over(w_bot).alias("r_bot"),
-        F.count(F.lit(1)).over(Window.partitionBy("user_id")).alias("n"),
-    )
-    chosen = ranked.filter((F.col("r_top") == 1) & (F.col("n") >= 2)).select(
-        "user_id",
-        F.col("value").alias("cv"),
-        F.col("len").alias("len_chosen"),
-    )
-    rejected = ranked.filter(F.col("r_bot") == 1).select(
-        "user_id",
-        F.col("value").alias("rv"),
-        F.col("len").alias("len_rejected"),
-    )
     pairs = (
-        chosen.join(rejected, "user_id")
-        .filter((F.col("cv") - F.col("rv")) >= _LB_MIN_MARGIN)
+        preference_pairs(spark, sf_dir, len=F.length("props"))
         # observed-pairs filter: a NULL payload has no length to audit
         .filter(
             F.col("len_chosen").isNotNull()
@@ -986,8 +961,8 @@ def eval_position_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
     order, not quality.
 
     Pairs are built with EXACTLY the pipeline_preference_pairs recipe
-    (prep.py:84 — per prompt/user: chosen = first by value DESC,
-    rejected = first by value ASC, row_number tie-breaks, ≥ 2
+    (prep.preference_pairs — per prompt/user: chosen = first by value
+    DESC, rejected = first by value ASC, row_number tie-breaks, ≥ 2
     completions, reward margin ≥ 10).  Position is the completion's
     presentation rank inside its prompt group — row_number over
     (user_id ORDER BY event_id), the generation/display order both
@@ -1008,43 +983,12 @@ def eval_position_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
     sits near 0.5 in every margin bucket.
 
     Scale (100 TB): all three row_number windows partition by the prompt
-    key and plan over ONE hash exchange (the prep.py twin's shape); the
-    pair join keys on the prompt; the final aggregate is a
+    key and plan over ONE hash exchange (the prep.preference_pairs
+    shape); the pair join keys on the prompt; the final aggregate is a
     map-side-combined groupBy onto ≤ 4 bucket rows.  No corpus-wide
     state anywhere.
     """
-    e = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    w_top = Window.partitionBy("user_id").orderBy(
-        F.desc("value"), F.asc("event_id")
-    )
-    w_bot = Window.partitionBy("user_id").orderBy(
-        F.asc("value"), F.asc("event_id")
-    )
-    w_pos = Window.partitionBy("user_id").orderBy(F.asc("event_id"))
-    ranked = e.select(
-        "user_id",
-        "event_id",
-        "value",
-        F.row_number().over(w_top).alias("r_top"),
-        F.row_number().over(w_bot).alias("r_bot"),
-        F.row_number().over(w_pos).alias("pos"),
-        F.count(F.lit(1)).over(Window.partitionBy("user_id")).alias("n"),
-    )
-    chosen = ranked.filter((F.col("r_top") == 1) & (F.col("n") >= 2)).select(
-        "user_id",
-        F.col("value").alias("cv"),
-        F.col("pos").alias("pos_chosen"),
-    )
-    rejected = ranked.filter(F.col("r_bot") == 1).select(
-        "user_id",
-        F.col("value").alias("rv"),
-        F.col("pos").alias("pos_rejected"),
-    )
-    pairs = (
-        chosen.join(rejected, "user_id")
-        .withColumn("margin", F.col("cv") - F.col("rv"))
-        .filter(F.col("margin") >= _LB_MIN_MARGIN)
-    )
+    pairs = preference_pairs(spark, sf_dir, position=True)
     bucket = (
         F.when(F.col("margin") < 200, "m_10_199")
         .when(F.col("margin") < 240, "m_200_239")
@@ -1081,8 +1025,8 @@ def eval_format_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
     the RLHF format-bias analyses document).
 
     Pairs are built with EXACTLY the pipeline_preference_pairs recipe
-    (prep.py:84).  The format score of a completion payload is the
-    count of three structural markers, each a deterministic expression
+    (prep.preference_pairs).  The format score of a completion payload
+    is the count of three structural markers, each a deterministic expression
     both engines state identically:
       * opens structured — first character is '{' or '[' (JSON/list
         notation);
@@ -1107,41 +1051,14 @@ def eval_format_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange; the final aggregate is a map-side-combined groupBy onto
     ≤ 4 bucket rows.  No corpus-wide state anywhere.
     """
-    e = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     score = (
         F.when(F.substring("props", 1, 1).isin("{", "["), 1).otherwise(0)
         + F.when(F.instr("props", '":') > 0, 1).otherwise(0)
         + F.when(F.col("props").rlike("[0-9][0-9]"), 1).otherwise(0)
     )
     fmt = F.when(F.col("props").isNotNull(), score)  # NULL payload → NULL
-    w_top = Window.partitionBy("user_id").orderBy(
-        F.desc("value"), F.asc("event_id")
-    )
-    w_bot = Window.partitionBy("user_id").orderBy(
-        F.asc("value"), F.asc("event_id")
-    )
-    ranked = e.select(
-        "user_id",
-        "event_id",
-        "value",
-        fmt.alias("fmt"),
-        F.row_number().over(w_top).alias("r_top"),
-        F.row_number().over(w_bot).alias("r_bot"),
-        F.count(F.lit(1)).over(Window.partitionBy("user_id")).alias("n"),
-    )
-    chosen = ranked.filter((F.col("r_top") == 1) & (F.col("n") >= 2)).select(
-        "user_id",
-        F.col("value").alias("cv"),
-        F.col("fmt").alias("fmt_chosen"),
-    )
-    rejected = ranked.filter(F.col("r_bot") == 1).select(
-        "user_id",
-        F.col("value").alias("rv"),
-        F.col("fmt").alias("fmt_rejected"),
-    )
     pairs = (
-        chosen.join(rejected, "user_id")
-        .filter((F.col("cv") - F.col("rv")) >= _LB_MIN_MARGIN)
+        preference_pairs(spark, sf_dir, fmt=fmt)
         # observed-pairs filter: a NULL payload has no format to audit
         .filter(
             F.col("fmt_chosen").isNotNull()
@@ -1191,9 +1108,9 @@ def eval_confound_consensus(spark: SparkSession, sf_dir: str) -> DataFrame:
     that happens to correlate.  (VERDICT r12 item 3 / ROUND12.md queue.)
 
     Pairs are built ONCE with EXACTLY the pipeline_preference_pairs
-    recipe (prep.py:84 — per prompt/user: chosen = first by value DESC,
-    rejected = first by value ASC, row_number tie-breaks, ≥ 2
-    completions, reward margin ≥ 10) and ALL THREE per-pair signals are
+    recipe (prep.preference_pairs — per prompt/user: chosen = first by
+    value DESC, rejected = first by value ASC, row_number tie-breaks,
+    ≥ 2 completions, reward margin ≥ 10) and ALL THREE per-pair signals are
     computed from the same scan — the composite audits the same base
     the three single-axis audits audit (reconciliation pinned in
     tests/test_operators.py):
@@ -1252,47 +1169,14 @@ def _confound_pair_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     cohort and top-k's it.  Semantics are verbatim the r13 consensus body
     (that docstring carries the contract); only the final projection
     moved into the callers."""
-    e = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
     score = (
         F.when(F.substring("props", 1, 1).isin("{", "["), 1).otherwise(0)
         + F.when(F.instr("props", '":') > 0, 1).otherwise(0)
         + F.when(F.col("props").rlike("[0-9][0-9]"), 1).otherwise(0)
     )
     fmt = F.when(F.col("props").isNotNull(), score)  # NULL payload → NULL
-    w_top = Window.partitionBy("user_id").orderBy(
-        F.desc("value"), F.asc("event_id")
-    )
-    w_bot = Window.partitionBy("user_id").orderBy(
-        F.asc("value"), F.asc("event_id")
-    )
-    w_pos = Window.partitionBy("user_id").orderBy(F.asc("event_id"))
-    ranked = e.select(
-        "user_id",
-        "event_id",
-        "value",
-        F.length("props").alias("len"),
-        fmt.alias("fmt"),
-        F.row_number().over(w_top).alias("r_top"),
-        F.row_number().over(w_bot).alias("r_bot"),
-        F.row_number().over(w_pos).alias("pos"),
-        F.count(F.lit(1)).over(Window.partitionBy("user_id")).alias("n"),
-    )
-    chosen = ranked.filter((F.col("r_top") == 1) & (F.col("n") >= 2)).select(
-        "user_id",
-        F.col("value").alias("cv"),
-        F.col("len").alias("len_c"),
-        F.col("fmt").alias("fmt_c"),
-        F.col("pos").alias("pos_c"),
-    )
-    rejected = ranked.filter(F.col("r_bot") == 1).select(
-        "user_id",
-        F.col("value").alias("rv"),
-        F.col("len").alias("len_r"),
-        F.col("fmt").alias("fmt_r"),
-        F.col("pos").alias("pos_r"),
-    )
-    pairs = chosen.join(rejected, "user_id").filter(
-        (F.col("cv") - F.col("rv")) >= _LB_MIN_MARGIN
+    pairs = preference_pairs(
+        spark, sf_dir, position=True, len=F.length("props"), fmt=fmt
     )
 
     def flag(c, r):
@@ -1305,14 +1189,16 @@ def _confound_pair_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return pairs.select(
         "user_id",
-        flag("len_c", "len_r").alias("lf"),
-        F.when(F.col("pos_c") < F.col("pos_r"), "W").otherwise("L").alias("pf"),
-        flag("fmt_c", "fmt_r").alias("ff"),
-        (F.col("len_c") - F.col("len_r")).alias("len_delta"),
-        "pos_c",
-        "pos_r",
-        (F.col("fmt_c") - F.col("fmt_r")).alias("fmt_delta"),
-        (F.col("cv") - F.col("rv")).alias("margin"),
+        flag("len_chosen", "len_rejected").alias("lf"),
+        F.when(F.col("pos_chosen") < F.col("pos_rejected"), "W")
+        .otherwise("L")
+        .alias("pf"),
+        flag("fmt_chosen", "fmt_rejected").alias("ff"),
+        (F.col("len_chosen") - F.col("len_rejected")).alias("len_delta"),
+        F.col("pos_chosen").alias("pos_c"),
+        F.col("pos_rejected").alias("pos_r"),
+        (F.col("fmt_chosen") - F.col("fmt_rejected")).alias("fmt_delta"),
+        "margin",
     )
 
 

@@ -82,56 +82,72 @@ def pipeline_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PP_MIN_MARGIN = 10.0  # drop ambiguous pairs (reward gap below this)
 
 
+def preference_pairs(spark: SparkSession, sf_dir: str, position: bool = False,
+                     **carry) -> DataFrame:
+    """The DPO pair recipe every preference entry shares.  A user is a
+    prompt, their scored events are the completions, `value` is the
+    reward.  Per prompt with ≥ 2 completions, chosen = first by (value
+    DESC, event_id) and rejected = first by (value ASC, event_id) —
+    row_number tie-breaks make both picks total-order deterministic in
+    either engine — and a pair is kept when its margin (chosen −
+    rejected, one IEEE subtract of parquet-carried doubles, so it hashes
+    bit-equal) is ≥ _PP_MIN_MARGIN.
+
+    Each keyword names a per-completion Column (over `events`) to carry;
+    ``position`` carries ``pos``, the completion's presentation rank in
+    its prompt (row_number over event_id).  Returns user_id, margin and,
+    for event_id, value and every carried name, one column per side:
+    ``<name>_chosen`` and ``<name>_rejected``.
+
+    Scale (100 TB): every window partitions by the prompt key and Spark
+    plans them over ONE hash exchange (same partitioning); the pair join
+    keys on the prompt — everything is bounded by one prompt's
+    completion count, and no corpus-wide state exists."""
+    e = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
+    prompt = Window.partitionBy("user_id")
+    pos = F.row_number().over(prompt.orderBy(F.asc("event_id"))).alias("pos")
+    ranked = e.select(
+        "user_id",
+        "event_id",
+        "value",
+        *(c.alias(name) for name, c in carry.items()),
+        F.row_number()
+        .over(prompt.orderBy(F.desc("value"), F.asc("event_id")))
+        .alias("r_top"),
+        F.row_number()
+        .over(prompt.orderBy(F.asc("value"), F.asc("event_id")))
+        .alias("r_bot"),
+        *([pos] if position else []),
+        F.count(F.lit(1)).over(prompt).alias("n"),
+    )
+    cols = ["event_id", "value", *carry, *(["pos"] if position else [])]
+
+    def side(keep, suffix):
+        return ranked.filter(keep).select(
+            "user_id", *(F.col(c).alias(c + suffix) for c in cols)
+        )
+
+    return (
+        side((F.col("r_top") == 1) & (F.col("n") >= 2), "_chosen")
+        .join(side(F.col("r_bot") == 1, "_rejected"), "user_id")
+        .withColumn("margin", F.col("value_chosen") - F.col("value_rejected"))
+        .filter(F.col("margin") >= _PP_MIN_MARGIN)
+    )
+
+
 def pipeline_preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Preference-pair construction for DPO/RLHF training — per prompt,
     pick the highest- and lowest-reward completions as (chosen, rejected)
     and keep only pairs whose reward margin clears a threshold (ambiguous
     pairs teach nothing and ties are label noise — the standard pairing
-    recipe over scored generations).
-
-    Modeled on events: a user is a prompt, their scored events are the
-    completions, `value` is the reward.  chosen = first by (value DESC,
-    event_id) and rejected = first by (value ASC, event_id) — row_number
-    tie-breaks make both picks total-order deterministic in either
-    engine.  Requires ≥ 2 completions; margin = chosen − rejected is one
-    IEEE subtract of parquet-carried doubles, so it hashes bit-equal.
-
-    Scale (100 TB): both row_number windows partition by the prompt key
-    and Spark plans them over ONE hash exchange (same partitioning); the
-    pair join keys on the prompt — everything is bounded by one prompt's
-    completion count, and no corpus-wide state exists.
-    """
-    e = table(spark, sf_dir, "events").filter(F.col("value").isNotNull())
-    w_top = Window.partitionBy("user_id").orderBy(
-        F.desc("value"), F.asc("event_id")
-    )
-    w_bot = Window.partitionBy("user_id").orderBy(
-        F.asc("value"), F.asc("event_id")
-    )
-    ranked = e.select(
+    recipe over scored generations, :func:`preference_pairs`)."""
+    return preference_pairs(spark, sf_dir).select(
         "user_id",
-        "event_id",
-        "value",
-        F.row_number().over(w_top).alias("r_top"),
-        F.row_number().over(w_bot).alias("r_bot"),
-        F.count(F.lit(1)).over(Window.partitionBy("user_id")).alias("n"),
-    )
-    chosen = ranked.filter((F.col("r_top") == 1) & (F.col("n") >= 2)).select(
-        "user_id",
-        F.col("event_id").alias("chosen_event_id"),
-        F.col("value").alias("chosen_score"),
-    )
-    rejected = ranked.filter(F.col("r_bot") == 1).select(
-        "user_id",
-        F.col("event_id").alias("rejected_event_id"),
-        F.col("value").alias("rejected_score"),
-    )
-    return (
-        chosen.join(rejected, "user_id")
-        .withColumn(
-            "margin", F.col("chosen_score") - F.col("rejected_score")
-        )
-        .filter(F.col("margin") >= _PP_MIN_MARGIN)
+        F.col("event_id_chosen").alias("chosen_event_id"),
+        F.col("value_chosen").alias("chosen_score"),
+        F.col("event_id_rejected").alias("rejected_event_id"),
+        F.col("value_rejected").alias("rejected_score"),
+        "margin",
     )
 
 

@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+from functools import cached_property
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -673,66 +674,85 @@ def scan_manifest_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _bloom_probe_file(spark: SparkSession, path: str, column: str,
-                      hits: list[str], misses: list[str]):
-    """Probe a parquet file's bloom filters via parquet-mr — the SAME
-    reader-side library Spark's scan uses for bloom row-group filtering
-    (org.apache.parquet.hadoop.ParquetFileReader), reached through the
-    session's JVM gateway.  Driver-side O(n_rowgroups) metadata work, the
-    scan_manifest_prune footer-read shape.
-
-    Returns (rg_total, rg_with_bloom, miss_cells, miss_excluded,
-    hit_flags) where a "cell" is one (probe value, bloomed row group)
-    pair: miss_excluded counts cells the bloom EXCLUDES (the row-group
-    skip a reader performs on a miss), and hit_flags is one bool PER HIT
-    KEY — True iff THIS file maybe-contains the key (some row-group
-    bloom finds it, or the file carries no bloom and so cannot exclude).
-    A present key lives in exactly ONE file of a multi-file layout, so
-    the no-false-negative contract is per-key ∨ ACROSS files — the
-    caller ORs flags file-by-file (ADVICE r10: counting found-per-file
-    made hit_ok false for any file count > 1, because the other files'
-    blooms correctly exclude a key they don't hold)."""
+def _footers(spark: SparkSession, out_dir: str, column: str):
+    """Walk the parquet files of a layout directory, in name order,
+    through parquet-mr's own footer reader
+    (org.apache.parquet.hadoop.ParquetFileReader — the library Spark's
+    scan reads them with), reached through the session's JVM gateway.
+    Yields ``(file_no, reader, groups)`` per file, where ``groups`` holds
+    one ``(block, chunk)`` per row group and ``chunk`` is the column
+    chunk of ``column`` (None if the row group lacks it).  The reader is
+    open while the caller handles that file and closed after.
+    Driver-side O(n_files + n_rowgroups) metadata work, the
+    scan_manifest_prune footer-read shape.  This is the package's only
+    footer reader (tests/test_plans.py lints that): the bloom and
+    page-index probes share it."""
     jvm = spark._jvm
     conf = spark._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    infile = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        hpath, conf
-    )
-    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(infile)
+    names = sorted(f for f in os.listdir(out_dir) if f.endswith(".parquet"))
+    for file_no, name in enumerate(names):
+        infile = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            jvm.org.apache.hadoop.fs.Path(os.path.join(out_dir, name)), conf
+        )
+        reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(infile)
+        try:
+            groups = []
+            blocks = reader.getRowGroups()
+            for i in range(blocks.size()):
+                block, chunk = blocks.get(i), None
+                cols = block.getColumns()
+                for j in range(cols.size()):
+                    cc = cols.get(j)
+                    if cc.getPath().toDotString() == column:
+                        chunk = cc
+                        break
+                groups.append((block, chunk))
+            yield file_no, reader, groups
+        finally:
+            reader.close()
+
+
+def _bloom_probe(spark: SparkSession, out_dir: str, column: str,
+                 hits: list[str], misses: list[str]):
+    """Probe the bloom filters of a layout's ``column`` chunks via
+    parquet-mr's BloomFilter reader (the one Spark's scan consults for
+    bloom row-group filtering), over the :func:`_footers` walk.
+
+    Returns (rg_total, rg_with_bloom, miss_cells, miss_excluded,
+    file_hits) where a "cell" is one (probe value, bloomed row group)
+    pair: miss_excluded counts cells the bloom EXCLUDES (the row-group
+    skip a reader performs on a miss), and file_hits holds, per file,
+    one bool PER HIT KEY — True iff THAT file maybe-contains the key
+    (some row-group bloom finds it, or the file carries no bloom and so
+    cannot exclude).  A present key lives in exactly ONE file of a
+    multi-file layout, so the no-false-negative contract is per-key ∨
+    ACROSS files — the caller ORs the files (ADVICE r10: counting
+    found-per-file made hit_ok false for any file count > 1, because the
+    other files' blooms correctly exclude a key they don't hold)."""
+    binary = spark._jvm.org.apache.parquet.io.api.Binary
     rg_total = rg_bloom = miss_cells = miss_excluded = 0
-    hit_flags: list[bool] = []
-    try:
-        blocks = reader.getRowGroups()
+    file_hits: list[list[bool]] = []
+    for _, reader, groups in _footers(spark, out_dir, column):
         blooms = []
-        for i in range(blocks.size()):
-            block = blocks.get(i)
+        for block, chunk in groups:
             rg_total += 1
-            cols = block.getColumns()
-            for j in range(cols.size()):
-                cc = cols.get(j)
-                if cc.getPath().toDotString() == column:
-                    bf = reader.getBloomFilterDataReader(block).readBloomFilter(cc)
-                    if bf is not None:
-                        rg_bloom += 1
-                        blooms.append(bf)
-                    break
-        Binary = jvm.org.apache.parquet.io.api.Binary
+            if chunk is None:
+                continue
+            bf = reader.getBloomFilterDataReader(block).readBloomFilter(chunk)
+            if bf is not None:
+                blooms.append(bf)
+        rg_bloom += len(blooms)
         for v in misses:
             for bf in blooms:
                 miss_cells += 1
-                if not bf.findHash(bf.hash(Binary.fromString(v))):
+                if not bf.findHash(bf.hash(binary.fromString(v))):
                     miss_excluded += 1
-        for v in hits:
-            hit_flags.append(
-                not blooms
-                or any(
-                    bf.findHash(bf.hash(Binary.fromString(v)))
-                    for bf in blooms
-                )
-            )
-    finally:
-        reader.close()
-    return rg_total, rg_bloom, miss_cells, miss_excluded, hit_flags
+        file_hits.append([
+            not blooms
+            or any(bf.findHash(bf.hash(binary.fromString(v))) for bf in blooms)
+            for v in hits
+        ])
+    return rg_total, rg_bloom, miss_cells, miss_excluded, file_hits
 
 
 def scan_parquet_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -806,22 +826,13 @@ def scan_parquet_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     hit_keys = [] if row["lo"] is None else [f"k{row['lo']}", f"k{row['hi']}"]
     miss_keys = [f"miss{i}" for i in range(16)]  # 'k<digits>' never matches
-    rg_total = rg_bloom = cells = excluded = 0
-    hit_found = [False] * len(hit_keys)
-    for f in sorted(os.listdir(out)):
-        if not f.endswith(".parquet"):
-            continue
-        t, b, c, e, flags = _bloom_probe_file(
-            spark, os.path.join(out, f), "key", hit_keys, miss_keys
-        )
-        rg_total += t
-        rg_bloom += b
-        cells += c
-        excluded += e
-        hit_found = [got or new for got, new in zip(hit_found, flags)]
+    rg_total, rg_bloom, cells, excluded, file_hits = _bloom_probe(
+        spark, out, "key", hit_keys, miss_keys
+    )
     bloom_written = rg_bloom == rg_total
     miss_ok = cells == 0 or excluded * 10 >= cells * 9
-    hit_ok = all(hit_found)  # vacuous on an empty corpus (no hit keys)
+    # per-key OR across files; vacuous on an empty corpus (no hit keys)
+    hit_ok = all(any(f[k] for f in file_hits) for k in range(len(hit_keys)))
     # the point lookup: schema-stated read (empty corpus writes a bare
     # _SUCCESS dir), literal Eq predicate → PushedFilters on `key`
     rt = spark.read.schema("key string, o_orderkey bigint, o_totalprice double").parquet(out)
@@ -843,87 +854,178 @@ def scan_parquet_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PAGE_ROW_LIMIT = 1000
 
 
-def _pageindex_probe_file(spark: SparkSession, path: str, column: str,
-                          point: int | None, below: int | None):
-    """Probe a parquet file's page-level ColumnIndex/OffsetIndex via
-    parquet-mr — the reader-side structures Spark's vectorized scan
-    consults for page skipping when a filter is pushed
-    (spark.sql.parquet.filterPushdown + parquet.filter.columnindex).
-    Driver-side O(n_pages) metadata work, the scan_manifest_prune /
-    _bloom_probe_file footer-read shape.
+class _ChunkIndex:
+    """One row group's page index for the column :func:`_page_index`
+    walked.  ``file_no``, ``rows`` and ``order`` (the boundary order;
+    None when the chunk has no ColumnIndex/OffsetIndex, and then
+    ``pages`` is 0) are read with the record; the per-page lists decode
+    on first use, so an entry pays gateway round trips only for the
+    fields it reads."""
 
-    Returns (rg_total, rg_indexed, pages_total, granular_bad, unordered,
-    point_pages, below_pages): rg_indexed counts row groups whose target
-    chunk carries BOTH a ColumnIndex and an OffsetIndex; granular_bad
-    counts chunks with fewer pages than ceil(rows / _PAGE_ROW_LIMIT)
-    (the writer's page-row cap makes that floor exact); unordered counts
-    chunks whose boundary order is UNORDERED (the sorted layout must
-    yield ASCENDING); point_pages / below_pages count non-null pages
-    whose [min,max] CONTAINS the probe value — the exact page set a
-    page-index reader scans (INT64 min/max are exact, never truncated,
-    so containment is the reader's real decision).
+    def __init__(self, file_no: int, rows: int, ci, oi, decode):
+        self.file_no, self.rows = file_no, rows
+        self._ci, self._oi, self._decode = ci, oi, decode
+        indexed = ci is not None and oi is not None
+        self.order = str(ci.getBoundaryOrder()) if indexed else None
+        self.pages = oi.getPageCount() if indexed else 0
 
-    INT64-only by contract (ADVICE r11): the decode is a little-endian
-    getLong, which would silently misread any other primitive type, so
-    the target chunk's type is asserted before decoding.  The
-    variable-length BINARY tier (truncated bounds, one-sided
-    containment) is :func:`_pageindex_probe_file_str`."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    infile = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        hpath, conf
-    )
-    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(infile)
-    rg_total = rg_indexed = pages_total = granular_bad = unordered = 0
-    point_pages = below_pages = 0
-    little = jvm.java.nio.ByteOrder.LITTLE_ENDIAN
-    try:
-        blocks = reader.getRowGroups()
-        for i in range(blocks.size()):
-            block = blocks.get(i)
-            rg_total += 1
-            cols = block.getColumns()
-            for j in range(cols.size()):
-                cc = cols.get(j)
-                if cc.getPath().toDotString() != column:
-                    continue
-                ptype = str(cc.getPrimitiveType().getPrimitiveTypeName())
-                if ptype != "INT64":
+    @cached_property
+    def null_pages(self) -> list[bool]:
+        """Per page: every value is NULL (such a page stores no bounds)."""
+        if not self.pages:
+            return []
+        flags = self._ci.getNullPages()
+        return [flags.get(p) for p in range(self.pages)]
+
+    @cached_property
+    def null_counts(self) -> list[int] | None:
+        """Per-page null counts; None when the chunk stores none."""
+        counts = None if self.order is None else self._ci.getNullCounts()
+        return None if counts is None else [
+            counts.get(p) for p in range(self.pages)
+        ]
+
+    @cached_property
+    def page_rows(self) -> list[int]:
+        """Per-page row counts from the OffsetIndex's first-row indexes,
+        the last page closed by the row-group row count."""
+        first = [self._oi.getFirstRowIndex(p) for p in range(self.pages)]
+        return [b - a for a, b in zip(first, first[1:] + [self.rows])]
+
+    @cached_property
+    def bounds(self) -> list[tuple | None]:
+        """Per page the decoded stored (lo, hi); None on an all-null page."""
+        if not self.pages:
+            return []
+        mins, maxs = self._ci.getMinValues(), self._ci.getMaxValues()
+        decode = self._decode
+        return [
+            None if null else (decode(mins.get(p)), decode(maxs.get(p)))
+            for p, null in enumerate(self.null_pages)
+        ]
+
+
+def _page_index(spark: SparkSession, out_dir: str, column: str,
+                ptype: str) -> list[_ChunkIndex]:
+    """Read the page-level ColumnIndex/OffsetIndex of ``column`` in every
+    row group of a parquet layout — the structures Spark's vectorized
+    reader consults for page skipping when a filter is pushed
+    (spark.sql.parquet.filterPushdown + parquet.filter.columnindex) —
+    through parquet-mr's own readers over the :func:`_footers` walk.
+    Returns one :class:`_ChunkIndex` per row group, files in name order.
+    Driver-side O(n_pages) metadata work.
+
+    Decoding contracts, stated once for every page-index entry:
+      * type assertion (ADVICE r11) — ``ptype`` names the decode kind
+        (INT64 or BINARY); a chunk of any other physical type raises
+        ValueError instead of being silently misread;
+      * INT64 bounds are the stored 8-byte little-endian longs, decoded
+        exactly: parquet-mr never truncates fixed-width bounds, so
+        [lo, hi] containment is the reader's real decision, with no
+        false negatives and no false positives;
+      * BINARY bounds are the stored, TRUNCATED bytes
+        (BinaryTruncator, parquet.columnindex.truncate.length): min is
+        cut to a prefix (rounds DOWN) and max is cut with its last kept
+        byte incremented (rounds UP), so the stored range only ENCLOSES
+        the true page range and containment is ONE-SIDED — false
+        positives are legal, false negatives are not.  Python ``bytes``
+        order is parquet's unsigned lexicographic UTF8 order;
+      * overlong-max caveat (ADVICE r12) — BinaryTruncator keeps the
+        ORIGINAL untruncated max when the kept prefix is all 0xFF bytes
+        (the increment would overflow), so "every stored bound fits the
+        truncation length" holds only for keys whose bytes are
+        incrementable (scan_parquet_pageindex_string derives ASCII keys);
+        arbitrary binary data may legally carry overlong max bounds;
+      * an all-null page stores no bounds (``bounds[p]`` is None), so no
+        value predicate admits it;
+      * the null-count list is optional in the format: ``null_counts``
+        is None when the chunk stores none, and a caller must treat that
+        as unknown (admit every page for IS NULL, count the chunk as a
+        flag/count defect) rather than as zero nulls;
+      * ``file_no`` keeps the file a row group came from: a NULLS-FIRST
+        sorted layout puts its null-bearing pages in a prefix of EACH
+        file, not of the whole layout."""
+    binary = spark._jvm.org.apache.parquet.io.api.Binary
+
+    def raw(buf) -> bytes:
+        return bytes(binary.fromReusedByteBuffer(buf).getBytes())
+
+    def int64(buf) -> int:
+        return int.from_bytes(raw(buf), "little", signed=True)
+
+    decode = {"INT64": int64, "BINARY": raw}[ptype]
+    records = []
+    for file_no, reader, groups in _footers(spark, out_dir, column):
+        for block, chunk in groups:
+            ci = oi = None
+            if chunk is not None:
+                found = str(chunk.getPrimitiveType().getPrimitiveTypeName())
+                if found != ptype:
                     raise ValueError(
-                        f"_pageindex_probe_file decodes INT64 bounds only; "
-                        f"column {column!r} is {ptype} (use the BINARY "
-                        f"variant _pageindex_probe_file_str)"
+                        f"_page_index decodes {ptype} bounds only; "
+                        f"column {column!r} is {found}"
                     )
-                ci = reader.readColumnIndex(cc)
-                oi = reader.readOffsetIndex(cc)
-                if ci is None or oi is None:
-                    break
-                rg_indexed += 1
-                n_pages = oi.getPageCount()
-                pages_total += n_pages
-                rows = block.getRowCount()
-                if n_pages * _PAGE_ROW_LIMIT < rows:
-                    granular_bad += 1
-                if str(ci.getBoundaryOrder()) == "UNORDERED":
-                    unordered += 1
-                mins, maxs, nullp = (
-                    ci.getMinValues(), ci.getMaxValues(), ci.getNullPages()
-                )
-                for p in range(n_pages):
-                    if nullp[p]:
-                        continue
-                    lo = mins.get(p).duplicate().order(little).getLong(0)
-                    hi = maxs.get(p).duplicate().order(little).getLong(0)
-                    if point is not None and lo <= point <= hi:
-                        point_pages += 1
-                    if below is not None and lo <= below <= hi:
-                        below_pages += 1
-                break
-    finally:
-        reader.close()
-    return (rg_total, rg_indexed, pages_total, granular_bad, unordered,
-            point_pages, below_pages)
+                ci = reader.readColumnIndex(chunk)
+                oi = reader.readOffsetIndex(chunk)
+            records.append(
+                _ChunkIndex(file_no, block.getRowCount(), ci, oi, decode)
+            )
+    return records
+
+
+def _index_checks(records: list[_ChunkIndex]) -> tuple[bool, bool, bool]:
+    """(index_written, page_granular, ordered_ok) of a walked layout:
+    every row group's chunk carries both a ColumnIndex and an
+    OffsetIndex; every indexed chunk has at least ceil(rows /
+    _PAGE_ROW_LIMIT) pages (the writer's page-row cap makes that floor
+    exact); no indexed chunk's boundary order is UNORDERED."""
+    indexed = [r for r in records if r.order is not None]
+    return (
+        len(indexed) == len(records),
+        all(r.pages * _PAGE_ROW_LIMIT >= r.rows for r in indexed),
+        all(r.order != "UNORDERED" for r in indexed),
+    )
+
+
+def _admitting(records: list[_ChunkIndex], lo, hi=None) -> list:
+    """(record, page) of every page whose stored bounds meet [lo, hi] —
+    the pages a page-index reader scans for that predicate (``hi``
+    defaults to ``lo``: a point probe).  Empty when ``lo`` is None."""
+    if lo is None:
+        return []
+    hi = lo if hi is None else hi
+    return [
+        (r, p)
+        for r in records
+        for p, b in enumerate(r.bounds)
+        if b is not None and b[0] <= hi and lo <= b[1]
+    ]
+
+
+def _null_rows(records: list[_ChunkIndex]) -> int:
+    """Rows of the pages an IS NULL reader admits: pages whose null count
+    is nonzero, every page of a chunk that stores no null counts (the
+    conservative reading keeps a <= budget honest, not vacuously tight)."""
+    return sum(
+        rows
+        for r in records
+        for rows, n in zip(r.page_rows, r.null_counts or [1] * r.pages)
+        if n > 0
+    )
+
+
+def _point_prune_ok(point_pages: int, pages_total: int, m_min: int,
+                    nn: int) -> bool:
+    """The min key is admitted by ≥ 1 and at most HALF of the pages (the
+    actual page skip).  Vacuous at ≤ 1 page, and when the probed min-key
+    multiplicity shows the minimum owning ≥ half the rows: admitting
+    more than half the pages is then the CORRECT reader decision
+    (ADVICE r11: the unique-ish-key precondition is probed, not
+    assumed)."""
+    return pages_total <= 1 or (
+        point_pages >= 1
+        and (point_pages * 2 <= pages_total or 2 * m_min >= nn)
+    )
 
 
 def scan_parquet_pageindex(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -998,32 +1100,12 @@ def scan_parquet_pageindex(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1-row aggregate) and fold it into the vacuity condition instead of
     # leaving the unique-ish-key precondition implicit.
     m_min = 0 if lo is None else o.filter(F.col("o_orderkey") == lo).count()
-    rg_total = rg_indexed = pages_total = granular_bad = unordered = 0
-    point_pages = below_pages = 0
-    for f in sorted(os.listdir(out)):
-        if not f.endswith(".parquet"):
-            continue
-        t, idx, pg, gb, uo, pp, bp = _pageindex_probe_file(
-            spark, os.path.join(out, f), "o_orderkey", lo, below
-        )
-        rg_total += t
-        rg_indexed += idx
-        pages_total += pg
-        granular_bad += gb
-        unordered += uo
-        point_pages += pp
-        below_pages += bp
-    index_written = rg_indexed == rg_total
-    page_granular = granular_bad == 0
-    ordered_ok = unordered == 0
-    point_prune_ok = (
-        pages_total <= 1
-        or (point_pages >= 1 and point_pages * 2 <= pages_total)
-        # vacuity: the min key owns ≥ half the rows, so admitting more
-        # than half the pages is the CORRECT reader decision (ADVICE r11)
-        or (point_pages >= 1 and 2 * m_min >= nn)
+    pi = _page_index(spark, out, "o_orderkey", "INT64")
+    index_written, page_granular, ordered_ok = _index_checks(pi)
+    point_prune_ok = _point_prune_ok(
+        len(_admitting(pi, lo)), sum(r.pages for r in pi), m_min, nn
     )
-    below_min_excluded = below_pages == 0
+    below_min_excluded = not _admitting(pi, below)
     # the point lookup: schema-stated read (empty corpus writes a bare
     # _SUCCESS dir), literal Eq predicate → PushedFilters on o_orderkey
     rt = spark.read.schema("o_orderkey bigint, o_totalprice double").parquet(out)
@@ -1047,107 +1129,6 @@ def scan_parquet_pageindex(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PAGE_TRUNC_LEN = 16  # parquet.columnindex.truncate.length for the layout
 _KEY_PAD = 12  # zero-padded digits: lex order == numeric order, unique
 _KEY_SUFFIX = "x" * 20  # shared tail pushes every key PAST the truncation
-
-
-def _pageindex_probe_file_str(spark: SparkSession, path: str, column: str,
-                              point: bytes | None, fp: bytes | None,
-                              below: bytes | None):
-    """BINARY twin of :func:`_pageindex_probe_file` — probe a parquet
-    file's page-level ColumnIndex for a STRING column, where parquet-mr
-    TRUNCATES the stored page bounds (BinaryTruncator,
-    parquet.columnindex.truncate.length): min is cut to a prefix (rounds
-    DOWN) and max is cut with its last byte incremented (rounds UP), so
-    the stored [min,max] only CONTAINS the true page range.  Containment
-    against truncated bounds is therefore ONE-SIDED — false positives
-    are legal, false negatives are not — which is exactly the weaker
-    contract a reader on any URL/doc-id clustered lake table runs under.
-
-    Returns (rg_total, rg_indexed, pages_total, granular_bad, unordered,
-    point_pages, fp_pages, below_pages, overlong_bounds): the first five
-    as in the INT64 probe; point/fp/below_pages count non-null pages
-    whose stored (truncated) bounds admit the probe bytes under UNSIGNED
-    lexicographic order (parquet's UTF8 sort order — python bytes
-    comparison is the same order); overlong_bounds counts stored bounds
-    LONGER than the configured truncation length (must be zero when
-    every value exceeds the limit: truncation observably fired).
-    ADVICE r12 caveat on that zero: BinaryTruncator's max-side cut keeps
-    the ORIGINAL untruncated max when the kept prefix is all 0xFF bytes
-    (incrementing the last kept byte would overflow), so overlong_bounds
-    == 0 is only guaranteed because this probe's callers derive keys
-    from ASCII digits + 'x' (every byte < 0x7f, always incrementable);
-    a caller probing arbitrary binary data must expect legal overlong
-    max bounds.  Driver-side O(n_pages) metadata work, the
-    _bloom_probe_file class.
-    Asserts the chunk's primitive type is BINARY (ADVICE r11 — the
-    decode-kind/type mismatch must fail loudly, not misread)."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    infile = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        hpath, conf
-    )
-    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(infile)
-    binary = jvm.org.apache.parquet.io.api.Binary
-    rg_total = rg_indexed = pages_total = granular_bad = unordered = 0
-    point_pages = fp_pages = below_pages = overlong_bounds = 0
-    try:
-        blocks = reader.getRowGroups()
-        for i in range(blocks.size()):
-            block = blocks.get(i)
-            rg_total += 1
-            cols = block.getColumns()
-            for j in range(cols.size()):
-                cc = cols.get(j)
-                if cc.getPath().toDotString() != column:
-                    continue
-                ptype = str(cc.getPrimitiveType().getPrimitiveTypeName())
-                if ptype != "BINARY":
-                    raise ValueError(
-                        f"_pageindex_probe_file_str decodes BINARY bounds "
-                        f"only; column {column!r} is {ptype} (use "
-                        f"_pageindex_probe_file for INT64)"
-                    )
-                ci = reader.readColumnIndex(cc)
-                oi = reader.readOffsetIndex(cc)
-                if ci is None or oi is None:
-                    break
-                rg_indexed += 1
-                n_pages = oi.getPageCount()
-                pages_total += n_pages
-                rows = block.getRowCount()
-                if n_pages * _PAGE_ROW_LIMIT < rows:
-                    granular_bad += 1
-                if str(ci.getBoundaryOrder()) == "UNORDERED":
-                    unordered += 1
-                mins, maxs, nullp = (
-                    ci.getMinValues(), ci.getMaxValues(), ci.getNullPages()
-                )
-                for p in range(n_pages):
-                    if nullp[p]:
-                        continue
-                    lo = bytes(
-                        binary.fromReusedByteBuffer(
-                            mins.get(p).duplicate()
-                        ).getBytes()
-                    )
-                    hi = bytes(
-                        binary.fromReusedByteBuffer(
-                            maxs.get(p).duplicate()
-                        ).getBytes()
-                    )
-                    if max(len(lo), len(hi)) > _PAGE_TRUNC_LEN:
-                        overlong_bounds += 1
-                    if point is not None and lo <= point <= hi:
-                        point_pages += 1
-                    if fp is not None and lo <= fp <= hi:
-                        fp_pages += 1
-                    if below is not None and lo <= below <= hi:
-                        below_pages += 1
-                break
-    finally:
-        reader.close()
-    return (rg_total, rg_indexed, pages_total, granular_bad, unordered,
-            point_pages, fp_pages, below_pages, overlong_bounds)
 
 
 def _pageindex_string_key():
@@ -1183,12 +1164,12 @@ def scan_parquet_pageindex_string(spark: SparkSession, sf_dir: str) -> DataFrame
 
     Driver-verified contracts, probed through parquet-mr's OWN
     ColumnIndex reader on the truncated bounds:
-      * index_written / page_granular / ordered_ok — as the INT64 twin
-        (sorted layout must read back ASCENDING: prefix truncation is
-        order-preserving);
+      * index_written / page_granular / ordered_ok — as
+        scan_parquet_pageindex (sorted layout must read back ASCENDING:
+        prefix truncation is order-preserving);
       * trunc_real — every stored bound is ≤ 16 bytes while every data
         value is 32 chars: truncation OBSERVABLY fired on every page
-        (the claim that separates this operator from the INT64 twin).
+        (the claim that separates this operator from the INT64 entry).
         ADVICE r12: this unconditional TRUE silently depends on the key
         derivation — BinaryTruncator keeps the ORIGINAL (overlong) max
         when the kept prefix is all 0xFF bytes (the increment would
@@ -1235,7 +1216,7 @@ def scan_parquet_pageindex_string(spark: SparkSession, sf_dir: str) -> DataFrame
         .option("parquet.columnindex.truncate.length", _PAGE_TRUNC_LEN)
         # page byte cap sized so the 1000-row cap binds first (32-char
         # keys: 1000 rows ≈ 36 KB < 64 KB) — the granularity contract
-        # stays the row cap's, as in the INT64 twin
+        # stays the row cap's, as in scan_parquet_pageindex
         .option("parquet.page.size", 65536)
         .option("parquet.block.size", 1048576)
         .parquet(out)
@@ -1250,35 +1231,19 @@ def scan_parquet_pageindex_string(spark: SparkSession, sf_dir: str) -> DataFrame
     point = None if lo is None else lo.encode("utf-8")
     fp = None if hi is None else hi.encode("utf-8") + b"z"
     below = None if lo is None else b""
-    rg_total = rg_indexed = pages_total = granular_bad = unordered = 0
-    point_pages = fp_pages = below_pages = overlong = 0
-    for f in sorted(os.listdir(out)):
-        if not f.endswith(".parquet"):
-            continue
-        t, idx, pg, gb, uo, pp, fpp, bp, ob = _pageindex_probe_file_str(
-            spark, os.path.join(out, f), "key", point, fp, below
-        )
-        rg_total += t
-        rg_indexed += idx
-        pages_total += pg
-        granular_bad += gb
-        unordered += uo
-        point_pages += pp
-        fp_pages += fpp
-        below_pages += bp
-        overlong += ob
-    index_written = rg_indexed == rg_total
-    page_granular = granular_bad == 0
-    ordered_ok = unordered == 0
-    trunc_real = overlong == 0
-    point_contained = lo is None or point_pages >= 1
-    point_prune_ok = (
-        pages_total <= 1
-        or (point_pages >= 1 and point_pages * 2 <= pages_total)
-        or (point_pages >= 1 and 2 * m_min >= nn)
+    pi = _page_index(spark, out, "key", "BINARY")
+    index_written, page_granular, ordered_ok = _index_checks(pi)
+    trunc_real = all(
+        len(b) <= _PAGE_TRUNC_LEN for r in pi for page in r.bounds if page
+        for b in page
     )
-    fp_admitted = hi is None or fp_pages >= 1
-    below_min_excluded = below_pages == 0
+    point_pages = len(_admitting(pi, point))
+    point_contained = lo is None or point_pages >= 1
+    point_prune_ok = _point_prune_ok(
+        point_pages, sum(r.pages for r in pi), m_min, nn
+    )
+    fp_admitted = hi is None or bool(_admitting(pi, fp))
+    below_min_excluded = not _admitting(pi, below)
     # the point lookup: schema-stated read (empty corpus writes a bare
     # _SUCCESS dir), literal string Eq predicate → PushedFilters on key
     rt = spark.read.schema("key string, o_totalprice double").parquet(out)
@@ -1300,124 +1265,6 @@ def scan_parquet_pageindex_string(spark: SparkSession, sf_dir: str) -> DataFrame
         .withColumn("fp_admitted", F.lit(bool(fp_admitted)))
         .withColumn("below_min_excluded", F.lit(bool(below_min_excluded)))
     )
-
-
-def _pageindex_probe_file_nulls(spark: SparkSession, path: str, column: str,
-                                point: int | None, below: int | None):
-    """Null-axis twin of :func:`_pageindex_probe_file` — probe a parquet
-    file's page-level ColumnIndex for an INT64 column INCLUDING the
-    null-page structures the value-bounds probes only step around:
-    ``getNullPages()`` (per-page all-null flags — such pages store NO
-    min/max) and ``getNullCounts()`` (exact per-page null counts).
-    Per-page row counts are derived from the OffsetIndex
-    (``getFirstRowIndex(p+1) - getFirstRowIndex(p)``, last page closed
-    by the row-group row count), so the flag/count/row-count consistency
-    is checked against parquet-mr's OWN metadata, not assumed.
-
-    Returns (rg_total, rg_indexed, pages_total, granular_bad, unordered,
-    point_pages, below_pages, allnull_pages, sum_null_counts,
-    flag_mismatch, nonprefix_null_pages): the first five as in the INT64
-    probe; point/below_pages count NON-null pages whose exact [min,max]
-    admit the probe (all-null pages have no bounds and are skipped —
-    the skippability every value predicate relies on); allnull_pages
-    counts pages flagged all-null; sum_null_counts totals the per-page
-    null counts (cross-checked against the oracle's count(*) −
-    count(key)); flag_mismatch counts pages where the flag disagrees
-    with null_count == page_rows (or null_count is out of [0, rows], or
-    the null-count list is absent); nonprefix_null_pages counts pages
-    with nulls appearing AFTER a null-free page in file order — zero for
-    a NULLS-FIRST sorted layout, where null-bearing pages must form a
-    file prefix.  Driver-side O(n_pages) metadata work, the
-    _bloom_probe_file class.  INT64-only by contract (ADVICE r11)."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    infile = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        hpath, conf
-    )
-    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(infile)
-    rg_total = rg_indexed = pages_total = granular_bad = unordered = 0
-    point_pages = below_pages = allnull_pages = 0
-    sum_null_counts = 0
-    flag_mismatch = nonprefix = 0
-    little = jvm.java.nio.ByteOrder.LITTLE_ENDIAN
-    seen_nullfree_page = False  # file-order prefix check across row groups
-    try:
-        blocks = reader.getRowGroups()
-        for i in range(blocks.size()):
-            block = blocks.get(i)
-            rg_total += 1
-            cols = block.getColumns()
-            for j in range(cols.size()):
-                cc = cols.get(j)
-                if cc.getPath().toDotString() != column:
-                    continue
-                ptype = str(cc.getPrimitiveType().getPrimitiveTypeName())
-                if ptype != "INT64":
-                    raise ValueError(
-                        f"_pageindex_probe_file_nulls decodes INT64 bounds "
-                        f"only; column {column!r} is {ptype}"
-                    )
-                ci = reader.readColumnIndex(cc)
-                oi = reader.readOffsetIndex(cc)
-                if ci is None or oi is None:
-                    break
-                rg_indexed += 1
-                n_pages = oi.getPageCount()
-                pages_total += n_pages
-                rows = block.getRowCount()
-                if n_pages * _PAGE_ROW_LIMIT < rows:
-                    granular_bad += 1
-                if str(ci.getBoundaryOrder()) == "UNORDERED":
-                    unordered += 1
-                mins, maxs, nullp = (
-                    ci.getMinValues(), ci.getMaxValues(), ci.getNullPages()
-                )
-                nc = ci.getNullCounts()
-                # absent null-count list: count the chunk's pages ONCE as
-                # the defect and skip the per-page flag/count consistency
-                # checks (they would re-trigger on every all-null page via
-                # the substituted zeros, double-counting the same absence —
-                # ADVICE r13); the substituted zeros still feed
-                # sum_null_counts, so the cross-engine n_nulls VALUE check
-                # catches the absence independently
-                nc_absent = nc is None
-                if nc_absent:
-                    flag_mismatch += n_pages
-                    nc = [0] * n_pages
-                for p in range(n_pages):
-                    first = oi.getFirstRowIndex(p)
-                    last = (
-                        oi.getFirstRowIndex(p + 1) if p + 1 < n_pages
-                        else rows
-                    )
-                    page_rows = int(last) - int(first)
-                    nulls_p = int(nc[p])
-                    sum_null_counts += nulls_p
-                    all_null = bool(nullp[p])
-                    if not nc_absent and not (0 <= nulls_p <= page_rows):
-                        flag_mismatch += 1
-                    if not nc_absent and all_null != (nulls_p == page_rows):
-                        flag_mismatch += 1
-                    if nulls_p == 0:
-                        seen_nullfree_page = True
-                    elif seen_nullfree_page:
-                        nonprefix += 1
-                    if all_null:
-                        allnull_pages += 1
-                        continue  # no bounds: skippable by ANY value pred
-                    lo = mins.get(p).duplicate().order(little).getLong(0)
-                    hi = maxs.get(p).duplicate().order(little).getLong(0)
-                    if point is not None and lo <= point <= hi:
-                        point_pages += 1
-                    if below is not None and lo <= below <= hi:
-                        below_pages += 1
-                break
-    finally:
-        reader.close()
-    return (rg_total, rg_indexed, pages_total, granular_bad, unordered,
-            point_pages, below_pages, allnull_pages, sum_null_counts,
-            flag_mismatch, nonprefix)
 
 
 def scan_parquet_pageindex_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1459,13 +1306,14 @@ def scan_parquet_pageindex_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus has at least _PAGE_ROW_LIMIT null keys (the first page
         holds ≤1000 rows, all inside the null prefix); vacuous below
         that (tiny corpora legitimately blend nulls into page 1);
-      * ordered_ok / index_written / page_granular — as the INT64 twin;
-        boundary order stays ASCENDING with leading all-null pages
+      * ordered_ok / index_written / page_granular — as
+        scan_parquet_pageindex; boundary order stays ASCENDING with
+        leading all-null pages
         (verified: parquet-mr computes it over non-null pages only);
       * point_contained / point_prune_ok / below_min_excluded — the
         INT64 value-probe contracts re-proven in the PRESENCE of
-        all-null pages, which the probe skips (they store no bounds):
-        value predicates never admit an all-null page.  point_prune_ok
+        all-null pages, which store no bounds: value predicates never
+        admit them.  point_prune_ok
         is additionally vacuous when NO non-null key exists (an all-null
         corpus has nothing to prune toward — reachable on the const
         degenerate corpus when the hot key ≡ 0 mod 3).
@@ -1507,44 +1355,39 @@ def scan_parquet_pageindex_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     lo, n_all, nn = row["lo"], row["n_all"], row["nn"]
     below = None if lo is None else lo - 1
     m_min = 0 if lo is None else o.filter(F.col("key") == lo).count()
-    rg_total = rg_indexed = pages_total = granular_bad = unordered = 0
-    point_pages = below_pages = allnull = 0
-    sum_nulls = 0
-    flag_mismatch = nonprefix = 0
-    for f in sorted(os.listdir(out)):
-        if not f.endswith(".parquet"):
-            continue
-        (t, idx, pg, gb, uo, pp, bp, an, sn, fm, npx) = (
-            _pageindex_probe_file_nulls(
-                spark, os.path.join(out, f), "key", lo, below
-            )
+    pi = _page_index(spark, out, "key", "INT64")
+    index_written, page_granular, ordered_ok = _index_checks(pi)
+    indexed = [r for r in pi if r.order is not None]
+    # an absent null-count list fails the chunk once, not per page (ADVICE
+    # r13); it sums as zero, so the cross-engine n_nulls value catches it too
+    sum_nulls = sum(sum(r.null_counts or ()) for r in indexed)
+    nullflags_ok = all(
+        r.null_counts is not None
+        and all(
+            0 <= n <= rows and flag == (n == rows)
+            for n, rows, flag in zip(r.null_counts, r.page_rows, r.null_pages)
         )
-        rg_total += t
-        rg_indexed += idx
-        pages_total += pg
-        granular_bad += gb
-        unordered += uo
-        point_pages += pp
-        below_pages += bp
-        allnull += an
-        sum_nulls += sn
-        flag_mismatch += fm
-        nonprefix += npx
-    index_written = rg_indexed == rg_total
-    page_granular = granular_bad == 0
-    ordered_ok = unordered == 0
-    nullflags_ok = flag_mismatch == 0
-    nulls_clustered_ok = nonprefix == 0
-    allnull_observed_ok = allnull >= 1 or (n_all - nn) < _PAGE_ROW_LIMIT
+        for r in indexed
+    )
+    nulls_clustered_ok = True
+    nullfree_files = set()  # files that have shown a null-free page
+    for r in indexed:
+        for n in r.null_counts or [0] * r.pages:
+            if n == 0:
+                nullfree_files.add(r.file_no)
+            elif r.file_no in nullfree_files:
+                nulls_clustered_ok = False
+    allnull_observed_ok = (
+        any(any(r.null_pages) for r in indexed)
+        or (n_all - nn) < _PAGE_ROW_LIMIT
+    )
+    point_pages = len(_admitting(pi, lo))
     point_contained = lo is None or point_pages >= 1
     point_prune_ok = (
         lo is None  # all-null corpus: nothing to prune toward
-        or pages_total <= 1
-        or (point_pages >= 1 and point_pages * 2 <= pages_total)
-        # vacuity: the min key owns ≥ half the non-null rows (ADVICE r11)
-        or (point_pages >= 1 and 2 * m_min >= nn)
+        or _point_prune_ok(point_pages, sum(r.pages for r in pi), m_min, nn)
     )
-    below_min_excluded = below_pages == 0
+    below_min_excluded = not _admitting(pi, below)
     # data plane: schema-stated read (empty corpus writes a bare _SUCCESS
     # dir); IS NULL and literal Eq both reach PushedFilters on key
     rt = spark.read.schema("key bigint, o_totalprice double").parquet(out)
@@ -1575,82 +1418,6 @@ def scan_parquet_pageindex_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("point_prune_ok", F.lit(bool(point_prune_ok)))
         .withColumn("below_min_excluded", F.lit(bool(below_min_excluded)))
     )
-
-
-def _pageindex_admitted_rows(spark: SparkSession, path: str, column: str,
-                             k1: int | None, k2: int | None):
-    """Metadata side of the READER-skip proof: walk a file's page-level
-    ColumnIndex/OffsetIndex (parquet-mr's own readers, the
-    _pageindex_probe_file class) and return the exact row budget a
-    page-index-aware reader is ALLOWED to materialize for two pushed
-    predicates — ``key BETWEEN k1 AND k2`` (non-null pages whose exact
-    INT64 [min,max] intersects the range; all-null pages store no bounds
-    and are never admitted) and ``key IS NULL`` (pages whose null count
-    is nonzero; an absent null-count list conservatively admits every
-    page, keeping the <=-contract honest rather than vacuously tight).
-
-    Returns (rg_total, rg_indexed, pages_total, rows_total,
-    admitted_range_rows, admitted_null_rows).  Driver-side O(n_pages)
-    metadata work.  INT64-only by contract (ADVICE r11)."""
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    infile = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-        hpath, conf
-    )
-    reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(infile)
-    rg_total = rg_indexed = pages_total = rows_total = 0
-    adm_range = adm_null = 0
-    little = jvm.java.nio.ByteOrder.LITTLE_ENDIAN
-    try:
-        blocks = reader.getRowGroups()
-        for i in range(blocks.size()):
-            block = blocks.get(i)
-            rg_total += 1
-            rows = int(block.getRowCount())
-            rows_total += rows
-            cols = block.getColumns()
-            for j in range(cols.size()):
-                cc = cols.get(j)
-                if cc.getPath().toDotString() != column:
-                    continue
-                ptype = str(cc.getPrimitiveType().getPrimitiveTypeName())
-                if ptype != "INT64":
-                    raise ValueError(
-                        f"_pageindex_admitted_rows decodes INT64 bounds "
-                        f"only; column {column!r} is {ptype}"
-                    )
-                ci = reader.readColumnIndex(cc)
-                oi = reader.readOffsetIndex(cc)
-                if ci is None or oi is None:
-                    break
-                rg_indexed += 1
-                n_pages = oi.getPageCount()
-                pages_total += n_pages
-                mins, maxs, nullp = (
-                    ci.getMinValues(), ci.getMaxValues(), ci.getNullPages()
-                )
-                nc = ci.getNullCounts()
-                for p in range(n_pages):
-                    first = oi.getFirstRowIndex(p)
-                    last = (
-                        oi.getFirstRowIndex(p + 1) if p + 1 < n_pages
-                        else rows
-                    )
-                    page_rows = int(last) - int(first)
-                    if nc is None or int(nc[p]) > 0:
-                        adm_null += page_rows
-                    if bool(nullp[p]):
-                        continue  # no bounds: no value predicate admits it
-                    lo = mins.get(p).duplicate().order(little).getLong(0)
-                    hi = maxs.get(p).duplicate().order(little).getLong(0)
-                    if k1 is not None and lo <= k2 and k1 <= hi:
-                        adm_range += page_rows
-                break
-    finally:
-        reader.close()
-    return (rg_total, rg_indexed, pages_total, rows_total, adm_range,
-            adm_null)
 
 
 def _scan_metric_rows(spark: SparkSession, path: str, schema: str,
@@ -1698,7 +1465,7 @@ def scan_parquet_pageindex_reader(spark: SparkSession, sf_dir: str) -> DataFrame
     from disk into column batches) is measured with page-index filtering
     ENABLED vs DISABLED on the same pushed predicate over the same
     single-row-group layout, and the enabled path must (a) stay within
-    the admitted-row budget the ColumnIndex probe computed and (b) read
+    the admitted-row budget the ColumnIndex read computed and (b) read
     strictly fewer rows than the file holds.  Single row group
     (parquet.block.size 1 GB) by construction, so the separation is
     PURELY page-level — no row-group-prune confound.
@@ -1776,20 +1543,13 @@ def scan_parquet_pageindex_reader(spark: SparkSession, sf_dir: str) -> DataFrame
         span = hi - lo
         k1 = lo + span // 2
         k2 = k1 + max(span // 100, 1)
-    rg_total = rg_indexed = pages_total = rows_meta = 0
-    adm_range = adm_null = 0
-    for f in sorted(os.listdir(out)):
-        if not f.endswith(".parquet"):
-            continue
-        t, idx, pg, rw, ar, an = _pageindex_admitted_rows(
-            spark, os.path.join(out, f), "key", k1, k2
-        )
-        rg_total += t
-        rg_indexed += idx
-        pages_total += pg
-        rows_meta += rw
-        adm_range += ar
-        adm_null += an
+    pi = _page_index(spark, out, "key", "INT64")
+    rows_meta = sum(r.rows for r in pi)
+    # the row budget a page-index reader may materialize: pages meeting
+    # [k1, k2] for the range, pages holding nulls for IS NULL (an absent
+    # null-count list admits every page)
+    adm_range = sum(r.page_rows[p] for r, p in _admitting(pi, k1, k2))
+    adm_null = _null_rows(pi)
     schema = "key bigint, o_totalprice double"
     null_pred = F.col("key").isNull()
     # a NULL literal bound keeps the empty/all-null branch uniform: the
@@ -1814,9 +1574,9 @@ def scan_parquet_pageindex_reader(spark: SparkSession, sf_dir: str) -> DataFrame
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
     n_nulls = n_all - nn
-    single_rowgroup_ok = rg_total <= 1
-    index_written = rg_indexed == rg_total
-    no_index = rg_indexed < rg_total  # no index, no skip claim (vacuity)
+    single_rowgroup_ok = len(pi) <= 1
+    index_written = _index_checks(pi)[0]
+    no_index = not index_written  # no index, no skip claim (vacuity)
     disabled_null_full = (
         dis_null == rows_meta or n_nulls == 0 or n_all == 0
     )

@@ -154,50 +154,40 @@ def q_write_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
     return rt
 
 
-def q_cancel_query(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One cancellation race per wait in {25, 50} ms over a heavy DISTINCT
-    (the reference's experiment at reduced sweep; full sweep in bench).
-    rows-only: latencies are environment-dependent."""
-    from ..cancel import sweep
+def _cancel_races(seed: int, waits: list[int]):
+    """Registry entry racing one cancel per wait (ms) against a heavy
+    DISTINCT over a 300k-row generated table (the reference's experiment
+    at a reduced sweep; the full 10..=60 sweep + markdown output lives in
+    tools/cancel_bench.py -> BENCH.md).
 
-    def heavy():
-        return (
-            generate_random_table(spark, n_rows=300_000, seed=3)
-            .select("A", "B", "C", "D", "E")
-            .distinct()
+    Latency is environment-dependent, so the emitted row is self-verifying:
+    (wait, measured, race_resolved) — the oracle states the sweep points
+    and the invariants: a cancel duration was measured, and the action
+    thread terminated (interrupted or complete) within the harness's 300 s
+    teardown bound rather than hanging."""
+
+    def run(spark: SparkSession, sf_dir: str) -> DataFrame:
+        from ..cancel import sweep
+
+        def heavy():
+            return (
+                generate_random_table(spark, n_rows=300_000, seed=seed)
+                .select("A", "B", "C", "D", "E")
+                .distinct()
+            )
+
+        results = sweep(spark, heavy, waits)
+        return spark.createDataFrame(
+            [(w, c >= 0, c < 300_000) for (w, c, _e) in results],
+            "wait_ms int, measured boolean, race_resolved boolean",
         )
 
-    results = sweep(spark, heavy, [25, 50])
-    # Self-verifying shape: latency is environment-dependent, so the emitted
-    # row is (wait, measured, race_resolved) — the oracle states the sweep
-    # points and the invariants: a cancel duration was measured, and the
-    # action thread terminated (interrupted or complete) within the harness's
-    # 300 s teardown bound rather than hanging.
-    return spark.createDataFrame(
-        [(w, c >= 0, c < 300_000) for (w, c, _e) in results],
-        "wait_ms int, measured boolean, race_resolved boolean",
-    )
+    return run
 
 
-def q_bench_cancel_table(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SURVEY §2.1's bench_cancel_table: a reduced 3-point sweep returning
-    the (wait, cancel) table as rows (the full 10..=60 sweep + markdown
-    output lives in tools/cancel_bench.py -> BENCH.md).  rows-only: latency
-    is environment-dependent."""
-    from ..cancel import sweep
-
-    def heavy():
-        return (
-            generate_random_table(spark, n_rows=300_000, seed=13)
-            .select("A", "B", "C", "D", "E")
-            .distinct()
-        )
-
-    results = sweep(spark, heavy, [20, 40, 60])
-    return spark.createDataFrame(
-        [(w, c >= 0, c < 300_000) for (w, c, _e) in results],
-        "wait_ms int, measured boolean, race_resolved boolean",
-    )
+# SURVEY §2.1's cancel_query (2 races) and bench_cancel_table (3 races)
+q_cancel_query = _cancel_races(seed=3, waits=[25, 50])
+q_bench_cancel_table = _cancel_races(seed=13, waits=[20, 40, 60])
 
 
 def source_python_api(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -484,6 +484,20 @@ def test_row_lineage_metadata_does_not_widen_read_schema(spark, sf_dir):
         assert stored == ["o_orderkey:bigint"], f"ReadSchema widened: {s}"
 
 
+def _walk(spark, out, column, ptype):
+    """The page-index walk of a test layout with its (row groups, indexed
+    row groups, pages) totals."""
+    from datafusion_test_spark.sources import connectors
+
+    pi = connectors._page_index(spark, out, column, ptype)
+    return (
+        pi,
+        len(pi),
+        sum(r.order is not None for r in pi),
+        sum(r.pages for r in pi),
+    )
+
+
 def test_parquet_bloom_lookup_pushed_and_probe_nonvacuous(spark, sf_dir):
     """scan_parquet_bloom's pins: (1) the point-lookup Eq predicate
     reaches PushedFilters on the bloom layout's scan — the reader-side
@@ -521,17 +535,11 @@ def test_parquet_bloom_lookup_pushed_and_probe_nonvacuous(spark, sf_dir):
         .parquet(out)
     )
     lo = o.agg(F.min("o_orderkey")).first()[0]
-    files = [f for f in sorted(os.listdir(out)) if f.endswith(".parquet")]
-    assert files
-    rg = bloomed = cells = excl = 0
-    hit = [False]
-    for f in files:
-        t, b, c, e, flags = connectors._bloom_probe_file(
-            spark, os.path.join(out, f), "key",
-            [f"k{lo}"], [f"miss{i}" for i in range(16)],
-        )
-        rg += t; bloomed += b; cells += c; excl += e
-        hit = [got or new for got, new in zip(hit, flags)]
+    assert any(f.endswith(".parquet") for f in os.listdir(out))
+    rg, bloomed, cells, excl, file_hits = connectors._bloom_probe(
+        spark, out, "key", [f"k{lo}"], [f"miss{i}" for i in range(16)]
+    )
+    hit = [any(col) for col in zip(*file_hits)]
     assert rg > 0 and bloomed == rg, (rg, bloomed)
     assert all(hit), "present key excluded — bloom false negative?"
     assert cells > 0 and excl * 10 >= cells * 9, (excl, cells)
@@ -570,17 +578,13 @@ def test_parquet_pageindex_pushed_and_probe_nonvacuous(spark, sf_dir):
     )
     row = o.agg(F.min("o_orderkey").alias("lo")).first()
     lo = row["lo"]
-    rg = idx = pages = gbad = uo = pp = bp = 0
-    for f in sorted(os.listdir(out)):
-        if not f.endswith(".parquet"):
-            continue
-        t, i, pg, gb, u, p, b = connectors._pageindex_probe_file(
-            spark, os.path.join(out, f), "o_orderkey", lo, lo - 1
-        )
-        rg += t; idx += i; pages += pg; gbad += gb; uo += u; pp += p; bp += b
+    pi, rg, idx, pages = _walk(spark, out, "o_orderkey", "INT64")
+    _, granular, ordered = connectors._index_checks(pi)
+    pp = len(connectors._admitting(pi, lo))
+    bp = len(connectors._admitting(pi, lo - 1))
     assert rg > 0 and idx == rg, (rg, idx)
     assert pages > rg, f"page tier not finer than row groups: {pages} pages / {rg} groups"
-    assert gbad == 0 and uo == 0, (gbad, uo)
+    assert granular and ordered, (granular, ordered)
     assert 1 <= pp and pp * 2 <= pages, f"min key in {pp}/{pages} pages — no page skip"
     assert bp == 0, f"below-min key contained by {bp} pages"
 
@@ -599,35 +603,12 @@ def test_parquet_pageindex_descending_layout_is_ordered_not_unordered(spark, sf_
     from datafusion_test_spark._util import scratch_dir
     from datafusion_test_spark.sources import connectors
 
-    jvm = spark._jvm
-    conf = spark._jsc.hadoopConfiguration()
-
     def boundary_orders(out):
-        orders = []
-        for f in sorted(os.listdir(out)):
-            if not f.endswith(".parquet"):
-                continue
-            hpath = jvm.org.apache.hadoop.fs.Path(os.path.join(out, f))
-            infile = jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-                hpath, conf
-            )
-            reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(infile)
-            try:
-                blocks = reader.getRowGroups()
-                for i in range(blocks.size()):
-                    cols = blocks.get(i).getColumns()
-                    for j in range(cols.size()):
-                        cc = cols.get(j)
-                        if cc.getPath().toDotString() != "o_orderkey":
-                            continue
-                        ci = reader.readColumnIndex(cc)
-                        oi = reader.readOffsetIndex(cc)
-                        if ci is not None and oi.getPageCount() > 1:
-                            orders.append(str(ci.getBoundaryOrder()))
-                        break
-            finally:
-                reader.close()
-        return orders
+        return [
+            r.order
+            for r in connectors._page_index(spark, out, "o_orderkey", "INT64")
+            if r.order is not None and r.pages > 1
+        ]
 
     o = table(spark, sf_dir, "orders").select("o_orderkey")
 
@@ -691,15 +672,13 @@ def test_parquet_bloom_hit_ok_survives_multi_file_layout(spark, sf_dir):
     hit_keys = [f"k{row['lo']}", f"k{row['hi']}"]
     files = [f for f in sorted(os.listdir(out)) if f.endswith(".parquet")]
     assert len(files) > 1, "multi-file layout required for this pin"
-    found = [False, False]
-    per_file_flags = []
-    for f in files:
-        _, _, _, _, flags = connectors._bloom_probe_file(
-            spark, os.path.join(out, f), "key", hit_keys, []
-        )
-        per_file_flags.append(flags)
-        found = [got or new for got, new in zip(found, flags)]
-    assert all(found), f"cross-file OR lost a present key: {per_file_flags}"
+    *_, per_file_flags = connectors._bloom_probe(
+        spark, out, "key", hit_keys, []
+    )
+    found = [any(col) for col in zip(*per_file_flags)]
+    assert len(found) == 2 and all(found), (
+        f"cross-file OR lost a present key: {per_file_flags}"
+    )
     assert any(
         not flag for flags in per_file_flags for flag in flags
     ), "no file excluded any present key — multi-file state vacuous"
@@ -749,18 +728,18 @@ def test_parquet_pageindex_string_truncation_onesided(spark, sf_dir):
     agg = o.agg(F.min("key").alias("lo"), F.max("key").alias("hi")).first()
     lo, hi = agg["lo"].encode(), agg["hi"].encode()
     fp = hi + b"z"  # > every key: an EXACT index admits this in 0 pages
-    rg = idx = pages = gbad = uo = pp = fpp = bp = ob = 0
-    for f in sorted(os.listdir(out)):
-        if not f.endswith(".parquet"):
-            continue
-        t, i, pg, gb, u, p, fq, b, o_ = connectors._pageindex_probe_file_str(
-            spark, os.path.join(out, f), "key", lo, fp, b""
-        )
-        rg += t; idx += i; pages += pg; gbad += gb; uo += u
-        pp += p; fpp += fq; bp += b; ob += o_
+    pi, rg, idx, pages = _walk(spark, out, "key", "BINARY")
+    _, granular, ordered = connectors._index_checks(pi)
+    ob = sum(
+        max(map(len, b)) > connectors._PAGE_TRUNC_LEN
+        for r in pi for b in r.bounds if b
+    )
+    pp = len(connectors._admitting(pi, lo))
+    fpp = len(connectors._admitting(pi, fp))
+    bp = len(connectors._admitting(pi, b""))
     assert rg > 0 and idx == rg, (rg, idx)
     assert pages > rg, f"page tier not finer than row groups: {pages}/{rg}"
-    assert gbad == 0 and uo == 0, (gbad, uo)
+    assert granular and ordered, (granular, ordered)
     # every key is _KEY_PAD + len(_KEY_SUFFIX) = 32 chars; a stored bound
     # within the truncate length proves the cut happened on every page
     assert len(agg["lo"]) == connectors._KEY_PAD + len(connectors._KEY_SUFFIX)
@@ -869,19 +848,23 @@ def test_parquet_pageindex_nulls_axis(spark, sf_dir):
         .parquet(out)
     )
     lo = 1  # min non-null id (0 % 3 == 0 -> NULL; 1 survives)
-    rg = idx = pages = gbad = uo = pp = bp = an = sn = fm = npx = 0
-    for f in sorted(os.listdir(out)):
-        if not f.endswith(".parquet"):
-            continue
-        (t, i, pg, gb, u, p, b, a, s, fmm, nx) = (
-            connectors._pageindex_probe_file_nulls(
-                spark, os.path.join(out, f), "key", lo, lo - 1
-            )
-        )
-        rg += t; idx += i; pages += pg; gbad += gb; uo += u
-        pp += p; bp += b; an += a; sn += s; fm += fmm; npx += nx
+    pi, rg, idx, pages = _walk(spark, out, "key", "INT64")
+    _, granular, ordered = connectors._index_checks(pi)
+    assert all(r.null_counts is not None for r in pi), "null counts absent"
+    sn = sum(sum(r.null_counts) for r in pi)
+    an = sum(sum(r.null_pages) for r in pi)
+    fm = sum(
+        not (0 <= n <= rows and flag == (n == rows))
+        for r in pi
+        for n, rows, flag in zip(r.null_counts, r.page_rows, r.null_pages)
+    )
+    # one file: null-bearing pages must come before every null-free page
+    has_nulls = [n > 0 for r in pi for n in r.null_counts]
+    npx = sum(has_nulls[has_nulls.index(False):]) if False in has_nulls else 0
+    pp = len(connectors._admitting(pi, lo))
+    bp = len(connectors._admitting(pi, lo - 1))
     assert rg > 0 and idx == rg, (rg, idx)
-    assert gbad == 0 and uo == 0, (gbad, uo)
+    assert granular and ordered, (granular, ordered)
     assert sn == 5000, f"per-page null counts sum {sn} != 5000"
     assert an >= 5, f"only {an} all-null pages on a 5000-null prefix"
     assert fm == 0, f"{fm} flag/count/row-count mismatches"
@@ -948,15 +931,10 @@ def test_pageindex_probe_type_asserts(spark, sf_dir):
         .write.mode("overwrite")
         .parquet(out)
     )
-    f = next(
-        os.path.join(out, x)
-        for x in sorted(os.listdir(out))
-        if x.endswith(".parquet")
-    )
     with pytest.raises(ValueError, match="INT64 bounds only"):
-        connectors._pageindex_probe_file(spark, f, "key", 0, None)
+        connectors._page_index(spark, out, "key", "INT64")
     with pytest.raises(ValueError, match="BINARY bounds only"):
-        connectors._pageindex_probe_file_str(spark, f, "o_orderkey", b"", None, None)
+        connectors._page_index(spark, out, "o_orderkey", "BINARY")
 
 
 def test_parquet_pageindex_string_total_truncation_stays_onesided(spark, sf_dir):
@@ -991,14 +969,10 @@ def test_parquet_pageindex_string_total_truncation_stays_onesided(spark, sf_dir)
     )
     agg = o.agg(F.min("key").alias("lo"), F.max("key").alias("hi")).first()
     lo, fp = agg["lo"].encode(), agg["hi"].encode() + b"z"
-    rg = idx = pages = pp = fpp = bp = 0
-    for f in sorted(os.listdir(out)):
-        if not f.endswith(".parquet"):
-            continue
-        t, i, pg, _gb, _u, p, fq, b, _o = connectors._pageindex_probe_file_str(
-            spark, os.path.join(out, f), "key", lo, fp, b""
-        )
-        rg += t; idx += i; pages += pg; pp += p; fpp += fq; bp += b
+    pi, rg, idx, pages = _walk(spark, out, "key", "BINARY")
+    pp = len(connectors._admitting(pi, lo))
+    fpp = len(connectors._admitting(pi, fp))
+    bp = len(connectors._admitting(pi, b""))
     assert rg > 0 and idx == rg and pages > 1, (rg, idx, pages)
     # pruning is GONE: single-byte bounds admit the min key (and the
     # absent above-max key) in EVERY page — the false-positive side at
@@ -1073,14 +1047,12 @@ def test_parquet_pageindex_reader_skips_strictly(spark, tmp_path):
     # non-null span 1..30000 minus multiples of 3 -> lo=1, hi=29999,
     # k1 = 1 + 14999, k2 = k1 + 299 (the entry's derivation, restated)
     k1, k2 = 1 + 29998 // 2, 1 + 29998 // 2 + max(29998 // 100, 1)
-    f = next(
-        os.path.join(out, x)
-        for x in sorted(os.listdir(out))
-        if x.endswith(".parquet")
+    pi, rg, idx, pages = _walk(spark, out, "key", "INT64")
+    rows_meta = sum(r.rows for r in pi)
+    adm_range = sum(
+        r.page_rows[p] for r, p in connectors._admitting(pi, k1, k2)
     )
-    (rg, idx, pages, rows_meta, adm_range, adm_null) = (
-        connectors._pageindex_admitted_rows(spark, f, "key", k1, k2)
-    )
+    adm_null = connectors._null_rows(pi)
     assert rg == 1 and idx == 1 and rows_meta == 30000
     assert pages >= 30, f"{pages} pages on a 30k-row 1000-row-page layout"
     # null prefix = 10000 rows -> ~10-11 null-bearing pages; the range
@@ -1109,3 +1081,39 @@ def test_parquet_pageindex_reader_skips_strictly(spark, tmp_path):
     assert en_n < dis_n and en_r < dis_r, (en_n, dis_n, en_r, dis_r)
     # value range on the null-heavy layout: all-null pages never read
     assert en_r <= 3000, f"range scan materialized {en_r} rows"
+
+
+def test_one_parquet_footer_reader():
+    """Parquet footer metadata (row groups, blooms, page indexes) is read
+    through ONE walker, connectors._footers: the package holds exactly
+    one ``ParquetFileReader.open`` call and the tests hold none, so the
+    decoding rules and their caveats cannot drift between hand-copied
+    readers again."""
+    import ast
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+    def sites(top):
+        found = []
+        for dirpath, _, files in os.walk(os.path.join(root, top)):
+            for name in files:
+                if not name.endswith(".py"):
+                    continue
+                path = os.path.join(dirpath, name)
+                with open(path) as fh:
+                    tree = ast.parse(fh.read(), path)
+                found += [
+                    f"{os.path.relpath(path, root)}:{node.lineno}"
+                    for node in ast.walk(tree)
+                    if isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "open"
+                    and isinstance(node.func.value, ast.Attribute)
+                    and node.func.value.attr == "ParquetFileReader"
+                ]
+        return found
+
+    package = sites("datafusion_test_spark")
+    assert len(package) == 1, f"want one ParquetFileReader.open: {package}"
+    assert not sites("tests"), sites("tests")

@@ -98,3 +98,15 @@ def test_rotate_priority_orders_greens_by_vintage():
     assert green_vintages == sorted(green_vintages), (
         "green entries not in oldest-vintage-first order"
     )
+
+
+def test_module_import_error_propagates(monkeypatch):
+    """A module that cannot be imported must surface its own import error,
+    not be skipped and reported later as a pile of missing priority
+    names."""
+    import pytest
+
+    missing = "datafusion_test_spark.operators._no_such_module"
+    monkeypatch.setattr(registry, "_MODULES", [*registry._MODULES, missing])
+    with pytest.raises(ModuleNotFoundError, match="_no_such_module"):
+        registry.queries()

@@ -44,6 +44,38 @@ from datafusion_test_spark.session import get_session
 from datafusion_test_spark.sources.generate import generate_random_table
 
 
+def _report(out: str, title: str, facts: list[str], full_query_ms: int,
+            results, note: str = "", **tag) -> None:
+    """Append one sweep's BENCH.md section (title, facts, full-query time,
+    machine spec, min/median/max cancel plus ``note``, the wait/cancel
+    table) to ``out`` and print its summary JSON, ``tag`` keys first."""
+    cancels = sorted(c for (_, c, _) in results)
+    lo, med, hi = cancels[0], cancels[len(cancels) // 2], cancels[-1]
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", "4")
+    spec = (
+        f"{platform.system()} {platform.machine()}, "
+        f"{os.cpu_count()} cpus (local[{cpus}]), python {platform.python_version()}"
+    )
+    section = "\n".join(
+        [
+            "",
+            f"## {title}",
+            "",
+            *facts,
+            f"- uncancelled full query time: {full_query_ms} ms",
+            f"- machine: {spec}",
+            f"- min/median/max cancel: {lo} / {med} / {hi} ms{note}",
+            "",
+            markdown_table(results),
+            "",
+        ]
+    )
+    with open(out, "a") as f:
+        f.write(section)
+    print(json.dumps({**tag, "min": lo, "median": med, "max": hi,
+                      "full_query_ms": full_query_ms}))
+
+
 def main() -> None:
     args = [a for a in sys.argv[1:] if a != "--pageindex"]
     pageindex = "--pageindex" in sys.argv[1:]
@@ -68,35 +100,17 @@ def main() -> None:
     heavy().write.mode("overwrite").format("noop").save()
     full_query_ms = int((time.monotonic() - t0) * 1000)
 
-    results = sweep(spark, heavy, range(10, 61))
-    cancels = [c for (_, c, _) in results]
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "4")
-    spec = (
-        f"{platform.system()} {platform.machine()}, "
-        f"{os.cpu_count()} cpus (local[{cpus}]), python {platform.python_version()}"
-    )
-    section = "\n".join(
+    _report(
+        out,
+        "Cancellation sweep (reference protocol, Spark engine)",
         [
-            "",
-            "## Cancellation sweep (reference protocol, Spark engine)",
-            "",
             f"- dataset: {n:,} generated rows, 11 cols, persisted MEMORY_ONLY",
             "- query: `SELECT DISTINCT A,B,C,D,E` (reference src/main.rs:122)",
-            f"- uncancelled full query time: {full_query_ms} ms",
-            f"- machine: {spec}",
-            f"- min/median/max cancel: {min(cancels)} / "
-            f"{sorted(cancels)[len(cancels) // 2]} / {max(cancels)} ms "
-            "(reference published 17 / ~300 / 2086 ms, README.md:72-124)",
-            "",
-            markdown_table(results),
-            "",
-        ]
+        ],
+        full_query_ms,
+        sweep(spark, heavy, range(10, 61)),
+        note=" (reference published 17 / ~300 / 2086 ms, README.md:72-124)",
     )
-    with open(out, "a") as f:
-        f.write(section)
-    print(json.dumps({"min": min(cancels), "median": sorted(cancels)[len(cancels) // 2],
-                      "max": max(cancels), "full_query_ms": full_query_ms}))
 
 
 def main_pageindex(rows: int, out: str) -> None:
@@ -152,40 +166,19 @@ def main_pageindex(rows: int, out: str) -> None:
     skip_heavy().write.mode("overwrite").format("noop").save()
     full_query_ms = int((time.monotonic() - t0) * 1000)
 
-    results = sweep(spark, skip_heavy, range(10, 61))
-    cancels = [c for (_, c, _) in results]
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "4")
-    spec = (
-        f"{platform.system()} {platform.machine()}, "
-        f"{os.cpu_count()} cpus (local[{cpus}]), python {platform.python_version()}"
-    )
-    section = "\n".join(
+    _report(
+        out,
+        "Cancellation sweep — page-index skip-heavy scan variant",
         [
-            "",
-            "## Cancellation sweep — page-index skip-heavy scan variant",
-            "",
             f"- layout: {n:,} generated rows, clustered on a surrogate key, "
             "1000-row pages (scan_parquet_pageindex discipline), 8 files",
             "- query: pushed key-range lookup (~5% of rows admitted, "
             "ColumnIndex prunes the rest) + `SELECT DISTINCT A,B,C,D,E`",
-            f"- uncancelled full query time: {full_query_ms} ms",
-            f"- machine: {spec}",
-            f"- min/median/max cancel: {min(cancels)} / "
-            f"{sorted(cancels)[len(cancels) // 2]} / {max(cancels)} ms",
-            "",
-            markdown_table(results),
-            "",
-        ]
+        ],
+        full_query_ms,
+        sweep(spark, skip_heavy, range(10, 61)),
+        variant="pageindex",
     )
-    with open(out, "a") as f:
-        f.write(section)
-    print(json.dumps({
-        "variant": "pageindex",
-        "min": min(cancels),
-        "median": sorted(cancels)[len(cancels) // 2],
-        "max": max(cancels),
-        "full_query_ms": full_query_ms,
-    }))
 
 
 if __name__ == "__main__":
