@@ -10,8 +10,10 @@ Spark mapping: the query runs in a job group on a background
 InheritableThread with ``interruptOnCancel=True``; ``cancelJobGroup`` kills
 its active jobs, and tasks stop at the next InterruptibleIterator record
 boundary — the same cooperative-yield granularity the reference measures.
-Cancel duration = elapsed from the cancel call until the action thread
-observes termination.
+For a cached scan that boundary is one cached batch, of the row count
+``session.RUNTIME_CONFS`` pins (the codegen loop inside a batch never
+checks).  Cancel duration = elapsed from the cancel call until the action
+thread observes termination.
 """
 
 from __future__ import annotations
@@ -23,12 +25,17 @@ from pyspark import InheritableThread
 from pyspark.sql import SparkSession
 
 
-def cancel_once(spark: SparkSession, build_df, wait_ms: int) -> tuple[int, int, bool]:
-    """Run one cancellation race (mirrors run_test, src/main.rs:56-105).
+def _running_tasks(sc) -> int:
+    """Tasks running now, read live from the task scheduler."""
+    counts = sc._jsc.sc().taskScheduler().runningTasksByExecutors().values().mkString(",")
+    return sum(int(c) for c in counts.split(",") if c)
 
-    Returns (wait_ms, cancel_duration_ms, query_errored) where query_errored
-    True means the query was actually interrupted (expected for short waits).
-    """
+
+def cancel_once(spark: SparkSession, build_df, wait_ms: int) -> tuple[int, int, bool]:
+    """Run one cancellation race (mirrors run_test, src/main.rs:56-105),
+    waiting from the job's first running task.  Returns (wait_ms,
+    cancel_duration_ms, hit): hit is True when the first cancel ended the
+    query as interrupted within 1 s; else it is re-issued once."""
     sc = spark.sparkContext
     gid = f"cancel-bench-{wait_ms}-{time.monotonic_ns()}"
     done = threading.Event()
@@ -46,20 +53,20 @@ def cancel_once(spark: SparkSession, build_df, wait_ms: int) -> tuple[int, int, 
 
     t = InheritableThread(target=run_query)
     t.start()
+    deadline = time.monotonic() + 300
+    while not done.is_set() and _running_tasks(sc) == 0 and time.monotonic() < deadline:
+        time.sleep(0.001)
     time.sleep(wait_ms / 1000.0)  # src/main.rs:92
     t_cancel = time.monotonic()  # src/main.rs:94
-    # The reference's CancellationToken stays cancelled forever; Spark's
-    # cancelJobGroup is a one-shot that only hits *active* jobs.  For short
-    # waits the job may not be submitted yet, so re-issue until the action
-    # thread ends (still cancel-request -> teardown semantics).
     sc.cancelJobGroup(gid)  # src/main.rs:97 (token.cancel)
-    while not done.wait(timeout=0.01):
-        if time.monotonic() - t_cancel > 300:
-            break
+    # cancelJobGroup only hits *active* jobs (the reference's token stays
+    # cancelled): one re-issue recovers a cancel that found none.
+    missed = not done.wait(timeout=1.0)
+    if missed:
         sc.cancelJobGroup(gid)
     t.join(timeout=300)
     cancel_ms = int((time.monotonic() - t_cancel) * 1000)  # src/main.rs:100-104
-    return wait_ms, cancel_ms, bool(errored and errored[0])
+    return wait_ms, cancel_ms, not missed and bool(errored and errored[0])
 
 
 def sweep(spark: SparkSession, build_df, waits_ms) -> list[tuple[int, int, bool]]:

@@ -1015,6 +1015,19 @@ def eval_position_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _format_score():
+    """The format score of a completion payload: how many of three
+    structural markers it shows (opens '{'/'[', contains '":', matches
+    [0-9][0-9]); NULL for a NULL payload.  eval_format_bias and
+    _confound_pair_signals score with it; their oracles state it in SQL."""
+    score = (
+        F.when(F.substring("props", 1, 1).isin("{", "["), 1).otherwise(0)
+        + F.when(F.instr("props", '":') > 0, 1).otherwise(0)
+        + F.when(F.col("props").rlike("[0-9][0-9]"), 1).otherwise(0)
+    )
+    return F.when(F.col("props").isNotNull(), score)
+
+
 def eval_format_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Preference-data format-confound audit — the third documented
     preference confound (length / position / format): reward models and
@@ -1051,14 +1064,8 @@ def eval_format_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange; the final aggregate is a map-side-combined groupBy onto
     ≤ 4 bucket rows.  No corpus-wide state anywhere.
     """
-    score = (
-        F.when(F.substring("props", 1, 1).isin("{", "["), 1).otherwise(0)
-        + F.when(F.instr("props", '":') > 0, 1).otherwise(0)
-        + F.when(F.col("props").rlike("[0-9][0-9]"), 1).otherwise(0)
-    )
-    fmt = F.when(F.col("props").isNotNull(), score)  # NULL payload → NULL
     pairs = (
-        preference_pairs(spark, sf_dir, fmt=fmt)
+        preference_pairs(spark, sf_dir, fmt=_format_score())
         # observed-pairs filter: a NULL payload has no format to audit
         .filter(
             F.col("fmt_chosen").isNotNull()
@@ -1124,7 +1131,7 @@ def eval_confound_consensus(spark: SparkSession, sf_dir: str) -> DataFrame:
         never ties — chosen and rejected are distinct events;
       * F — format: 'W' if the chosen payload scores higher on the
         three structural markers (opens '{'/'[', contains '":',
-        matches [0-9][0-9] — eval_format_bias's exact expressions),
+        matches [0-9][0-9] — the _format_score eval_format_bias uses),
         'L'/'T'/'N' as for length.
 
     Output: one row per consensus PATTERN (the 3-char L‖P‖F string,
@@ -1169,14 +1176,8 @@ def _confound_pair_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     cohort and top-k's it.  Semantics are verbatim the r13 consensus body
     (that docstring carries the contract); only the final projection
     moved into the callers."""
-    score = (
-        F.when(F.substring("props", 1, 1).isin("{", "["), 1).otherwise(0)
-        + F.when(F.instr("props", '":') > 0, 1).otherwise(0)
-        + F.when(F.col("props").rlike("[0-9][0-9]"), 1).otherwise(0)
-    )
-    fmt = F.when(F.col("props").isNotNull(), score)  # NULL payload → NULL
     pairs = preference_pairs(
-        spark, sf_dir, position=True, len=F.length("props"), fmt=fmt
+        spark, sf_dir, position=True, len=F.length("props"), fmt=_format_score()
     )
 
     def flag(c, r):

@@ -81,6 +81,17 @@ RUNTIME_CONFS: dict[str, str] = {
     # TimestampType (session tz = UTC, so wall-clock values are unchanged)
     # to keep one timestamp type across the whole surface and both engines.
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    # Rows per cached column batch (Spark default 10,000).  A task scanning a
+    # cached relation checks for a kill only between batches (the
+    # InterruptibleIterator over the cached block); the codegen loop inside a
+    # batch never does, so a cancelled scan first finishes its batch.  Fixed
+    # when a cache is built.  Sweep of cancel teardown on a persisted
+    # 300k-row generated table (BENCH.md, "Cached batch size and cancel
+    # teardown by operator class"): p50 19-24 ms at 10,000 rows, 10-12 ms at
+    # 1,000, within 2 ms of that below it while the cache grows up to 3 %;
+    # at 1,000 the uncancelled scan time is unchanged within noise and the
+    # cache is 0.6 % larger.
+    "spark.sql.inMemoryColumnarStorage.batchSize": "1000",
 }
 
 
@@ -105,7 +116,7 @@ def _quiet_bounded_window_warnings(spark: SparkSession) -> None:
 
 
 # Sessions already tuned this process (io.table calls tune() on EVERY read;
-# re-applying 13 confs + a log4j call is ~5 ms of py4j chatter per call —
+# re-applying RUNTIME_CONFS + a log4j call is ~5 ms of py4j chatter per call —
 # measurable across a 200-query bench).  WeakSet so a closed session's entry
 # does not pin the object; a brand-new session (new object) is re-tuned.
 _TUNED: "weakref.WeakSet[SparkSession]" = weakref.WeakSet()

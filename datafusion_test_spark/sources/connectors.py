@@ -732,6 +732,17 @@ def _bloom_probe(spark: SparkSession, out_dir: str, column: str,
     binary = spark._jvm.org.apache.parquet.io.api.Binary
     rg_total = rg_bloom = miss_cells = miss_excluded = 0
     file_hits: list[list[bool]] = []
+    # key hashes per hash strategy, each key hashed once by the first bloom
+    # of that strategy (parquet-mr writes XXH64 only); each cell then pays
+    # one findHash round trip
+    hashes: dict[str, dict[str, int]] = {}
+
+    def key_hashes(bf) -> dict[str, int]:
+        strategy = bf.getHashStrategy().toString()
+        if strategy not in hashes:
+            hashes[strategy] = {v: bf.hash(binary.fromString(v)) for v in hits + misses}
+        return hashes[strategy]
+
     for _, reader, groups in _footers(spark, out_dir, column):
         blooms = []
         for block, chunk in groups:
@@ -740,17 +751,15 @@ def _bloom_probe(spark: SparkSession, out_dir: str, column: str,
                 continue
             bf = reader.getBloomFilterDataReader(block).readBloomFilter(chunk)
             if bf is not None:
-                blooms.append(bf)
+                blooms.append((bf, key_hashes(bf)))
         rg_bloom += len(blooms)
         for v in misses:
-            for bf in blooms:
+            for bf, h in blooms:
                 miss_cells += 1
-                if not bf.findHash(bf.hash(binary.fromString(v))):
+                if not bf.findHash(h[v]):
                     miss_excluded += 1
         file_hits.append([
-            not blooms
-            or any(bf.findHash(bf.hash(binary.fromString(v))) for bf in blooms)
-            for v in hits
+            not blooms or any(bf.findHash(h[v]) for bf, h in blooms) for v in hits
         ])
     return rg_total, rg_bloom, miss_cells, miss_excluded, file_hits
 

@@ -191,3 +191,35 @@ def test_tune_repins_when_sentinel_probe_raises(spark, monkeypatch):
     finally:
         for k, v in RUNTIME_CONFS.items():
             spark.conf.set(k, v)
+
+
+def _cached_batches(spark, n_rows: int) -> int:
+    """Column batches the cache of an ``n_rows``-row, one-partition frame
+    holds once built (the count is fixed by the batch row count at build)."""
+    df = spark.range(0, n_rows, 1, 1).selectExpr("id AS a", "id * 2 AS b").persist()
+    try:
+        df.count()
+        cached = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(df._jdf)
+        return cached.get().cachedRepresentation().cacheBuilder().cachedColumnBuffers().count()
+    finally:
+        df.unpersist()
+
+
+def test_cached_batch_rows_pinned(spark):
+    """A cached scan checks for a kill only between cached batches, so the
+    batch row count bounds how long a cancelled scan runs on.  Every cache
+    gets the pinned count: on a session from get_session, and on a
+    driver-provided session at Spark's default once tune() has run."""
+    from datafusion_test_spark.session import RUNTIME_CONFS, tune
+
+    key = "spark.sql.inMemoryColumnarStorage.batchSize"
+    pinned = int(RUNTIME_CONFS[key])
+    n = 25_000
+    assert pinned < 10_000  # smaller than Spark's default
+    assert _cached_batches(spark, n) == -(-n // pinned)
+
+    driver = spark.newSession()
+    driver.conf.unset(key)
+    assert _cached_batches(driver, n) == -(-n // 10_000)  # Spark's default
+    tune(driver)
+    assert _cached_batches(driver, n) == -(-n // pinned)
