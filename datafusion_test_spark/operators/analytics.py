@@ -632,7 +632,11 @@ def _basket_pairs(li: DataFrame):
     a NULL-key group (degree consumers count those rows exactly like the
     old distinct did); pairs = (a, b) with a < b from non-NULL orders
     only (the self-join's o = o condition never matched NULL keys, so the
-    NULL group must not pair with itself here either).
+    NULL group must not pair with itself here either).  A NULL part key is
+    dropped by ``collect_set``: its order keeps its basket (an empty one
+    when every part is NULL) but the NULL part yields no pair and no degree
+    entry, where the old distinct-(o, p) shape kept an (o, NULL) row that
+    degree consumers counted.  TPC-H declares ``l_partkey`` NOT NULL.
     """
     baskets = (
         li.select(

@@ -42,6 +42,24 @@ cache dir it was made in.  Every fallback is
 automatic and recorded in :func:`cds_state`.  A session the driver provides,
 or a process whose gateway is already up, gets no new flag and no
 environment change.
+
+Codegen cache.  Spark compiles each distinct generated class (whole-stage
+codegen, projections, orderings) once through Janino and keeps it in one
+JVM-wide LRU cache of ``spark.sql.codegen.cache.maxEntries`` classes, 100 by
+default.  A query whose classes were evicted compiles them again and loses
+the machine code HotSpot had JIT-compiled for them.  Traffic on the 4-core VM,
+counted with ``CodegenMetrics.METRIC_COMPILATION_TIME`` and
+``CodeGenerator.compileTime``: a perfbench ``curation`` pass compiles ~310
+distinct classes, so at 100 every measured pass compiled 311-321 classes
+again (2.0-2.5 s of an 8-12 s pass).  The ``bench.py`` run at sf0.1 compiles
+3,169 distinct classes in its sf0.001 warm-up and 233 more in its timed
+headline group, 3,402 with an unbounded cache; at 100 it compiled 9,690, 4,897
+of them (49 s) inside the timed group.  An LRU smaller than a repeating scan
+misses nearly every entry, so ``get_session`` pins the next power of two
+above that set, 4,096, where the run compiles 3,403 (240 in the timed group)
+and ends with 97 MB of Metaspace against 70 MB at 100.  The conf is static:
+a driver-provided session keeps its own value (Spark's 100 unless the driver
+sets one), and ``tune()`` cannot change it.
 """
 
 from __future__ import annotations
@@ -360,6 +378,13 @@ def get_session(app_name: str = "datafusion_test_spark") -> SparkSession:
         # session keeps its own setting (static conf — tune() cannot and
         # does not touch it).
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # STATIC conf: classes in the JVM-wide LRU cache of compiled
+        # generated code (Spark default 100), sized from measured traffic:
+        # a curation pass compiles ~310 distinct classes and the sf0.1
+        # bench.py run 3,402, so at 100 every pass recompiled them through
+        # Janino (module docstring, "Codegen cache").  A driver-provided
+        # session keeps its own value: tune() cannot set a static conf.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

@@ -1313,6 +1313,25 @@ def test_graph_common_neighbors_matches_bruteforce(spark, sf_dir):
         assert 0.0 < r["jaccard"] <= 1.0
 
 
+def test_basket_pairs_null_part_semantics(spark):
+    """collect_set drops a NULL part key: its order keeps a basket (empty
+    when every part is NULL), and the NULL part yields no pair and no degree
+    entry.  A NULL order keeps one basket of its own and pairs nothing."""
+    from datafusion_test_spark.operators.analytics import _basket_pairs
+
+    li = spark.createDataFrame(
+        [(1, 10), (1, None), (1, 20), (2, None), (None, 30), (None, 40)],
+        "l_orderkey bigint, l_partkey bigint",
+    )
+    baskets, pairs = _basket_pairs(li)
+    assert {r["o"]: r["ps"] for r in baskets.collect()} == {
+        1: [10, 20], 2: [], None: [30, 40],
+    }
+    assert [(r["a"], r["b"]) for r in pairs.collect()] == [(10, 20)]
+    deg = baskets.select(F.explode("ps").alias("p")).groupBy("p").count()
+    assert {r["p"] for r in deg.collect()} == {10, 20, 30, 40}
+
+
 def test_dq_audit_clean_testdata(spark, sf_dir):
     """The synthetic warehouse must audit clean: no orphans, no range
     violations; null-rate equals a direct count."""

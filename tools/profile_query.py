@@ -10,14 +10,15 @@ that stage runs in the bytecode interpreter), and optionally dump
 ``explain("formatted")``.  ``cds`` says how the driver JVM started
 (``session.cds_state()``: ``use``, ``dump`` or ``off:<reason>``), since a
 start without the class-data-sharing archive runs its first queries colder.
+``compiles``/``compile_ms``: Janino compiles in the final rep's exec phase.
 
 Usage:
     python tools/profile_query.py [--reps N] [--explain DIR] [--sf DIR] name ...
     python tools/profile_query.py --top 25          # 25 slowest from the last pair record
 
 Prints one JSON line per query:
-    {"name": ..., "build_sec": [...], "exec_sec": [...], "jobs_build": n,
-     "jobs_exec": n, "total_best": s, "max_method_bytes": n, "cds": state}
+    {"name": ..., "build_sec": [...], "exec_sec": [...], "jobs_build": n, "jobs_exec": n,
+     "total_best": s, "max_method_bytes": n, "compiles": n, "compile_ms": ms, "cds": state}
 """
 
 from __future__ import annotations
@@ -42,6 +43,12 @@ def _jobs_in_group(sc, group: str) -> int:
         return -1
 
 
+def _codegen(jvm) -> tuple[int, int]:
+    """(Janino compilations, their nanoseconds) so far in this JVM."""
+    return (jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount(),
+            jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime())
+
+
 def profile(spark, name, fn, sf_dir, reps, explain_dir=None):
     sc = spark.sparkContext
     builds, execs, jobs_b, jobs_e = [], [], -1, -1
@@ -51,10 +58,12 @@ def profile(spark, name, fn, sf_dir, reps, explain_dir=None):
         t0 = time.perf_counter()
         df = fn(spark, sf_dir)
         t1 = time.perf_counter()
+        cg0 = _codegen(spark._jvm)
         ge = f"prof-{name}-exec-{i}"
         sc.setJobGroup(ge, name)
         df.write.mode("overwrite").format("noop").save()
         t2 = time.perf_counter()
+        cg = [b - a for a, b in zip(cg0, _codegen(spark._jvm))]
         builds.append(round(t1 - t0, 3))
         execs.append(round(t2 - t1, 3))
         # job counts are per-rep (each rep uses fresh group ids); report the
@@ -77,6 +86,7 @@ def profile(spark, name, fn, sf_dir, reps, explain_dir=None):
         "jobs_exec": jobs_e,
         "total_best": round(min(b + e for b, e in zip(builds, execs)), 3),
         "max_method_bytes": method_bytes,
+        "compiles": cg[0], "compile_ms": round(cg[1] / 1e6, 1),
     }
 
 
