@@ -34,22 +34,31 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # re-infers the schema from footers on EVERY call — measured 97 ms/call
 # warm vs 24 ms with an explicit schema (r14, guide §1: per-query driver
 # overhead multiplies across a 200-query bench making ~600 table() calls).
-# Same immutability contract as similarity._ANN_CACHE: parquet files under
-# a path are immutable for the application's lifetime; a caller that
-# rewrites a corpus in place must call clear_schema_cache().  This caches
-# METADATA only (a StructType), never rows or results.
+# Immutability contract: parquet files under a path are immutable for the
+# application's lifetime; a caller that rewrites a corpus in place must
+# call clear_schema_cache().  This caches METADATA only (a StructType),
+# never rows or results.
 _SCHEMA_CACHE: dict = {}
 
 # Finished-plan memo (same key and immutability contract): the DataFrame
 # object returned by table() — a logical plan, never rows.
 _DF_CACHE: dict = {}
 
+# Checkpointed relations that several queries share, built once per
+# (applicationId, sf_dir, name) by memo(): dedup's cluster fixpoint and
+# similarity's twin-corpus IVF/PQ trainings.  Same immutability contract:
+# a caller that rewrites a corpus in place must clear them (the owners'
+# clear_stars_cache / clear_ann_cache); clearing also releases the
+# checkpoint blocks, which accumulate per distinct sf_dir.
+_MEMO: dict = {}
+
 # applicationId the caches were filled under.  A long-lived process that
 # cycles sessions would otherwise accumulate entries for stopped sessions
 # forever, each pinning py4j/JVM-backed objects (ADVICE r14): when table()
-# sees a DIFFERENT applicationId, the previous session's entries are dead
-# weight — evict them all.  Keys still carry the appId, so correctness
-# never depended on this; it is purely a leak bound.
+# or memo() sees a DIFFERENT applicationId, the previous session's entries
+# in all three memos above are dead weight — evict them all.  Keys still
+# carry the appId, so correctness never depended on this; it is purely a
+# leak bound.
 _CACHE_APP: list = [None]
 
 
@@ -57,6 +66,31 @@ def clear_schema_cache() -> None:
     """Drop all memoized reader schemas and table plans (contract above)."""
     _SCHEMA_CACHE.clear()
     _DF_CACHE.clear()
+
+
+def _evict_other_apps(app: str) -> None:
+    if _CACHE_APP[0] != app:
+        if _CACHE_APP[0] is not None:
+            _SCHEMA_CACHE.clear()
+            _DF_CACHE.clear()
+            _MEMO.clear()
+        _CACHE_APP[0] = app
+
+
+def memo(spark: SparkSession, sf_dir: str, name: str, build):
+    """``build()``, computed once per (application, sf_dir, name)."""
+    app = spark.sparkContext.applicationId
+    _evict_other_apps(app)
+    key = (app, sf_dir, name)
+    if key not in _MEMO:
+        _MEMO[key] = build()
+    return _MEMO[key]
+
+
+def clear_memo(*names: str) -> None:
+    """Drop the memo() entries of the given names, for every sf_dir."""
+    for key in [k for k in _MEMO if k[2] in names]:
+        del _MEMO[key]
 
 
 def table(
@@ -81,11 +115,7 @@ def table(
     tune(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
     app = spark.sparkContext.applicationId
-    if _CACHE_APP[0] != app:
-        if _CACHE_APP[0] is not None:
-            _SCHEMA_CACHE.clear()
-            _DF_CACHE.clear()
-        _CACHE_APP[0] = app
+    _evict_other_apps(app)
     key = (app, path)
     if not fresh:
         cached = _DF_CACHE.get(key)

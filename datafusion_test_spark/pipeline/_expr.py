@@ -4,6 +4,14 @@ Everything here is built-in higher-order functions — no Python UDFs — so the
 similarity/dedup operators run JVM-side inside whole-stage codegen.  The
 DuckDB oracle twins fold in the same left-to-right DOUBLE order, making the
 float results bit-identical across engines.
+
+One form per vector expression: the Spark-side helpers (:func:`dot`,
+:func:`norm2`, :func:`cosine`, :func:`l2`, :func:`rh_signature`) return
+Spark SQL text over column names, and a call site parses it once with
+``F.expr``/``selectExpr``.  Built from Column objects, the same tree cost one
+py4j round trip per API call: 186 for a cosine and 807 for an 8-bit
+signature, where one parse costs 3 (tests/test_expr_build.py).  The DuckDB
+twins are the ``sql_*`` functions.
 """
 
 from __future__ import annotations
@@ -12,7 +20,7 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def dot(a: Column, b: Column) -> Column:
+def dot(a: str, b: str) -> str:
     """Σ a[i]·b[i], accumulated in double, left-to-right.
 
     Measured negative result (round 2): unrolling this into 64 explicit
@@ -22,32 +30,34 @@ def dot(a: Column, b: Column) -> Column:
     plan compile time, while the fold walks the UnsafeArrayData once.  Keep
     the fold.
     """
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * "
+        f"CAST(y AS DOUBLE)), 0.0D, (acc, v) -> acc + v)"
     )
 
 
-def norm2(a: Column) -> Column:
+def norm2(a: str) -> str:
     """Σ a[i]², accumulated in double."""
-    return F.aggregate(
-        F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+    return (
+        f"aggregate(transform({a}, x -> CAST(x AS DOUBLE) * "
+        f"CAST(x AS DOUBLE)), 0.0D, (acc, v) -> acc + v)"
     )
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (F.sqrt(norm2(a)) * F.sqrt(norm2(b)))
+def cosine(a: str, b: str) -> str:
+    """dot / (‖a‖·‖b‖).  A pairwise self-join divides :func:`dot` by
+    per-row ``SQRT(norm2)`` columns instead: the same value, with each
+    vector folded once per ROW rather than once per PAIR."""
+    return f"({dot(a, b)} / (SQRT({norm2(a)}) * SQRT({norm2(b)})))"
 
 
-def cosine_prenormed(a: Column, b: Column, nrm_a: Column, nrm_b: Column) -> Column:
-    """Cosine with per-row precomputed norms.  Bit-identical to :func:`cosine`
-    (caching sqrt(norm2(v)) does not change its value) but folds each vector
-    once per ROW instead of once per PAIR — the difference between O(N·d)
-    and O(pairs·d) work in pairwise self-joins."""
-    return dot(a, b) / (nrm_a * nrm_b)
+def l2(a: str, b: str) -> str:
+    """Σ (a[i] − b[i])², accumulated in double, left-to-right."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> "
+        "POWER(CAST(x AS DOUBLE) - CAST(y AS DOUBLE), 2)), "
+        "0.0D, (acc, d) -> acc + d)"
+    )
 
 
 def lsh_bits(n_vectors: int, target_bucket: int = 128, lo: int = 8, hi: int = 24) -> int:
@@ -67,60 +77,23 @@ def lsh_bits(n_vectors: int, target_bucket: int = 128, lo: int = 8, hi: int = 24
     return max(lo, min(hi, math.ceil(math.log2(n_vectors / target_bucket))))
 
 
-def rh_signature(vec: Column, bits: int = 8, dim: int = 64) -> Column:
+def rh_signature(vec: str, bits: int, dim: int) -> str:
     """Random-hyperplane LSH signature (an int in [0, 2^bits)).
 
     Hyperplane j has ±1 components derived from xxhash64(j, dim-index) —
     deterministic, no stored model to ship; bit j = sign(v·h_j).  Shared by
     sim_ann_lsh (query-time bucket probe) and dedup_embed_lsh (pairwise
-    bucket blocking), so the two operators see the same bucketing.
+    bucket blocking), so the two operators see the same bucketing.  ``dim``
+    must be the vector length: the fold zips against sequence(0, dim-1),
+    and a mismatch null-pads it, sending every vector to bucket 0 (one
+    quadratic bucket) with no error pointing at the cause.
     """
-    def _plane_component(j: int):
-        # closure factory: PySpark derives lambda arity from the signature,
-        # so j must be captured, not passed as a defaulted third arg
-        return lambda x, i: x.cast("double") * (
-            (F.pmod(F.xxhash64(F.lit(j), i), F.lit(2)) * 2 - 1).cast("double")
-        )
-
-    out = None
-    for j in range(bits):
-        comp = F.aggregate(
-            F.zip_with(vec, F.sequence(F.lit(0), F.lit(dim - 1)), _plane_component(j)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bit = F.when(comp > 0, F.lit(1 << j)).otherwise(F.lit(0))
-        out = bit if out is None else out + bit
-    return out
-
-
-def spark_dot_sql(a: str, b: str) -> str:
-    """Spark-SQL-text form of :func:`dot` — parses to the IDENTICAL
-    expression tree (same zip_with/aggregate nodes, same casts, same fold
-    order).  Exists because building deep HOF Columns through py4j costs
-    ~1 ms per API call; a plan that embeds this fold k×dim times (the IVF
-    argmax) spends more driver time CONSTRUCTING the expression than
-    executing it (r14 measurement: 1.47 s build vs 1.35 s exec for the
-    2-round Lloyd plan).  One F.expr parse is one py4j call."""
-    return (
-        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * "
-        f"CAST(y AS DOUBLE)), 0.0D, (acc, v) -> acc + v)"
-    )
-
-
-def spark_norm2_sql(a: str) -> str:
-    """Spark-SQL-text form of :func:`norm2` (see spark_dot_sql)."""
-    return (
-        f"aggregate(transform({a}, x -> CAST(x AS DOUBLE) * "
-        f"CAST(x AS DOUBLE)), 0.0D, (acc, v) -> acc + v)"
-    )
-
-
-def spark_cosine_sql(a: str, b: str) -> str:
-    """Spark-SQL-text form of :func:`cosine` (see spark_dot_sql)."""
-    return (
-        f"({spark_dot_sql(a, b)} / "
-        f"(SQRT({spark_norm2_sql(a)}) * SQRT({spark_norm2_sql(b)})))"
+    return " + ".join(
+        f"(CASE WHEN aggregate(zip_with({vec}, sequence(0, {dim - 1}), "
+        f"(x, i) -> CAST(x AS DOUBLE) * "
+        f"CAST(pmod(xxhash64({j}, i), 2) * 2 - 1 AS DOUBLE)), "
+        f"0.0D, (acc, v) -> acc + v) > 0 THEN {1 << j} ELSE 0 END)"
+        for j in range(bits)
     )
 
 

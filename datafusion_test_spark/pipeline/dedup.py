@@ -42,11 +42,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..io import parallel, table
+from ..io import clear_memo, memo, parallel, table
 from ._expr import (
-    cosine_prenormed,
+    dot,
+    lsh_bits,
     md5_capped_sample,
     norm2,
+    rh_signature,
     shingles_of_words,
     sql_cosine,
     sql_md5_capped,
@@ -479,7 +481,7 @@ def simhash_pairs(
     # band self-join dominates, not the vote aggregation.
     # The counts, the 64-term signature fold, and the 4 band structs are
     # built as SQL STRINGS parsed in ONE py4j call each (r15; the
-    # _expr.spark_*_sql discipline from r14's IVF work): the Column-object
+    # SQL-text discipline of pipeline._expr): the Column-object
     # loop cost ~1.3 s of py4j chatter per build — more than the query's
     # execution.  Counts are never NULL and the fold ORs disjoint bits, so
     # the aggregate's output method carries no null checks and no
@@ -566,19 +568,14 @@ def dedup_embed_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _drop_hot(
         table(spark, sf_dir, "embeddings").select("vec_id", "label", "embedding"),
         ["label"],
-    ).withColumn("nrm", F.sqrt(norm2(F.col("embedding"))))
+    ).withColumn("nrm", F.expr(f"SQRT({norm2('embedding')})"))
     # Spread the PROBE side when the scan is under-parallel (r14, guide
     # §2.5): the pair loop — |block|² interpreted-HOF cosines — runs on
     # the stream side of the join, and a single-split local file put ALL
     # of it on one task (plan audit: 4.5 s single-core).  On a real lake
     # the scan has thousands of splits and this is a no-op check.
     a, b = parallel(spark, e).alias("a"), e.alias("b")
-    cos = cosine_prenormed(
-        F.col("a.embedding"),
-        F.col("b.embedding"),
-        F.col("a.nrm"),
-        F.col("b.nrm"),
-    )
+    cos = F.expr(f"{dot('a.embedding', 'b.embedding')} / (a.nrm * b.nrm)")
     # the threshold lives in the JOIN condition, AFTER the cheap id test:
     # a post-join .filter() gets ANDed in FRONT of the residual condition,
     # making every candidate pair pay the O(d) cosine fold before the
@@ -616,25 +613,22 @@ def embed_lsh_pairs(
     Pass ``bits`` when the caller can count a cheaper base relation (a bare
     parquet count is footer-metadata only); the fallback count here runs
     the whole ``vecs`` lineage."""
-    from ._expr import lsh_bits, rh_signature
     from .similarity import _DIM
 
     if bits is None:
         bits = lsh_bits(vecs.count())
-    # a NULL embedding has no hyperplane signature (rh_signature folds to
-    # a NULL bucket that equals nothing) — it cannot participate in
-    # similarity, so drop it BEFORE bucketing; its ids then fall out of
-    # the `alive` set and planted pairs over it are counted as
-    # suppressed-by-construction (nulls degenerate corpus, round 6)
+    # a NULL embedding has no hyperplane signature (every fold of
+    # rh_signature is NULL, so all of them would share bucket 0) — it
+    # cannot participate in similarity, so drop it BEFORE bucketing; its
+    # ids then fall out of the `alive` set and planted pairs over it are
+    # counted as suppressed-by-construction (nulls degenerate corpus,
+    # round 6)
     vecs = vecs.filter(F.col("embedding").isNotNull())
-    # dim passed explicitly: rh_signature zip_withs against sequence(0,dim-1),
-    # and a mismatch would null-pad the fold, collapsing every vector into
-    # bucket 0 (one quadratic bucket) with no error pointing at the cause.
     e = vecs.select(
         "vec_id",
         "embedding",
-        rh_signature(F.col("embedding"), bits=bits, dim=_DIM).alias("bucket"),
-        F.sqrt(norm2(F.col("embedding"))).alias("nrm"),
+        F.expr(rh_signature("embedding", bits, _DIM)).alias("bucket"),
+        F.expr(f"SQRT({norm2('embedding')})").alias("nrm"),
     )
     # post-cap persist: see minhash_pairs — 3 consumers read this cache
     capped = _drop_hot(e, ["bucket"]).persist(StorageLevel.MEMORY_AND_DISK)
@@ -648,13 +642,7 @@ def embed_lsh_pairs(
             & (F.col("a.vec_id") < F.col("b.vec_id")),
         )
         .withColumn(
-            "cos",
-            cosine_prenormed(
-                F.col("a.embedding"),
-                F.col("b.embedding"),
-                F.col("a.nrm"),
-                F.col("b.nrm"),
-            ),
+            "cos", F.expr(f"{dot('a.embedding', 'b.embedding')} / (a.nrm * b.nrm)")
         )
         .filter(F.col("cos") >= 0.95)
         .select(
@@ -682,8 +670,6 @@ def dedup_embed_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     aug = vecs.unionByName(planted)
     # bits sized from the bare base scan (footer-metadata count), not the
     # planted-union lineage — avoids computing the plant pipeline twice
-    from ._expr import lsh_bits
-
     bits = lsh_bits(vecs.count() + 50)
     cand, alive = embed_lsh_pairs(spark, aug, bits=bits, with_alive=True)
     cand = cand.select("vec_a", "vec_b")
@@ -738,18 +724,9 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Memo contract: keyed by (applicationId, sf_dir); assumes the parquet
-# files under sf_dir are IMMUTABLE for the application's lifetime.  A
-# caller that rewrites a corpus in place must call clear_stars_cache()
-# or the stale checkpointed fixpoint is silently served; long
-# multi-corpus sessions can clear between corpora to release the
-# accumulated checkpoint blocks.
-_STARS_CACHE: dict = {}
-
-
 def clear_stars_cache() -> None:
-    """Drop the memoized cluster fixpoints (see contract above)."""
-    _STARS_CACHE.clear()
+    """Drop the memoized cluster fixpoints (contract: io._MEMO)."""
+    clear_memo("stars")
 
 
 def _dup_stars(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -759,17 +736,18 @@ def _dup_stars(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup_resolve (keep-list), er_survivorship (golden records) and
     dedup_soft_weights (loss reweighting).
 
-    The fixpoint is memoized per (application, sf_dir): the result is an
-    eagerly localCheckpointed relation, so consumers within one session
-    reuse the stored blocks instead of re-running the contraction loop —
-    exactly how a production pipeline computes the cluster map once and
-    feeds every downstream stage.  Cache size is bounded by the dup-star
-    edge set (a few % of the corpus) per distinct sf_dir.
+    The fixpoint is memoized per (application, sf_dir) (io.memo): the
+    result is an eagerly localCheckpointed relation, so consumers within
+    one session reuse the stored blocks instead of re-running the
+    contraction loop — exactly how a production pipeline computes the
+    cluster map once and feeds every downstream stage.  Cache size is
+    bounded by the dup-star edge set (a few % of the corpus) per distinct
+    sf_dir.
     """
-    key = (spark.sparkContext.applicationId, sf_dir)
-    cached = _STARS_CACHE.get(key)
-    if cached is not None:
-        return cached
+    return memo(spark, sf_dir, "stars", lambda: _build_stars(spark, sf_dir))
+
+
+def _build_stars(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents").select("doc_id", "text")
     w = Window.partitionBy("text")
     exact = (
@@ -793,9 +771,7 @@ def _dup_stars(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.sparkContext.defaultParallelism,
         )
     )
-    stars = _star_contract(edges, par)
-    _STARS_CACHE[key] = stars
-    return stars
+    return _star_contract(edges, par)
 
 
 def _star_contract(edges: DataFrame, par: int) -> DataFrame:

@@ -296,7 +296,7 @@ def mm_clip_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: one equi-join on pair_id (both sides derive from the same scan;
     at 100 TB image and caption embedding tables are bucketed on pair_id
-    so the join is shuffle-free), cosine folded JVM-side (pipeline._expr),
+    so the join is shuffle-free), cosine folded JVM-side (_expr.cosine),
     gate evaluated on the UNROUNDED cosine.  Emits every pair with its
     kept flag rather than filtering, so the driver verifies both sides of
     the gate.
@@ -314,7 +314,7 @@ def mm_clip_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("txt_id"),
         F.col("embedding").alias("txt_vec"),
     )
-    cos = cosine(F.col("img_vec"), F.col("txt_vec"))
+    cos = F.expr(cosine("img_vec", "txt_vec"))
     return (
         img.join(txt, "pair_id")
         .select(

@@ -29,8 +29,8 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from .._util import sql_half_up
-from ..io import parallel, table
-from ._expr import cosine, cosine_prenormed, norm2, sql_cosine
+from ..io import clear_memo, memo, parallel, table
+from ._expr import cosine, dot, l2, lsh_bits, norm2, rh_signature, sql_cosine
 
 _DIM = 64
 # sim_pairwise_topk's hot-block bound (VERDICT r13 item 5): at most this
@@ -60,7 +60,7 @@ def sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = _query_vec(e)
     return (
         e.crossJoin(q)
-        .withColumn("cos", cosine(F.col("embedding"), F.col("qvec")))
+        .withColumn("cos", F.expr(cosine("embedding", "qvec")))
         .select("vec_id", "label", F.round("cos", 4).alias("cos_sim"))
         .orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
         .limit(20)
@@ -91,7 +91,7 @@ def sim_pairwise_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         "label",
         "embedding",
-        F.sqrt(norm2(F.col("embedding"))).alias("nrm"),
+        F.expr(f"SQRT({norm2('embedding')})").alias("nrm"),
     )
     w_blk = Window.partitionBy("label").orderBy(
         F.md5(F.col("vec_id").cast("string")), "vec_id"
@@ -112,13 +112,7 @@ def sim_pairwise_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a.vec_id").alias("vec_a"),
             F.col("b.vec_id").alias("vec_b"),
             F.round(
-                cosine_prenormed(
-                    F.col("a.embedding"),
-                    F.col("b.embedding"),
-                    F.col("a.nrm"),
-                    F.col("b.nrm"),
-                ),
-                4,
+                F.expr(f"{dot('a.embedding', 'b.embedding')} / (a.nrm * b.nrm)"), 4
             ).alias("cos_sim"),
         )
         .orderBy(F.col("cos_sim").desc(), F.col("vec_a"), F.col("vec_b"))
@@ -158,7 +152,6 @@ def sim_pairwise_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     detection in both engines (float→shortest-string is injective);
     scaled-collinear distinct vectors remain out of scope, as before.
     """
-    from ._expr import lsh_bits, rh_signature
     from .dedup import _PLANT_OFFSET, _drop_hot
 
     e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding").filter(F.col("embedding").isNotNull())
@@ -188,8 +181,8 @@ def sim_pairwise_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             "embedding",
-            rh_signature(F.col("embedding"), bits=bits, dim=_DIM).alias("bucket"),
-            F.sqrt(norm2(F.col("embedding"))).alias("nrm"),
+            F.expr(rh_signature("embedding", bits, _DIM)).alias("bucket"),
+            F.expr(f"SQRT({norm2('embedding')})").alias("nrm"),
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
@@ -207,13 +200,7 @@ def sim_pairwise_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a.vec_id").alias("vec_a"),
             F.col("b.vec_id").alias("vec_b"),
             F.round(
-                cosine_prenormed(
-                    F.col("a.embedding"),
-                    F.col("b.embedding"),
-                    F.col("a.nrm"),
-                    F.col("b.nrm"),
-                ),
-                4,
+                F.expr(f"{dot('a.embedding', 'b.embedding')} / (a.nrm * b.nrm)"), 4
             ).alias("cos_sim"),
         )
         .orderBy(F.col("cos_sim").desc(), "vec_a", "vec_b")
@@ -233,13 +220,9 @@ def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     within the query's probed buckets.  Recall < 1 by design; pytest checks
     bucket containment and overlap with the exact top-k.
     """
-    from ._expr import lsh_bits, rh_signature
-
     e = table(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())
     bits = lsh_bits(e.count())
-    sigd = e.withColumn(
-        "bucket", rh_signature(F.col("embedding"), bits=bits, dim=_DIM)
-    )
+    sigd = e.withColumn("bucket", F.expr(rh_signature("embedding", bits, _DIM)))
     # Multiprobe: search the query's bucket plus all Hamming-distance-1
     # neighbor buckets (bits+1 probes of 2^bits) — the standard recall/cost
     # knob: a vector whose signature differs by one marginal hyperplane is
@@ -251,15 +234,16 @@ def ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             F.col("embedding").alias("qvec"),
-            F.array(
-                F.col("bucket"),
-                *[F.col("bucket").bitwiseXOR(F.lit(1 << j)) for j in range(bits)],
+            F.expr(
+                "array(bucket, {})".format(
+                    ", ".join(f"bucket ^ {1 << j}" for j in range(bits))
+                )
             ).alias("probes"),
         )
     )
     return (
         sigd.join(F.broadcast(q), F.expr("array_contains(probes, bucket)"))
-        .withColumn("cos", cosine(F.col("embedding"), F.col("qvec")))
+        .withColumn("cos", F.expr(cosine("embedding", "qvec")))
         .select("vec_id", "label", "bucket", F.round("cos", 4).alias("cos_sim"))
         .orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
         .limit(20)
@@ -304,15 +288,12 @@ def _ivf_assign(vecs: DataFrame, cent: DataFrame, carry: tuple = ()) -> DataFram
     the smallest cid — matching the probe ordering in sim_ivf so the
     assigned cell is always probed.  ``carry`` forwards extra columns
     (e.g. the embedding) so consumers need no join back onto ``vecs``."""
-    from ._expr import spark_cosine_sql
-
     packed = F.broadcast(
         cent.agg(F.collect_list(F.struct("cid", "cvec")).alias("cents"))
     )
-    # one F.expr parse instead of ~k·d py4j Column calls (see spark_dot_sql)
     best_cid = F.expr(
         "-array_max(transform(cents, c -> named_struct("
-        f"'cos', {spark_cosine_sql('embedding', 'c.cvec')}, "
+        f"'cos', {cosine('embedding', 'c.cvec')}, "
         "'ncid', -c.cid))).ncid"
     )
     return vecs.crossJoin(packed).select(
@@ -320,31 +301,57 @@ def _ivf_assign(vecs: DataFrame, cent: DataFrame, carry: tuple = ()) -> DataFram
     )
 
 
-def ivf_centroids(
-    spark: SparkSession, vecs: DataFrame, k: int = 16, iters: int = 2
+_LLOYD_ROUNDS = 2  # Lloyd rounds of every trainer (IVF and PQ)
+_IVF_K = 16  # IVF coarse cells
+
+
+def _lloyd(
+    points: DataFrame, cent: DataFrame, assign, keys: tuple, vec: str, dim: int
 ) -> DataFrame:
-    """IVF coarse quantizer: k spherical-k-means centroids over (vec_id,
-    embedding), trained with `iters` Lloyd rounds expressed as DataFrame
-    ops — MAP-ONLY assignment (broadcast packed centroids + HOF argmax,
-    O(N·k) compute / ZERO shuffle — see _ivf_assign) and the mean update
-    as one map-side-combined groupBy(cid) with _DIM element-wise avg
-    aggregates (k partial rows per task through one Exchange).  Seeds are
-    the k hash-lowest vec_ids: deterministic and scan-cheap
-    (TakeOrderedAndProject), no stored model.  The whole training is ONE
-    lazy plan (rounds nest through broadcast subqueries, linear depth)
-    with a single eager localCheckpoint at the end — cent has multiple
-    consumers in every caller — and NOT persisted: a persisted plan's
-    shuffles bypass AQE partition coalescing on a vanilla session
-    (canChangeCachedPlanOutputPartitioning defaults false), which ran the
-    k-row aggregates as 200-task stages in the driver's environment (r3:
-    4.4 s driver vs 1.2 s tuned-session for sim_ivf).  At 100 TB: train
-    on a sample (centroids need statistical, not total, coverage), then
-    one final assignment pass writes the cell id as a partition/bucket
-    column — every later query is a cell-pruned scan.
+    """_LLOYD_ROUNDS Lloyd rounds from the seed centroids ``cent`` (keys...,
+    cvec): ``assign(points, cent, carry=(vec,))`` labels each point MAP-ONLY
+    with its nearest centroid, carrying the ``dim``-long vector column
+    ``vec`` (no join back onto ``points``), and the mean update is ONE
+    map-side-combined groupBy(keys) with ``dim`` element-wise avg
+    aggregates — one Exchange of partial-agg rows per round.  The pre-r14
+    shape paid per round an assignment shuffle, a join, a posexplode, two
+    more exchanges and an eager checkpoint job.
+
+    The rounds are ONE lazy plan (they nest through broadcast subqueries,
+    linear depth) with a single eager localCheckpoint at the end — every
+    caller reads the centroids more than once — and NOT persisted: a
+    persisted plan's shuffles bypass AQE partition coalescing on a vanilla
+    session (canChangeCachedPlanOutputPartitioning defaults false), which
+    ran the tiny per-round aggregates as 200-task stages in the driver's
+    environment (r3: 4.4 s driver vs 1.2 s tuned-session for sim_ivf)."""
+    mean_arr = "array({})".format(
+        ", ".join(
+            f"avg(CAST(element_at({vec}, {d + 1}) AS DOUBLE))" for d in range(dim)
+        )
+    )
+    for _ in range(_LLOYD_ROUNDS):
+        cent = (
+            assign(points, cent, carry=(vec,))
+            .groupBy(*keys)
+            .agg(F.expr(mean_arr).alias("cvec"))
+            .coalesce(1)  # one row per centroid
+        )
+    return cent.localCheckpoint(eager=True)
+
+
+def ivf_centroids(vecs: DataFrame) -> DataFrame:
+    """IVF coarse quantizer: _IVF_K spherical-k-means centroids over
+    (vec_id, embedding), trained by :func:`_lloyd` with cosine assignment
+    (broadcast packed centroids + HOF argmax, O(N·k) compute / ZERO
+    shuffle — see _ivf_assign).  Seeds are the k hash-lowest vec_ids:
+    deterministic and scan-cheap (TakeOrderedAndProject), no stored model.
+    At 100 TB: train on a sample (centroids need statistical, not total,
+    coverage), then one final assignment pass writes the cell id as a
+    partition/bucket column — every later query is a cell-pruned scan.
     """
     cent = (
         vecs.orderBy(F.xxhash64("vec_id"))
-        .limit(k)
+        .limit(_IVF_K)
         .select(
             F.row_number()
             .over(Window.orderBy(F.xxhash64("vec_id")))
@@ -352,28 +359,17 @@ def ivf_centroids(
             F.col("embedding").alias("cvec"),
         )
     )
-    for _ in range(iters):
-        # map-only assignment carrying the embedding (no join back onto
-        # vecs), then the mean update as ONE map-side-combined groupBy(cid)
-        # with _DIM element-wise avg aggregates — the pre-r14 shape paid
-        # per round: an N-row assignment shuffle, an N-row join, a
-        # posexplode to N×d rows, TWO more exchanges ((cid,pos) then cid)
-        # and an eager localCheckpoint job.  The whole training is now one
-        # lazy plan: per round one Exchange of k partial-agg rows, one
-        # final checkpoint (cent has multiple consumers in every caller).
-        assign = _ivf_assign(vecs, cent, carry=("embedding",))
-        mean_arr = "array({})".format(
-            ", ".join(
-                f"avg(CAST(element_at(embedding, {d + 1}) AS DOUBLE))"
-                for d in range(_DIM)
-            )
-        )
-        cent = (
-            assign.groupBy("cid")
-            .agg(F.expr(mean_arr).alias("cvec"))
-            .coalesce(1)  # k rows
-        )
-    return cent.localCheckpoint(eager=True)
+    return _lloyd(vecs, cent, _ivf_assign, ("cid",), "embedding", _DIM)
+
+
+def _ivf(e: DataFrame):
+    """(centroids, assignment) of the IVF coarse quantizer over ``e``.  The
+    assignment carries the embedding, so consumers that need it (the
+    candidate set, the residual build) skip a join back onto ``e`` (r14);
+    cid-only consumers prune the column."""
+    cent = ivf_centroids(e)
+    assign = _ivf_assign(e, cent, carry=("embedding",)).localCheckpoint(eager=True)
+    return cent, assign
 
 
 def sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -400,10 +396,7 @@ def sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # assignment, q, the counts) reads the same blocks (io.parallel
     # policy: skip when the scan is already parallel)
     e = parallel(spark, e).localCheckpoint(eager=True)
-    cent = ivf_centroids(spark, e)
-    # carry the embedding through the map-only assignment so the candidate
-    # set needs no join back onto e (r14: one less exchange per consumer)
-    assign = _ivf_assign(e, cent, carry=("embedding",)).localCheckpoint(eager=True)
+    cent, assign = _ivf(e)
     q = F.broadcast(
         e.join(
             F.broadcast(e.agg(F.min("vec_id").alias("qid"))),
@@ -412,7 +405,7 @@ def sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     probes = (
         cent.crossJoin(q)
-        .select("cid", cosine(F.col("cvec"), F.col("qvec")).alias("qcos"))
+        .select("cid", F.expr(cosine("cvec", "qvec")).alias("qcos"))
         .orderBy(F.col("qcos").desc(), F.col("cid"))
         .limit(2)
         .select("cid")
@@ -421,7 +414,7 @@ def sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     cand = assign.join(F.broadcast(probes), "cid").localCheckpoint(eager=True)
     top1 = (
         cand.crossJoin(q)
-        .withColumn("cos", cosine(F.col("embedding"), F.col("qvec")))
+        .withColumn("cos", F.expr(cosine("embedding", "qvec")))
         .orderBy(F.col("cos").desc(), F.col("vec_id"))
         .limit(1)
     )
@@ -526,14 +519,6 @@ def _pq_subvecs(e: DataFrame) -> DataFrame:
     ).select("vec_id", F.col("t.sub").alias("sub"), F.col("t.sv").alias("sv"))
 
 
-def _pq_l2(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x.cast("double") - y.cast("double")) ** 2),
-        F.lit(0.0),
-        lambda acc, d: acc + d,
-    )
-
-
 def _pq_assign(subvecs: DataFrame, cent: DataFrame, carry: tuple = ()) -> DataFrame:
     """(vec_id, sub[, *carry], cid): nearest codebook entry per subspace,
     computed MAP-ONLY (same r14 rewrite as _ivf_assign): the m*k-row
@@ -548,16 +533,9 @@ def _pq_assign(subvecs: DataFrame, cent: DataFrame, carry: tuple = ()) -> DataFr
     packed = F.broadcast(
         cent.agg(F.collect_list(F.struct("sub", "cid", "cvec")).alias("cents"))
     )
-    # one F.expr parse instead of ~k·d py4j Column calls (see spark_dot_sql);
-    # the l2 fold is the SQL text of _pq_l2 (same zip_with/aggregate/power)
-    l2 = (
-        "aggregate(zip_with(sv, c.cvec, (x, y) -> "
-        "POWER(CAST(x AS DOUBLE) - CAST(y AS DOUBLE), 2)), "
-        "0.0D, (acc, d) -> acc + d)"
-    )
     best_cid = F.expr(
         "array_min(transform(filter(cents, c -> c.sub = sub), "
-        f"c -> named_struct('d2', {l2}, 'cid', c.cid))).cid"
+        f"c -> named_struct('d2', {l2('sv', 'c.cvec')}, 'cid', c.cid))).cid"
     )
     return subvecs.crossJoin(packed).select(
         "vec_id", "sub", *carry, best_cid.alias("cid")
@@ -576,19 +554,9 @@ def _with_planted_twin(base: DataFrame) -> DataFrame:
     return base.unionByName(twin)
 
 
-# Memo contract: entries are keyed by (applicationId, sf_dir) and assume
-# the parquet files under sf_dir are IMMUTABLE for the lifetime of the
-# application — a caller that rewrites a corpus in place (e.g. rebuilding
-# a degenerate-corpus dir mid-session) must call clear_ann_cache() or the
-# stale checkpointed result is silently served.  Checkpoint blocks also
-# accumulate per distinct sf_dir; long sweep sessions over many corpora
-# can clear between corpora to release them.
-_ANN_CACHE: dict = {}
-
-
 def clear_ann_cache() -> None:
-    """Drop all memoized twin/IVF/PQ trainings (see contract above)."""
-    _ANN_CACHE.clear()
+    """Drop all memoized twin/IVF/PQ trainings (contract: io._MEMO)."""
+    clear_memo("twin_e", "twin_ivf", "twin_pq")
 
 
 def _twin_e(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -597,9 +565,8 @@ def _twin_e(spark: SparkSession, sf_dir: str) -> DataFrame:
     embed_pq / sim_ivfpq / embed_pq_residual (same memo pattern as
     dedup._dup_stars: a production pipeline materializes the corpus once
     and feeds every index-build stage from the stored blocks)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "twin_e")
-    e = _ANN_CACHE.get(key)
-    if e is None:
+
+    def build():
         # usable vectors only: a NaN/Inf-poisoned embedding (NULL post
         # io.table guard) is never indexed or twinned (ieee corpus, r7)
         base = table(spark, sf_dir, "embeddings").select("vec_id", "embedding").filter(F.col("embedding").isNotNull())
@@ -607,9 +574,9 @@ def _twin_e(spark: SparkSession, sf_dir: str) -> DataFrame:
         # spread the single-split scan before checkpointing: every PQ/IVF
         # training pass over the twin corpus is HOF-compute-heavy and
         # would otherwise run on the union's 1+1 partitions (r14)
-        e = parallel(spark, e).localCheckpoint(eager=True)
-        _ANN_CACHE[key] = e
-    return e
+        return parallel(spark, e).localCheckpoint(eager=True)
+
+    return memo(spark, sf_dir, "twin_e", build)
 
 
 def _twin_ivf(spark: SparkSession, sf_dir: str):
@@ -619,50 +586,29 @@ def _twin_ivf(spark: SparkSession, sf_dir: str):
     same deterministic seeds, same Lloyd rounds) — at 100 TB this is the
     pay-once index build both queries read, so within a session the second
     consumer reuses the checkpointed carriers instead of re-training."""
-    key = (spark.sparkContext.applicationId, sf_dir, "twin_ivf")
-    v = _ANN_CACHE.get(key)
-    if v is None:
-        e = _twin_e(spark, sf_dir)
-        cent = ivf_centroids(spark, e)
-        # carry the embedding: consumers that need it (embed_pq_residual's
-        # residual build) skip the join back onto e; cid-only consumers
-        # prune the column (r14)
-        assign = _ivf_assign(e, cent, carry=("embedding",)).localCheckpoint(
-            eager=True
-        )
-        v = (cent, assign)
-        _ANN_CACHE[key] = v
-    return v
+    return memo(spark, sf_dir, "twin_ivf", lambda: _ivf(_twin_e(spark, sf_dir)))
 
 
 def _twin_pq(spark: SparkSession, sf_dir: str):
     """(subvecs, codebook, codes) of _pq_train over the twin corpus,
     memoized per (application, sf_dir) — shared by embed_pq (codec
     invariants) and sim_ivfpq (ADC search over the same codebooks)."""
-    key = (spark.sparkContext.applicationId, sf_dir, "twin_pq")
-    v = _ANN_CACHE.get(key)
-    if v is None:
-        v = _pq_train(spark, _twin_e(spark, sf_dir))
-        _ANN_CACHE[key] = v
-    return v
+    return memo(
+        spark, sf_dir, "twin_pq", lambda: _pq_train(spark, _twin_e(spark, sf_dir))
+    )
 
 
 def _pq_train(spark: SparkSession, e: DataFrame):
     """Train the _PQ_M×_PQ_K product-quantization codebooks over a
-    (vec_id, embedding) relation with 2 Lloyd rounds; returns (subvecs,
-    codebook, codes).  All m codebooks train in the SAME DataFrame jobs
-    (subspace is just a grouping column).  Shared by embed_pq (codec
-    invariants) and sim_ivfpq (IVF-PQ search).
+    (vec_id, embedding) relation with :func:`_lloyd` (l2 assignment, see
+    _pq_assign); returns (subvecs, codebook, codes).  All m codebooks train
+    in the SAME DataFrame jobs (subspace is just a grouping column).
+    Shared by embed_pq (codec invariants) and sim_ivfpq (IVF-PQ search).
 
-    Eager localCheckpoint, not persist: (a) the subvector relation is
-    read by every Lloyd round, the codes assignment and the callers'
-    LUTs, so its lineage must truncate once (dedup_clusters lesson),
-    (b) a persisted plan's shuffles bypass AQE partition coalescing on a
-    vanilla session (canChangeCachedPlanOutputPartitioning=false
-    default), which turned the tiny per-round aggregates into 200-task
-    stages.  The rounds themselves are one lazy plan (r14: map-only
-    assignment + single-exchange mean update, see _pq_assign) with a
-    single checkpoint of the final codebook.
+    The subvector relation is eagerly localCheckpointed, not persisted: it
+    is read by every Lloyd round, the codes assignment and the callers'
+    LUTs, so its lineage must truncate once (dedup_clusters lesson), and a
+    persisted plan's shuffles lose AQE coalescing (see _lloyd).
     """
     par = max(2, min(spark.sparkContext.defaultParallelism, 8))
     subvecs = _pq_subvecs(e).repartition(par).localCheckpoint(eager=True)
@@ -679,27 +625,7 @@ def _pq_train(spark: SparkSession, e: DataFrame):
     cent = subvecs.join(F.broadcast(seed_ids), "vec_id").select(
         "sub", "cid", F.col("sv").alias("cvec")
     )
-    for _ in range(2):
-        # map-only assignment carrying the subvector (no join back onto
-        # subvecs), then the mean update as ONE map-side-combined
-        # groupBy(sub, cid) with _PQ_SUB element-wise avg aggregates —
-        # the pre-r14 shape paid per round: an assignment shuffle, a
-        # (vec_id, sub) join, a posexplode and two more exchanges plus an
-        # eager checkpoint job.  One lazy plan, one final checkpoint
-        # (cent is read by the codes assignment and by every caller's LUT).
-        assign = _pq_assign(subvecs, cent, carry=("sv",))
-        mean_arr = "array({})".format(
-            ", ".join(
-                f"avg(CAST(element_at(sv, {d + 1}) AS DOUBLE))"
-                for d in range(_PQ_SUB)
-            )
-        )
-        cent = (
-            assign.groupBy("sub", "cid")
-            .agg(F.expr(mean_arr).alias("cvec"))
-            .coalesce(1)  # m*k = 64 rows
-        )
-    cent = cent.localCheckpoint(eager=True)
+    cent = _lloyd(subvecs, cent, _pq_assign, ("sub", "cid"), "sv", _PQ_SUB)
     codes = _pq_assign(subvecs, cent).localCheckpoint(eager=True)
     return subvecs, cent, codes
 
@@ -740,7 +666,7 @@ def embed_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "sub",
             "cid",
-            _pq_l2(F.col("sv"), F.col("cvec")).cast(_PQ_DEC).alias("d2q"),
+            F.expr(f"CAST({l2('sv', 'cvec')} AS {_PQ_DEC})").alias("d2q"),
         )
     )
     adc = (
@@ -848,7 +774,7 @@ def embed_pq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "sub",
             F.col("cid").alias("code"),
-            _pq_l2(F.col("sv"), F.col("cvec")).cast(_PQ_DEC).alias("d2q"),
+            F.expr(f"CAST({l2('sv', 'cvec')} AS {_PQ_DEC})").alias("d2q"),
         )
     )
     cell_cand = assign.join(F.broadcast(q_cell), F.col("cid") == F.col("qcid"))
@@ -927,10 +853,11 @@ def embed_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "qid",
             "vec_id",
-            cosine(F.col("embedding"), F.col("qvec")).alias("cos_full"),
-            cosine(
-                F.slice("embedding", 1, _MAT_DIM),
-                F.slice("qvec", 1, _MAT_DIM),
+            F.expr(cosine("embedding", "qvec")).alias("cos_full"),
+            F.expr(
+                cosine(
+                    f"slice(embedding, 1, {_MAT_DIM})", f"slice(qvec, 1, {_MAT_DIM})"
+                )
             ).alias("cos_pre"),
         )
     )
@@ -1102,7 +1029,7 @@ def sim_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     probes = (
         cent.crossJoin(q)
-        .select("cid", cosine(F.col("cvec"), F.col("qvec")).alias("qcos"))
+        .select("cid", F.expr(cosine("cvec", "qvec")).alias("qcos"))
         .orderBy(F.col("qcos").desc(), F.col("cid"))
         .limit(2)
         .select("cid")
@@ -1115,7 +1042,7 @@ def sim_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "sub",
             F.col("cid").alias("code"),
-            _pq_l2(F.col("sv"), F.col("cvec")).cast(_PQ_DEC).alias("d2q"),
+            F.expr(f"CAST({l2('sv', 'cvec')} AS {_PQ_DEC})").alias("d2q"),
         )
     )
     cand = assign.join(F.broadcast(probes), "cid").select("vec_id")
@@ -1192,7 +1119,6 @@ def sim_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .._util import scratch_dir
     from ..plans.introspect import plan_string
-    from ._expr import lsh_bits, rh_signature
 
     schema = (
         "query_id bigint, self_is_top boolean, top_cos double, "
@@ -1212,7 +1138,7 @@ def sim_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     # for partitioned writes), instead of one serial task writing all
     # 2^bits directories
     sig = parallel(spark, e).withColumn(
-        "bucket", rh_signature(F.col("embedding"), bits=bits, dim=_DIM)
+        "bucket", F.expr(rh_signature("embedding", bits, _DIM))
     ).repartition(int(spark.conf.get("spark.sql.shuffle.partitions")), "bucket")
     out = os.path.join(scratch_dir("dfts_lshidx_"), "lsh_index")
     sig.write.mode("overwrite").partitionBy("bucket").parquet(out)
@@ -1226,9 +1152,9 @@ def sim_index_persist(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned = "PartitionFilters: [" in plan_string(probe_df) and (
         "bucket" in plan_string(probe_df)
     )
-    qvec = F.array(*[F.lit(float(x)) for x in qrow["embedding"]])
+    qvec = "array({})".format(", ".join(f"{x!r}D" for x in qrow["embedding"]))
     top1 = (
-        probe_df.withColumn("cos", F.round(cosine(F.col("embedding"), qvec), 4))
+        probe_df.withColumn("cos", F.round(F.expr(cosine("embedding", qvec)), 4))
         .orderBy(F.desc("cos"), F.asc("vec_id"))
         .limit(1)
         .collect()[0]
@@ -1308,7 +1234,7 @@ def sim_rerank_two_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return (
         cand.withColumn(
-            "cos_sim", F.round(cosine(F.col("embedding"), F.col("qvec")), 4)
+            "cos_sim", F.round(F.expr(cosine("embedding", "qvec")), 4)
         )
         .select("vec_id", "label", "cos_sim", "stage1_score")
         .orderBy(F.desc("cos_sim"), F.asc("vec_id"))

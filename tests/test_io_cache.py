@@ -150,6 +150,23 @@ def test_stale_session_entries_evicted(spark):
     assert not any(k[0] == "dead-app" for k in io._DF_CACHE)
 
 
+def test_stale_session_evicts_shared_index_memos(spark):
+    """dedup's cluster fixpoint and similarity's twin corpus are memoized
+    per application like the table plans, and the same eviction drops
+    them: a process that cycles sessions must not keep the checkpointed
+    relations of stopped ones."""
+    import datafusion_test_spark.io as io
+    from datafusion_test_spark.pipeline import dedup, similarity
+
+    stars = dedup._dup_stars(spark, SF)
+    twin = similarity._twin_e(spark, SF)
+    assert dedup._dup_stars(spark, SF) is stars
+    io._CACHE_APP[0] = "dead-app"  # simulate: memos were filled under it
+    table(spark, SF, "orders")
+    assert dedup._dup_stars(spark, SF) is not stars
+    assert similarity._twin_e(spark, SF) is not twin
+
+
 def test_tune_repins_after_external_conf_mutation(spark):
     """ADVICE r14: the tune() memo must not let a driver-provided session
     whose runtime confs were mutated by EXTERNAL code run un-pinned; the

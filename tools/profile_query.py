@@ -11,6 +11,7 @@ that stage runs in the bytecode interpreter), and optionally dump
 (``session.cds_state()``: ``use``, ``dump`` or ``off:<reason>``), since a
 start without the class-data-sharing archive runs its first queries colder.
 ``compiles``/``compile_ms``: Janino compiles in the final rep's exec phase.
+``py4j_calls``: the final rep's build-phase round trips, as perfbench counts them.
 
 Usage:
     python tools/profile_query.py [--reps N] [--explain DIR] [--sf DIR] name ...
@@ -18,7 +19,8 @@ Usage:
 
 Prints one JSON line per query:
     {"name": ..., "build_sec": [...], "exec_sec": [...], "jobs_build": n, "jobs_exec": n,
-     "total_best": s, "max_method_bytes": n, "compiles": n, "compile_ms": ms, "cds": state}
+     "total_best": s, "max_method_bytes": n, "compiles": n, "compile_ms": ms,
+     "py4j_calls": n, "cds": state}
 """
 
 from __future__ import annotations
@@ -34,6 +36,7 @@ from datafusion_test_spark import registry
 from datafusion_test_spark.io import table
 from datafusion_test_spark.plans.introspect import max_method_bytes
 from datafusion_test_spark.session import cds_state, get_session
+from perfbench.trace import Tracer
 
 
 def _jobs_in_group(sc, group: str) -> int:
@@ -49,15 +52,17 @@ def _codegen(jvm) -> tuple[int, int]:
             jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime())
 
 
-def profile(spark, name, fn, sf_dir, reps, explain_dir=None):
+def profile(spark, name, fn, sf_dir, reps, tracer, explain_dir=None):
     sc = spark.sparkContext
     builds, execs, jobs_b, jobs_e = [], [], -1, -1
     for i in range(reps):
         gb = f"prof-{name}-build-{i}"
         sc.setJobGroup(gb, name)
+        tracer.py4j_calls = 0
         t0 = time.perf_counter()
         df = fn(spark, sf_dir)
         t1 = time.perf_counter()
+        py4j = tracer.py4j_calls
         cg0 = _codegen(spark._jvm)
         ge = f"prof-{name}-exec-{i}"
         sc.setJobGroup(ge, name)
@@ -86,7 +91,7 @@ def profile(spark, name, fn, sf_dir, reps, explain_dir=None):
         "jobs_exec": jobs_e,
         "total_best": round(min(b + e for b, e in zip(builds, execs)), 3),
         "max_method_bytes": method_bytes,
-        "compiles": cg[0], "compile_ms": round(cg[1] / 1e6, 1),
+        "compiles": cg[0], "compile_ms": round(cg[1] / 1e6, 1), "py4j_calls": py4j,
     }
 
 
@@ -130,8 +135,9 @@ def main():
         except Exception:
             pass
     table(spark, sf_dir, "lineitem").count()
+    tracer = Tracer(spark, enabled=True)
     for name in names:
-        rec = profile(spark, name, qs[name], sf_dir, reps, explain_dir)
+        rec = profile(spark, name, qs[name], sf_dir, reps, tracer, explain_dir)
         print(json.dumps({**rec, "cds": cds_state()}), flush=True)
 
 
