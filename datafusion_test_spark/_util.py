@@ -79,18 +79,19 @@ def scratch_dir(prefix: str) -> str:
 
 def two_phase_prefix(
     df,
-    par: int,
     order_cols: list[str],
     sum_cols: tuple[str, ...] = (),
     rank_as: str | None = None,
     group_cols: tuple[str, ...] = (),
+    par: int | None = None,
 ):
     """Distributed global prefix state over ``order_cols`` WITHOUT a
     single-partition window — the range-partitioned two-phase idiom shared
-    by sample_systematic / drift_ks / pipeline_shuffle (and open-coded
-    with bin logic in curation._pack_bins): repartitionByRange on the
+    by sample_systematic / drift_ks / pipeline_shuffle / curation._pack_bins
+    and the other global rank entries: repartitionByRange on the
     order, a local window per partition, then an offsets window over only
-    #partitions rows.
+    #partitions rows.  ``par`` is that partition count; ``None`` means a
+    quarter of the default parallelism, at least 4.
 
     Adds ``pre_<col>`` = the EXCLUSIVE global prefix sum for each col in
     ``sum_cols`` and, if ``rank_as``, the 1-based global row number.
@@ -110,6 +111,8 @@ def two_phase_prefix(
     from pyspark.sql import Window as W
 
     group_cols = tuple(group_cols)
+    if par is None:
+        par = max(4, df.sparkSession.sparkContext.defaultParallelism // 4)
     # Eagerly materialized: BOTH consumers (the local window and the
     # per-partition totals) must see the SAME range boundaries, but
     # repartitionByRange samples its boundaries at execution time and the

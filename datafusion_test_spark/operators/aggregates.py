@@ -737,9 +737,8 @@ def agg_weighted_median(
     gp = li.groupBy("flag", "v").agg(
         F.sum("w").alias("w"), F.count(F.lit(1)).alias("c")
     )
-    par = par or max(4, spark.sparkContext.defaultParallelism // 4)
     pre, totals = two_phase_prefix(
-        gp, par, ["v"], sum_cols=("w", "c"), group_cols=("flag",)
+        gp, ["v"], sum_cols=("w", "c"), group_cols=("flag",), par=par
     )
     crossed = pre.join(F.broadcast(totals), "flag").filter(
         2 * (F.col("pre_w") + F.col("w")) >= F.col("tot_w")
@@ -829,9 +828,8 @@ def agg_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     # point on the Lorenz curve (NULL cents would rank engine-dependently
     # and NULL-poison r·x; nulls degenerate corpus, round 6)
     per = per.filter(F.col("cents").isNotNull())
-    par = max(4, spark.sparkContext.defaultParallelism // 4)
     ranked, _ = two_phase_prefix(
-        per, par, ["cents", "o_custkey"], rank_as="r"
+        per, ["cents", "o_custkey"], rank_as="r"
     )
     t = ranked.agg(
         F.count(F.lit(1)).alias("n"),
@@ -936,9 +934,8 @@ def agg_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     per = per.filter(F.col("cents").isNotNull())
     # descending spend order == ascending (-cents, custkey)
     per = per.withColumn("neg", -F.col("cents"))
-    par = max(4, spark.sparkContext.defaultParallelism // 4)
     ranked, totals = two_phase_prefix(
-        per, par, ["neg", "o_custkey"], sum_cols=("cents",), rank_as="r"
+        per, ["neg", "o_custkey"], sum_cols=("cents",), rank_as="r"
     )
     j = ranked.crossJoin(F.broadcast(totals))
     crossing = j.filter(
@@ -1128,9 +1125,8 @@ def agg_abc_class(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("cents")
     )
     per = per.withColumn("neg", -F.col("cents"))
-    par = max(4, spark.sparkContext.defaultParallelism // 4)
     ranked, totals = two_phase_prefix(
-        per, par, ["neg", "l_partkey"], sum_cols=("cents",), rank_as="r"
+        per, ["neg", "l_partkey"], sum_cols=("cents",), rank_as="r"
     )
     j = ranked.crossJoin(F.broadcast(totals))
     cum = F.col("pre_cents") + F.col("cents")

@@ -292,12 +292,11 @@ def feature_bucketize(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("o_orderkey", "o_totalprice")
         .filter(F.col("o_totalprice").isNotNull())
     )
-    par = max(4, spark.sparkContext.defaultParallelism // 4)
     # the open-coded two-phase rank is now the shared helper (it carries
     # the eval_auc range-boundary fix); tot_rows comes from the same
     # per-partition aggregates — no second scan of orders for the count
     ranked, totals = two_phase_prefix(
-        o, par, ["o_totalprice", "o_orderkey"], rank_as="rn"
+        o, ["o_totalprice", "o_orderkey"], rank_as="rn"
     )
     binned = ranked.crossJoin(F.broadcast(totals)).withColumn(
         "bucket", F.expr(f"((rn - 1) * {_N_BUCKETS}) div tot_rows")
@@ -519,14 +518,13 @@ def ts_changepoint(
         .cast("long")
         .alias("v_s"),
     )
-    par = par or max(4, spark.sparkContext.defaultParallelism // 4)
     pre, totals = two_phase_prefix(
         u,
-        par,
         ["ts", "event_id"],
         sum_cols=("v_s",),
         rank_as="i",
         group_cols=("event_type",),
+        par=par,
     )
     d = pre.join(F.broadcast(totals), "event_type").select(
         "event_type",
@@ -1597,17 +1595,16 @@ def feature_rfm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(frontier))
         .withColumn("recency_us", F.col("max_us") - F.col("last_us"))
     )
-    par = max(4, spark.sparkContext.defaultParallelism // 4)
     # 5 = best: rank recency DESCENDING (stalest first), freq/money
     # ascending — the top quintile of each rank order scores 5
     r1, _ = two_phase_prefix(
-        per, par, ["recency_us", "user_id"], rank_as="r_rec"
+        per, ["recency_us", "user_id"], rank_as="r_rec"
     )
     r2, _ = two_phase_prefix(
-        r1, par, ["freq", "user_id"], rank_as="r_freq"
+        r1, ["freq", "user_id"], rank_as="r_freq"
     )
     r3, totals = two_phase_prefix(
-        r2, par, ["money_s", "user_id"], rank_as="r_money"
+        r2, ["money_s", "user_id"], rank_as="r_money"
     )
     j = r3.crossJoin(F.broadcast(totals))
     q = lambda r: F.expr(f"(({r} - 1) * 5) DIV tot_rows + 1")

@@ -761,11 +761,10 @@ def join_positional(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from .._util import two_phase_prefix
 
-    par = max(4, spark.sparkContext.defaultParallelism // 4)
     c = table(spark, sf_dir, "customer").select("c_custkey")
     s = table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    cr, _ = two_phase_prefix(c, par, ["c_custkey"], rank_as="rn")
-    sr, _ = two_phase_prefix(s, par, ["s_suppkey"], rank_as="rn")
+    cr, _ = two_phase_prefix(c, ["c_custkey"], rank_as="rn")
+    sr, _ = two_phase_prefix(s, ["s_suppkey"], rank_as="rn")
     return (
         cr.select("rn", "c_custkey")
         .join(sr.select("rn", "s_suppkey", "s_name"), "rn", "full_outer")

@@ -108,11 +108,9 @@ def _pack_bins(
     """
     from .._util import two_phase_prefix
 
-    if par is None:
-        par = max(4, spark.sparkContext.defaultParallelism // 4)
     # the open-coded prefix sum is now the shared helper (it carries the
     # eval_auc range-boundary fix); pre_tok IS the exclusive global prefix
-    pre, _totals = two_phase_prefix(d, par, ["doc_id"], sum_cols=("tok",))
+    pre, _totals = two_phase_prefix(d, ["doc_id"], sum_cols=("tok",), par=par)
     packed = pre.withColumn(bin_col, F.expr(f"pre_tok div {_BIN_TOKENS}"))
     return packed.groupBy(bin_col).agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -172,8 +170,7 @@ def pipeline_shard_binpack(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (dup corpus discipline: 4x clones are all equal-size)
         .withColumn("nb", -F.col("b"))
     )
-    par = max(4, spark.sparkContext.defaultParallelism // 4)
-    pre, _totals = two_phase_prefix(d, par, ["nb", "doc_id"], sum_cols=("b",))
+    pre, _totals = two_phase_prefix(d, ["nb", "doc_id"], sum_cols=("b",))
     packed = pre.withColumn("shard_id", F.expr(f"pre_b div {_SHARD_BYTES}"))
     return packed.groupBy("shard_id").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -349,9 +346,8 @@ def pipeline_shuffle(
         "doc_id", F.md5(F.col("doc_id").cast("string")).alias("draw")
     )
     # par injectable for the partition-count-invariance test
-    par = par or max(4, spark.sparkContext.defaultParallelism // 4)
     ranked, _ = two_phase_prefix(
-        drawn, par, ["draw", "doc_id"], rank_as="pos"
+        drawn, ["draw", "doc_id"], rank_as="pos", par=par
     )
     return ranked.select("doc_id", "draw", "pos")
 
@@ -397,9 +393,8 @@ def pipeline_curriculum_order(
         .select("doc_id", "n_chars")
         .filter(F.col("n_chars").isNotNull())
     )
-    par = par or max(4, spark.sparkContext.defaultParallelism // 4)
     ranked, totals = two_phase_prefix(
-        d, par, ["n_chars", "doc_id"], rank_as="drank"
+        d, ["n_chars", "doc_id"], rank_as="drank", par=par
     )
     b = (
         ranked.crossJoin(F.broadcast(totals.select("tot_rows")))
@@ -408,14 +403,14 @@ def pipeline_curriculum_order(
         .select("doc_id", "bucket", "draw")
     )
     within, _ = two_phase_prefix(
-        b, par, ["draw", "doc_id"], rank_as="within_rank",
-        group_cols=("bucket",),
+        b, ["draw", "doc_id"], rank_as="within_rank",
+        group_cols=("bucket",), par=par,
     )
     ordered, _ = two_phase_prefix(
         within.select("doc_id", "bucket", "draw", "within_rank"),
-        par,
         ["within_rank", "bucket"],
         rank_as="pos",
+        par=par,
     )
     return ordered.select("doc_id", "bucket", "draw", "within_rank", "pos")
 
@@ -444,8 +439,7 @@ def export_jsonl_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     d = table(spark, sf_dir, "documents").select("doc_id", "text", "n_chars")
     drawn = d.withColumn("draw", F.md5(F.col("doc_id").cast("string")))
-    par = max(4, spark.sparkContext.defaultParallelism // 4)
-    ranked, _ = two_phase_prefix(drawn, par, ["draw", "doc_id"], rank_as="pos")
+    ranked, _ = two_phase_prefix(drawn, ["draw", "doc_id"], rank_as="pos")
     sharded = ranked.withColumn(
         "shard", F.expr(f"(pos - 1) DIV {_EXPORT_ROWS_PER_SHARD}")
     )

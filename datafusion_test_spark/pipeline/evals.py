@@ -45,7 +45,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .._util import DEC, finite, half_up, sql_half_up, two_phase_prefix
@@ -94,8 +94,7 @@ def eval_auc(spark: SparkSession, sf_dir: str, par: int | None = None) -> DataFr
     g = j.groupBy("s").agg(
         F.count(F.lit(1)).alias("n_at"), F.sum("y").alias("np_at")
     )
-    par = par or max(4, spark.sparkContext.defaultParallelism // 4)
-    pre, _totals = two_phase_prefix(g, par, ["s"], sum_cols=("n_at",))
+    pre, _totals = two_phase_prefix(g, ["s"], sum_cols=("n_at",), par=par)
     t = pre.agg(
         F.sum(
             F.col("np_at") * (2 * F.col("pre_n_at") + F.col("n_at") + 1)
@@ -876,6 +875,46 @@ def eval_elo_bt(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LB_MIN_MARGIN = _PP_MIN_MARGIN  # the oracles' copy of the pair recipe
 
 
+def _gap_audit(
+    pairs: DataFrame, col: str, winner: str, bucket: Column
+) -> DataFrame:
+    """The steps eval_length_bias and eval_format_bias share, over pairs
+    carrying ``<col>_chosen`` / ``<col>_rejected``: the observed-pairs
+    filter (a NULL payload has nothing to audit), the signed ``delta``
+    (chosen minus rejected) and its absolute ``gap``, then per ``bucket``
+    of the gap the pair count, ``<winner>_wins`` (pairs whose chosen side
+    scores higher), integer sums, and the rates as one double divide each.
+    """
+    chosen, rejected = f"{col}_chosen", f"{col}_rejected"
+    observed = (
+        pairs.filter(F.col(chosen).isNotNull() & F.col(rejected).isNotNull())
+        .withColumn("delta", F.col(chosen) - F.col(rejected))
+        .withColumn("gap", F.abs(F.col("delta")))
+    )
+    agg = observed.groupBy(bucket.alias("gap_bucket")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
+        F.sum(
+            F.when(F.col("delta") > 0, 1).otherwise(0)
+        ).cast("bigint").alias(f"{winner}_wins"),
+        F.sum("delta").cast("bigint").alias("sum_delta"),
+        F.sum(chosen).cast("bigint").alias(f"sum_{chosen}"),
+        F.sum(rejected).cast("bigint").alias(f"sum_{rejected}"),
+    )
+    return agg.select(
+        "gap_bucket",
+        "n_pairs",
+        f"{winner}_wins",
+        (F.col(f"{winner}_wins").cast("double") / F.col("n_pairs")).alias(
+            f"win_rate_{winner}"
+        ),
+        (F.col("sum_delta").cast("double") / F.col("n_pairs")).alias(
+            "mean_delta"
+        ),
+        f"sum_{chosen}",
+        f"sum_{rejected}",
+    )
+
+
 def eval_length_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Preference-data length-confound audit — the check a team runs
     right after building DPO pairs (pipeline_preference_pairs): is
@@ -909,44 +948,16 @@ def eval_length_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined groupBy onto <= 5 bucket rows.  No corpus-wide
     state anywhere.
     """
-    pairs = (
-        preference_pairs(spark, sf_dir, len=F.length("props"))
-        # observed-pairs filter: a NULL payload has no length to audit
-        .filter(
-            F.col("len_chosen").isNotNull()
-            & F.col("len_rejected").isNotNull()
-        )
-        .withColumn("delta", F.col("len_chosen") - F.col("len_rejected"))
-        .withColumn("gap", F.abs(F.col("delta")))
-    )
-    bucket = (
-        F.when(F.col("gap") == 0, "tie")
-        .when(F.col("gap") < 10, "gap_1_9")
-        .when(F.col("gap") < 50, "gap_10_49")
-        .when(F.col("gap") < 200, "gap_50_199")
-        .otherwise("gap_200_plus")
-    )
-    agg = pairs.groupBy(bucket.alias("gap_bucket")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
-        F.sum(
-            F.when(F.col("delta") > 0, 1).otherwise(0)
-        ).cast("bigint").alias("longer_wins"),
-        F.sum("delta").cast("bigint").alias("sum_delta"),
-        F.sum("len_chosen").cast("bigint").alias("sum_len_chosen"),
-        F.sum("len_rejected").cast("bigint").alias("sum_len_rejected"),
-    )
-    return agg.select(
-        "gap_bucket",
-        "n_pairs",
-        "longer_wins",
-        (F.col("longer_wins").cast("double") / F.col("n_pairs")).alias(
-            "win_rate_longer"
-        ),
-        (F.col("sum_delta").cast("double") / F.col("n_pairs")).alias(
-            "mean_delta"
-        ),
-        "sum_len_chosen",
-        "sum_len_rejected",
+    gap = F.col("gap")
+    return _gap_audit(
+        preference_pairs(spark, sf_dir, len=F.length("props")),
+        "len",
+        "longer",
+        F.when(gap == 0, "tie")
+        .when(gap < 10, "gap_1_9")
+        .when(gap < 50, "gap_10_49")
+        .when(gap < 200, "gap_50_199")
+        .otherwise("gap_200_plus"),
     )
 
 
@@ -1064,43 +1075,15 @@ def eval_format_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange; the final aggregate is a map-side-combined groupBy onto
     ≤ 4 bucket rows.  No corpus-wide state anywhere.
     """
-    pairs = (
-        preference_pairs(spark, sf_dir, fmt=_format_score())
-        # observed-pairs filter: a NULL payload has no format to audit
-        .filter(
-            F.col("fmt_chosen").isNotNull()
-            & F.col("fmt_rejected").isNotNull()
-        )
-        .withColumn("delta", F.col("fmt_chosen") - F.col("fmt_rejected"))
-        .withColumn("gap", F.abs(F.col("delta")))
-    )
-    bucket = (
-        F.when(F.col("gap") == 0, "tie")
-        .when(F.col("gap") == 1, "gap_1")
-        .when(F.col("gap") == 2, "gap_2")
-        .otherwise("gap_3")
-    )
-    agg = pairs.groupBy(bucket.alias("gap_bucket")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_pairs"),
-        F.sum(
-            F.when(F.col("delta") > 0, 1).otherwise(0)
-        ).cast("bigint").alias("fmt_wins"),
-        F.sum("delta").cast("bigint").alias("sum_delta"),
-        F.sum("fmt_chosen").cast("bigint").alias("sum_fmt_chosen"),
-        F.sum("fmt_rejected").cast("bigint").alias("sum_fmt_rejected"),
-    )
-    return agg.select(
-        "gap_bucket",
-        "n_pairs",
-        "fmt_wins",
-        (F.col("fmt_wins").cast("double") / F.col("n_pairs")).alias(
-            "win_rate_fmt"
-        ),
-        (F.col("sum_delta").cast("double") / F.col("n_pairs")).alias(
-            "mean_delta"
-        ),
-        "sum_fmt_chosen",
-        "sum_fmt_rejected",
+    gap = F.col("gap")
+    return _gap_audit(
+        preference_pairs(spark, sf_dir, fmt=_format_score()),
+        "fmt",
+        "fmt",
+        F.when(gap == 0, "tie")
+        .when(gap == 1, "gap_1")
+        .when(gap == 2, "gap_2")
+        .otherwise("gap_3"),
     )
 
 

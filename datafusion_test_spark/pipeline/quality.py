@@ -257,8 +257,7 @@ def sample_systematic(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = table(spark, sf_dir, "documents").select(
         "doc_id", F.col("n_chars").cast("long").alias("wgt")
     )
-    par = max(4, spark.sparkContext.defaultParallelism // 4)
-    pre, totals = two_phase_prefix(d, par, ["doc_id"], sum_cols=("wgt",))
+    pre, totals = two_phase_prefix(d, ["doc_id"], sum_cols=("wgt",))
     cum = (
         pre.withColumnRenamed("pre_wgt", "cum")
         .crossJoin(F.broadcast(totals))
@@ -392,8 +391,7 @@ def drift_ks(spark: SparkSession, sf_dir: str, par: int | None = None) -> DataFr
         F.sum("ia").alias("ca"), F.sum("ib").alias("cb")
     )
     # par injectable for the partition-count-invariance test
-    par = par or max(4, spark.sparkContext.defaultParallelism // 4)
-    pre, totals = two_phase_prefix(g, par, ["value"], sum_cols=("ca", "cb"))
+    pre, totals = two_phase_prefix(g, ["value"], sum_cols=("ca", "cb"), par=par)
     diffs = pre.crossJoin(F.broadcast(totals)).select(
         F.col("tot_ca").alias("na"),
         F.col("tot_cb").alias("nb"),
@@ -548,9 +546,8 @@ def drift_timeline(
     g = u.groupBy("day", "value").agg(
         F.sum("ia").alias("ca"), F.sum("ib").alias("cb")
     )
-    par = par or max(4, spark.sparkContext.defaultParallelism // 4)
     pre, totals = two_phase_prefix(
-        g, par, ["value"], sum_cols=("ca", "cb"), group_cols=("day",)
+        g, ["value"], sum_cols=("ca", "cb"), group_cols=("day",), par=par
     )
     diffs = pre.join(F.broadcast(totals), "day").select(
         "day",

@@ -10,7 +10,11 @@ absent, never silently short of a family.
 
 from __future__ import annotations
 
+import glob
 import importlib
+import json
+import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -44,385 +48,44 @@ _MODULES = [
     "datafusion_test_spark.pipeline.evals",
 ]
 
-# Registry iteration order = the driver's correctness-check order, and the
-# driver's per-round budget (~50 entries per round) can stop mid-list.  Round 4
-# ordering (VERDICT.md r3 item 1): rotate so the 71 entries without a green
-# driver row lead — the lone red (tpch_q12_shape, oracle HUGEINT artifact) first,
-# then the 70 never-checked names in registry order; the 146 r1-r3 greens sort
-# to the back (their rows are on record).
-_PRIORITY = [
-    # rotated for round 14 (VERDICT r13 item 1): the 2 never-checked r14
-    # slate entries lead, then the 8 r6-vintage holdouts (ts_changepoint,
-    # ts_debounce, ts_seasonal_index, udf_pandas_iter, win_median_sliding,
-    # win_ratio_to_report, win_rolling_slope, win_running_distinct), then
-    # greens by evidence vintage oldest-first.  Zero red at rotation time;
-    # pasted verbatim from tools/rotate_priority.py (the leading count
-    # line includes the 2 r14 slate entries).
-    # # rotated: 0 red, 2 never-checked, 358 green (checked across 358 driver rows)
-    # --- red rows (latest driver check failed) — re-verify first ---
-    # --- never driver-checked — the round's budget lands here ---
-    "scan_parquet_pageindex_reader",
-    "eval_confound_drilldown",
-    # --- green — re-verify last ---
-    "ts_changepoint",
-    "ts_debounce",
-    "ts_seasonal_index",
-    "udf_pandas_iter",
-    "win_median_sliding",
-    "win_ratio_to_report",
-    "win_rolling_slope",
-    "win_running_distinct",
-    "agg_abc_class",
-    "agg_anova_eta",
-    "agg_benford",
-    "agg_cohort_ltv",
-    "agg_gini",
-    "agg_hhi",
-    "agg_life_table",
-    "agg_new_vs_returning",
-    "agg_pareto",
-    "agg_rolling_wau",
-    "agg_stats",
-    "agg_wilson_rank",
-    "catalog_stats_sampled",
-    "dedup_soft_weights",
-    "feature_rfm_score",
-    "feature_standardize",
-    "feature_winsorize",
-    "fn_allocate_proportional",
-    "fn_cast",
-    "fn_conditional",
-    "fn_mask_partial",
-    "join_asof",
-    "join_asof_aggregate",
-    "join_attribution_linear",
-    "join_basket_lift",
-    "join_interval_relations",
-    "mm_aspect_bucket",
-    "mm_dataset_manifest",
-    "scan_csv_multiline",
-    "scd2_correction",
-    "seq_markov_transitions",
-    "seq_path_census",
-    "sub_not_in_nulls",
-    "table_checksum",
-    "text_keywords_rake",
-    "ts_absence_alarm",
-    "ts_forecast_backtest",
-    "ts_peaks",
-    "ts_period_growth",
-    "udaf_grouped",
-    "udf_grouped_train",
-    "udf_python",
-    "win_control_chart",
-    "win_drawdown",
-    "win_first_last",
-    "win_lag_lead",
-    "win_moving_avg",
-    "win_range_frame",
-    "win_ranking",
-    "win_running_sum",
-    "agg_bitwise",
-    "agg_count_distinct",
-    "agg_cube",
-    "agg_filter_clause",
-    "agg_global",
-    "agg_groupby",
-    "agg_grouping_sets",
-    "agg_having",
-    "agg_minmax_by",
-    "agg_product",
-    "agg_rollup",
-    "coalesce_partitions",
-    "collect_stream",
-    "dedup_paragraph",
-    "distinct",
-    "drift_psi",
-    "eval_bootstrap_ci",
-    "eval_elo_bt",
-    "filter_boolean",
-    "filter_compare",
-    "filter_in_between",
-    "filter_like",
-    "filter_null",
-    "graph_connected_components",
-    "join_anti",
-    "join_broadcast",
-    "join_cross",
-    "join_full",
-    "join_inner",
-    "join_left",
-    "join_right",
-    "join_semi",
-    "join_skew_salted",
-    "join_theta",
-    "limit",
-    "load_inmemory",
-    "parquet_pushdown",
-    "partitioned_exec",
-    "pipeline_shard_binpack",
-    "plan_aqe_skew_join",
-    "project",
-    "scan_manifest_prune",
-    "scan_parquet",
-    "sort_multi",
-    "stream_transactional_sink",
-    "text_dsir_weights",
-    "topk_per_group",
-    "union_all",
-    "union_distinct",
-    "win_percent",
-    "multimodal_cols",
-    "eval_krippendorff_alpha",
-    "scan_row_lineage",
-    "text_bpe_train",
-    "stream_session_gap_stats",
-    "agg_tdigest_quantiles_bucketed",
-    "agg_approx_distinct",
-    "agg_collect",
-    "bench_cancel_table",
-    "cancel_query",
-    "dedup_embed_cosine",
-    "dedup_embed_lsh",
-    "dedup_exact",
-    "dedup_minhash",
-    "dedup_near",
-    "dedup_ngram_jaccard",
-    "dedup_simhash",
-    "except",
-    "find_or_generate",
-    "fn_array",
-    "fn_date",
-    "fn_hash",
-    "fn_json",
-    "fn_map_struct",
-    "fn_math",
-    "fn_regex",
-    "fn_string",
-    "fn_trig",
-    "generate_random_table",
-    "intersect",
-    "mm_binary_meta",
-    "mm_decode_stub",
-    "mm_frame_sample",
-    "sim_ann_lsh",
-    "sim_pairwise_topk",
-    "sim_topk",
-    "stream_dedup",
-    "stream_session",
-    "stream_sliding",
-    "stream_stateful_count",
-    "stream_tumbling",
-    "stream_watermark_late",
-    "text_fingerprint",
-    "text_langid",
-    "text_quality",
-    "text_stats",
-    "text_tokens",
-    "text_topterms",
-    "udf_pandas",
-    "udtf_explode",
-    "write_parquet",
-    "scan_parquet_bloom",
-    "agg_approx_quantile",
-    "agg_listagg",
-    "cte_multi",
-    "cte_recursive",
-    "join_lateral",
-    "join_range",
-    "mm_feature_stub",
-    "mm_resize_stub",
-    "pipeline_prep",
-    "pivot_wide",
-    "rollup_timeseries",
-    "scan_csv_roundtrip",
-    "scan_json_roundtrip",
-    "scan_orc_roundtrip",
-    "sim_pairwise_lsh",
-    "stream_foreach_batch",
-    "stream_stateful_run",
-    "sub_correlated_scalar",
-    "sub_exists_correlated",
-    "sub_in",
-    "sub_scalar",
-    "sub_scalar_select",
-    "tablesample",
-    "text_pii_scrub",
-    "text_profile",
-    "text_sample_stratified",
-    "tpch_q10_shape",
-    "tpch_q11_shape",
-    "tpch_q13_shape",
-    "tpch_q14_shape",
-    "tpch_q15_shape",
-    "tpch_q16_shape",
-    "tpch_q17_shape",
-    "tpch_q18_shape",
-    "tpch_q19_shape",
-    "tpch_q1_shape",
-    "tpch_q20_shape",
-    "tpch_q2_shape",
-    "tpch_q3_shape",
-    "tpch_q4_shape",
-    "tpch_q5_shape",
-    "tpch_q6_shape",
-    "tpch_q7_shape",
-    "tpch_q8_shape",
-    "tpch_q9_shape",
-    "udf_arrow",
-    "unpivot_long",
-    "write_partitioned",
-    "scan_parquet_pageindex",
-    "eval_length_bias",
-    "pipeline_curriculum_order",
-    "agg_count_min",
-    "agg_heavy_hitters",
-    "agg_hll_merge",
-    "agg_incremental",
-    "agg_mode_median",
-    "agg_percentiles",
-    "agg_retention_cohort",
-    "agg_vector_centroid",
-    "catalog_stats",
-    "dedup_clusters",
-    "dedup_editdist",
-    "dedup_url",
-    "domain_mix",
-    "embed_pca",
-    "embed_quantize",
-    "except_all",
-    "fn_bitmap",
-    "fn_collation",
-    "fn_url",
-    "fn_variant",
-    "funnel_conversion",
-    "intersect_all",
-    "join_bloom",
-    "join_bucketed",
-    "join_null_safe",
-    "layout_compaction",
-    "layout_zonemap",
-    "layout_zorder",
-    "merge_upsert",
-    "observe_metrics",
-    "rollup_gapfill",
-    "scan_schema_evolution",
-    "scan_time_travel",
-    "scd2_build",
-    "seq_pack",
-    "sim_ivf",
-    "source_python_api",
-    "split_train_holdout",
-    "stream_cdc_apply",
-    "stream_join_interval",
-    "stream_join_outer",
-    "text_contamination",
-    "text_ngram_lm",
-    "text_quality_gopher",
-    "text_tfidf",
-    "tpch_q12_shape",
-    "tpch_q21_shape",
-    "scan_parquet_pageindex_string",
-    "eval_position_bias",
-    "eval_format_bias",
-    "tpch_q22_shape",
-    "udf_cogrouped",
-    "udtf_python_api",
-    "agg_corr_matrix",
-    "agg_entropy",
-    "agg_histogram",
-    "agg_hll_intersect",
-    "agg_regression",
-    "agg_skew_diagnose",
-    "anomaly_mad",
-    "corpus_jaccard_sources",
-    "dedup_chunk",
-    "dedup_incremental",
-    "dedup_resolve",
-    "drift_ks",
-    "embed_pq",
-    "er_fuzzy_blocked",
-    "eval_auc",
-    "eval_calibration",
-    "eval_prf",
-    "feature_bucketize",
-    "fn_generator_outer",
-    "graph_triangles",
-    "interval_union",
-    "join_asof_forward",
-    "join_asof_nearest",
-    "join_asof_tolerance",
-    "join_dim_snapshot",
-    "join_partition_pruned",
-    "lm_quality_filter",
-    "mm_clip_filter",
-    "pipeline_shuffle",
-    "pipeline_training_shards",
-    "privacy_k_anonymity",
-    "sample_systematic",
-    "scan_json_corrupt",
-    "seq_pattern_detect",
-    "seq_string_mine",
-    "sim_ivfpq",
-    "skyline_pareto",
-    "stream_checkpoint_resume",
-    "stream_dlq_routing",
-    "stream_idempotent_sink",
-    "stream_topk_windowed",
-    "sub_in_disjunct",
-    "text_bm25_topk",
-    "text_chunk_overlap",
-    "scan_parquet_pageindex_nulls",
-    "eval_confound_consensus",
-    "text_repetition",
-    "text_vocab_build",
-    "ts_resample_interp",
-    "win_ewma",
-    "win_streaks",
-    "win_time_range",
-    "agg_weighted_median",
-    "corpus_datacard",
-    "corpus_vocab_growth",
-    "dedup_containment",
-    "dedup_threshold_sweep",
-    "dq_audit",
-    "drift_timeline",
-    "embed_matryoshka_recall",
-    "embed_pq_residual",
-    "er_multipass",
-    "er_survivorship",
-    "eval_ab_ztest",
-    "eval_filter_parity",
-    "eval_mrr",
-    "eval_ndcg",
-    "eval_pass_at_k",
-    "export_jsonl_shards",
-    "feature_hashing",
-    "feature_target_encode",
-    "fn_try_safety",
-    "graph_common_neighbors",
-    "graph_kcore",
-    "graph_pagerank",
-    "join_positional",
-    "join_spatial_grid",
-    "layout_bucket_agg",
-    "pipeline_preference_pairs",
-    "pipeline_quality_gate",
-    "pipeline_sft_transcripts",
-    "pipeline_span_corruption",
-    "privacy_l_diversity",
-    "privacy_pseudonymize",
-    "rollup_ohlc",
-    "scan_binary_files",
-    "sim_index_persist",
-    "sim_rerank_two_stage",
-    "sub_quantified",
-    "table_diff",
-    "text_blocklist_filter",
-    "text_boilerplate_strip",
-    "text_langid_confusion",
-    "ts_autocorr",
-]
+# The root of the repo, beside this package: it holds the driver's
+# correctness evidence, one CORRECTNESS_r<N>.json of name -> row per round.
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def check_rank(evidence_dir: str) -> Callable[[str], tuple[int, int]]:
+    """Sort key of the driver's check order, derived from the evidence.
+
+    Registry iteration order is the order in which the driver checks each
+    entry against its oracle, and its budget (~50 entries per round) can
+    stop mid-list.  So the key sends a name to the front by what its
+    LATEST row in ``evidence_dir`` says, reading every
+    ``CORRECTNESS_r<N>.json`` in numeric round order:
+
+    1. red -- the latest row has a false check or an ``err``;
+    2. never checked -- no row at all (every name, without evidence);
+    3. green -- by the round of the latest row, oldest first, so the budget
+       always refreshes the stalest evidence.
+
+    ``sorted`` is stable, so ties keep registry declaration order.  Rows
+    for names the registry no longer declares are never looked up.  A
+    malformed file raises (bad JSON, a non-object, a row missing a check).
+    """
+    rounds = []
+    for path in glob.glob(os.path.join(evidence_dir, "CORRECTNESS_r*.json")):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", os.path.basename(path))
+        if not m:
+            raise ValueError(f"evidence file without a round number: {path}")
+        rounds.append((int(m[1]), path))
+    rank: dict[str, tuple[int, int]] = {}
+    for rnd, path in sorted(rounds):
+        with open(path) as fh:
+            for name, row in json.load(fh).items():
+                green = not row["err"] and all(
+                    row[k] for k in ("rows_match", "schema_match", "hash_match")
+                )
+                rank[name] = (2, rnd) if green else (0, 0)
+    return lambda name: rank.get(name, (1, 0))
 
 
 def _collect() -> tuple[dict, dict]:
@@ -441,18 +104,12 @@ def _collect() -> tuple[dict, dict]:
             )
         queries.update(mod_q)
         oracles.update(getattr(mod, "ORACLE", {}))
-    # a stale/typo'd priority name must fail loudly, not silently demote the
-    # entry to the back of the driver's ~50-entry correctness budget
-    missing = [n for n in _PRIORITY if n not in queries]
-    if missing:
-        raise RuntimeError(f"_PRIORITY names not in registry: {missing}")
-    ordered = {n: queries[n] for n in _PRIORITY}
-    ordered.update({n: fn for n, fn in queries.items() if n not in ordered})
-    return ordered, oracles
+    return queries, oracles
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return _collect()[0]
+    q = _collect()[0]
+    return {n: q[n] for n in sorted(q, key=check_rank(_ROOT))}
 
 
 def oracle_sql() -> dict[str, str]:

@@ -133,7 +133,7 @@ def test_two_phase_prefix_matches_pandas_cumsum(spark):
     df = spark.createDataFrame(pdf)
     for par in (1, 3, 5):
         out, totals = two_phase_prefix(
-            df, par, ["k", "tie"], sum_cols=("w",), rank_as="rnk"
+            df, ["k", "tie"], sum_cols=("w",), rank_as="rnk", par=par
         )
         got = (
             out.toPandas()
@@ -224,8 +224,8 @@ def test_two_phase_prefix_grouped_matches_pandas(spark):
     df = spark.createDataFrame(pdf)
     for par in (1, 3, 5):
         out, totals = two_phase_prefix(
-            df, par, ["k", "tie"], sum_cols=("w",), rank_as="rnk",
-            group_cols=("grp",),
+            df, ["k", "tie"], sum_cols=("w",), rank_as="rnk",
+            group_cols=("grp",), par=par,
         )
         got = (
             out.toPandas()
