@@ -48,24 +48,24 @@ _MODULES = [
     "datafusion_test_spark.pipeline.evals",
 ]
 
-# The root of the repo, beside this package: it holds the driver's
-# correctness evidence, one CORRECTNESS_r<N>.json of name -> row per round.
+# The root of the repo, beside this package: it holds the oracle-check
+# evidence, one CORRECTNESS_r<N>.json of name -> row per round.
 _ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def check_rank(evidence_dir: str) -> Callable[[str], tuple[int, int]]:
-    """Sort key of the driver's check order, derived from the evidence.
+    """Sort key of the oracle-check order, derived from the evidence.
 
-    Registry iteration order is the order in which the driver checks each
-    entry against its oracle, and its budget (~50 entries per round) can
-    stop mid-list.  So the key sends a name to the front by what its
+    Registry iteration order is the order in which a correctness round
+    checks each entry against its oracle, and a round checks only about
+    50 entries, so it can stop mid-list.  So the key sends a name to the front by what its
     LATEST row in ``evidence_dir`` says, reading every
     ``CORRECTNESS_r<N>.json`` in numeric round order:
 
     1. red -- the latest row has a false check or an ``err``;
     2. never checked -- no row at all (every name, without evidence);
-    3. green -- by the round of the latest row, oldest first, so the budget
-       always refreshes the stalest evidence.
+    3. green -- by the round of the latest row, oldest first, so each round
+       refreshes the stalest evidence.
 
     ``sorted`` is stable, so ties keep registry declaration order.  Rows
     for names the registry no longer declares are never looked up.  A

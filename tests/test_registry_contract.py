@@ -1,16 +1,16 @@
 """Registry / bench contract pins.
 
-The driver checks registry entries against their oracles in
-``registry.queries()`` order, with a ~50-entry budget per round.  That
+A correctness round checks registry entries against their oracles in
+``registry.queries()`` order, about 50 entries per round.  That
 order is derived at load time from the ``CORRECTNESS_r*.json`` evidence
 (``registry.check_rank``): reds first, then never-checked entries, then
 greens by the round of their latest row, oldest first.  The pins here:
 
 * the derived order is a permutation of the registry, whatever the
-  evidence, so no entry can fall out of the driver's reach;
+  evidence, so no entry can fall out of the check's reach;
 * the policy itself, on a fake evidence directory that holds a red, a
   never-checked entry and greens of three vintages;
-* on the repo's own evidence, the budget's head never re-checks the
+* on the repo's own evidence, the first 50 entries never re-check the
   newest round while an older one is waiting (the order a hand-pasted
   list let go stale).
 
@@ -93,8 +93,8 @@ def test_malformed_evidence_raises(tmp_path):
 
 def test_budget_head_refreshes_the_stalest_evidence():
     """On the repo's evidence: while any entry's latest row is older than
-    the newest round, none of the first 50 entries of queries() (the
-    driver's per-round budget) may have its latest row from the newest
+    the newest round, none of the first 50 entries of queries() (what one
+    correctness round checks) may have its latest row from the newest
     round."""
     names = list(registry.queries())
     ranks = list(map(registry.check_rank(registry._ROOT), names))
@@ -103,7 +103,7 @@ def test_budget_head_refreshes_the_stalest_evidence():
         return
     newest = max(green_rounds)
     fresh = [n for n, r in zip(names[:50], ranks) if r == (2, newest)]
-    assert not fresh, f"budget head re-checks round-{newest} rows: {fresh}"
+    assert not fresh, f"first 50 entries re-check round-{newest} rows: {fresh}"
 
 
 def test_every_entry_has_a_full_sql_oracle():
