@@ -38,18 +38,13 @@ def r4(col: Column, alias: str) -> Column:
     Half-up (not engine round): derived means and integer ratios DO land
     exactly on .xxxx5 (dyadic denominators: n/32·10⁴ = k.5), where Spark
     rounds up and DuckDB half-even.  Every oracle twin of an r4 column
-    states the same floor(x·10⁴ + 0.5) formula (see :func:`sql_r4`)."""
+    states the same floor(x·10⁴ + 0.5) formula (see :func:`sql_half_up`)."""
     return half_up(col, 4).alias(alias)
 
 
-def sql_r4(expr: str, alias: str) -> str:
-    """Oracle-side twin of :func:`r4`."""
-    return f"{sql_half_up(expr, 4)} AS {alias}"
-
-
-def sql_dsum(expr: str, alias: str) -> str:
-    """Oracle-side twin of :func:`dsum`."""
-    return f"CAST(SUM(CAST(({expr}) AS DECIMAL(18,6))) AS DOUBLE) AS {alias}"
+def sql_dsum(expr: str) -> str:
+    """Oracle-side twin of :func:`dsum` (callers add ``AS alias``)."""
+    return f"CAST(SUM(CAST(({expr}) AS DECIMAL(18,6))) AS DOUBLE)"
 
 
 _SCRATCH_ROOT: list[str] = []

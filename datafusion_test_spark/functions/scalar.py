@@ -17,8 +17,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .._util import ascii_lower, sane_ts_filter
-from ..io import table
+from .._util import (
+    ascii_lower,
+    sane_ts_filter,
+    sql_ascii_lower,
+    sql_sane_ts_where,
+)
+from ..io import SQL_FINITE_EMBEDDINGS, table
 
 
 def fn_string(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -602,11 +607,11 @@ ORACLE = {
         SELECT source_ci, n_docs, min_doc, n_distinct_binary, n_distinct_ci
         FROM per, c
     """,
-    "fn_string": """
+    "fn_string": f"""
         SELECT c_custkey,
                substr(c_name, 1, 8) AS name8,
                upper(c_mktsegment) AS seg_up,
-               translate(c_name, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz') AS name_lo,
+               {sql_ascii_lower("c_name")} AS name_lo,
                CAST(length(c_name) AS INT) AS name_len,
                trim('  ' || c_mktsegment || ' ') AS seg_trim,
                concat_ws('-', c_mktsegment, c_name) AS seg_name,
@@ -622,7 +627,7 @@ ORACLE = {
                array_to_string(str_split(p_type, ' '), '|') AS type_words
         FROM part
     """,
-    "fn_date": """
+    "fn_date": f"""
         SELECT o_orderkey,
                CAST(EXTRACT(YEAR FROM o_orderdate) AS INT) AS yr,
                CAST(EXTRACT(MONTH FROM o_orderdate) AS INT) AS mo,
@@ -632,8 +637,7 @@ ORACLE = {
                CAST(date_diff('day', CAST(o_orderdate AS DATE), DATE '2002-01-01') AS INT) AS days_to_2002,
                CAST(EXTRACT(QUARTER FROM o_orderdate) AS INT) AS qtr
         FROM orders
-        WHERE o_orderdate >= TIMESTAMP '1900-01-01'
-          AND o_orderdate < TIMESTAMP '2100-01-01'
+        WHERE {sql_sane_ts_where("o_orderdate")}
     """,
     "fn_math": """
         SELECT l_orderkey, l_linenumber,
@@ -683,7 +687,7 @@ ORACLE = {
                CAST('19' || '95' AS INT) AS str_int
         FROM orders
     """,
-    "fn_array": """
+    "fn_array": f"""
         SELECT vec_id,
                CAST(len(embedding) AS INT) AS dim,
                embedding[1] AS first_val,
@@ -694,7 +698,7 @@ ORACLE = {
                    AS vec_sum,
                list_aggregate(list_transform(embedding,
                    x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)), 'sum') AS vec_norm2
-        FROM (SELECT * REPLACE ((CASE WHEN len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(CAST(x AS DOUBLE)))) = 0 THEN embedding END) AS embedding) FROM embeddings) embeddings
+        FROM {SQL_FINITE_EMBEDDINGS} embeddings
     """,
     # struct/map construction + field access collapses to the underlying
     # columns — the oracle states that semantic identity, hash-checking the

@@ -13,6 +13,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ._util import finite_vec, sql_finite, sql_finite_vec
 from .session import tune
 
 TABLES = (
@@ -29,6 +30,19 @@ TABLES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+# The oracle halves of the read guards, as DuckDB relation text; callers
+# add their own alias (``FROM {SQL_FINITE_EVENTS} e``).  Embeddings: the
+# twin of the finite_vec guard table() applies at every read.  Events: the
+# twin of the _util.finite guard the statistical operators apply to
+# events.value at their observed-rows base.
+SQL_FINITE_EVENTS = (
+    f"(SELECT * REPLACE ({sql_finite('value')} AS value) FROM events)"
+)
+SQL_FINITE_EMBEDDINGS = (
+    f"(SELECT * REPLACE ({sql_finite_vec('embedding')} AS embedding) "
+    "FROM embeddings)"
+)
 
 # Reader-schema memo, keyed by (applicationId, path).  spark.read.parquet
 # re-infers the schema from footers on EVERY call — measured 97 ms/call
@@ -137,14 +151,12 @@ def table(
         # the finite-vector measurement contract: a vector with any
         # NaN/±Inf element (failed model forward pass) reads as NULL, so
         # every consumer reuses its proven NULL-embedding handling.  Every
-        # oracle's FROM embeddings carries the same SELECT * REPLACE guard.
+        # oracle reads embeddings through SQL_FINITE_EMBEDDINGS, its twin.
         # Engines genuinely disagree downstream of a NaN element (decimal
         # casts, approx quantiles, ANSI float->int), so the contract must
         # sit at the read.  See _util.finite_vec; ieee corpus, round 7.
         # Consumers that never touch `embedding` lose nothing: Catalyst
         # prunes the rewritten column and the scan skips it entirely.
-        from ._util import finite_vec
-
         df = df.withColumn("embedding", finite_vec("embedding"))
     if not fresh:
         _DF_CACHE[key] = df

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .._util import dsum, finite, half_up, r4, safe_corr, sql_dsum, sql_half_up
-from ..io import table
+from ..io import SQL_FINITE_EVENTS, table
 
 
 def agg_global(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1369,11 +1369,10 @@ QUERIES = {
 
 ORACLE = {
     # same unit-bucket histogram, same integer ceil-rank selection
-    "agg_tdigest_quantiles_bucketed": """
+    "agg_tdigest_quantiles_bucketed": f"""
         WITH e AS (
             SELECT event_type, value AS v
-            FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value
-                  END) AS value) FROM events) events
+            FROM {SQL_FINITE_EVENTS} events
             WHERE value IS NOT NULL
               AND value >= -9223372036854775808.0
               AND value <  9223372036854775808.0
@@ -1401,7 +1400,7 @@ ORACLE = {
                    AS p99_bucket
         FROM c GROUP BY event_type
     """,
-    "agg_wilson_rank": """
+    "agg_wilson_rank": f"""
         WITH g AS (
             SELECT l_partkey, CAST(count(*) AS BIGINT) AS n,
                    CAST(SUM(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)
@@ -1424,8 +1423,7 @@ ORACLE = {
         ),
         w AS (
             SELECT l_partkey, n, k,
-                   CAST(floor(raw * 1000000 + 0.5) AS DOUBLE) / 1000000
-                       AS wilson_low
+                   {sql_half_up("raw", 6)} AS wilson_low
             FROM b
         )
         SELECT CAST(row_number() OVER (
@@ -1435,7 +1433,7 @@ ORACLE = {
         FROM w
         QUALIFY rk <= 50
     """,
-    "agg_anova_eta": """
+    "agg_anova_eta": f"""
         WITH cells AS (
             SELECT event_type,
                    CAST(date_part('hour', ts) AS INTEGER) AS hr,
@@ -1445,7 +1443,7 @@ ORACLE = {
                    CAST(SUM(CAST(floor(value * 10000 + 0.5) AS BIGINT)
                             * CAST(floor(value * 10000 + 0.5) AS BIGINT))
                         AS BIGINT) AS q_h
-            FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events) events WHERE value IS NOT NULL
+            FROM {SQL_FINITE_EVENTS} events WHERE value IS NOT NULL
             GROUP BY event_type, hr
         ),
         t AS (
@@ -1464,14 +1462,16 @@ ORACLE = {
                CASE WHEN CAST(q AS DOUBLE)
                          - CAST(s AS DOUBLE) * CAST(s AS DOUBLE)
                            / CAST(n AS DOUBLE) > 0 THEN
-                   CAST(floor((CAST(b AS DOUBLE)
-                                + CAST(c AS DOUBLE) / 1000000.0
-                               - CAST(s AS DOUBLE) * CAST(s AS DOUBLE)
-                                 / CAST(n AS DOUBLE))
-                              / (CAST(q AS DOUBLE)
-                                 - CAST(s AS DOUBLE) * CAST(s AS DOUBLE)
-                                   / CAST(n AS DOUBLE))
-                              * 1000000 + 0.5) AS DOUBLE) / 1000000
+                   {sql_half_up(
+                       "(CAST(b AS DOUBLE) "
+                       "+ CAST(c AS DOUBLE) / 1000000.0 "
+                       "- CAST(s AS DOUBLE) * CAST(s AS DOUBLE) "
+                       "/ CAST(n AS DOUBLE)) "
+                       "/ (CAST(q AS DOUBLE) "
+                       "- CAST(s AS DOUBLE) * CAST(s AS DOUBLE) "
+                       "/ CAST(n AS DOUBLE))",
+                       6,
+                   )}
                END AS eta_sq
         FROM t
     """,
@@ -1500,18 +1500,18 @@ ORACLE = {
                     ELSE 'C' END AS abc_class
         FROM ranked CROSS JOIN t
     """,
-    "agg_cohort_ltv": """
+    "agg_cohort_ltv": f"""
         WITH f AS (
             SELECT user_id,
                    CAST(min(date_trunc('day', ts)) AS TIMESTAMP)
                        AS cohort_day
-            FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events) events GROUP BY user_id
+            FROM {SQL_FINITE_EVENTS} events GROUP BY user_id
         ),
         p AS (
             SELECT user_id,
                    CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
                    CAST(floor(value * 10000 + 0.5) AS BIGINT) AS v_s
-            FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events) events
+            FROM {SQL_FINITE_EVENTS} events
             WHERE event_type = 'purchase' AND value IS NOT NULL
         ),
         j AS (
@@ -1535,7 +1535,7 @@ ORACLE = {
                ) AS BIGINT) AS cum_value_s
         FROM g
     """,
-    "agg_new_vs_returning": """
+    "agg_new_vs_returning": f"""
         WITH e AS (
             SELECT user_id,
                    CAST(date_trunc('day', ts) AS TIMESTAMP) AS day
@@ -1551,14 +1551,16 @@ ORACLE = {
                CAST(count(DISTINCT CASE WHEN e.day = f.first_day
                           THEN e.user_id END) AS BIGINT) AS n_new_users,
                CAST(count(DISTINCT e.user_id) AS BIGINT) AS n_users,
-               CAST(floor(CAST(SUM(CASE WHEN e.day = f.first_day
-                               THEN 1 ELSE 0 END) AS DOUBLE)
-                          / count(*) * 10000 + 0.5) AS DOUBLE) / 10000
+               {sql_half_up(
+                   "CAST(SUM(CASE WHEN e.day = f.first_day "
+                   "THEN 1 ELSE 0 END) AS DOUBLE) "
+                   "/ count(*)"
+               )}
                    AS new_share
         FROM e JOIN f USING (user_id)
         GROUP BY e.day
     """,
-    "agg_hhi": """
+    "agg_hhi": f"""
         WITH per AS (
             SELECT c.c_mktsegment, o.o_custkey,
                    CAST(SUM(CAST(floor(o_totalprice) AS BIGINT))
@@ -1576,18 +1578,22 @@ ORACLE = {
         )
         SELECT c_mktsegment, n_custs, tot AS total_dollars,
                CASE WHEN tot > 0 THEN
-                   CAST(floor(CAST(sum_sq AS DOUBLE)
-                              / (CAST(tot AS DOUBLE) * CAST(tot AS DOUBLE))
-                              * 1000000 + 0.5) AS DOUBLE) / 1000000
+                   {sql_half_up(
+                       "CAST(sum_sq AS DOUBLE) "
+                       "/ (CAST(tot AS DOUBLE) * CAST(tot AS DOUBLE))",
+                       6,
+                   )}
                END AS hhi,
                CASE WHEN tot > 0 THEN
-                   CAST(floor(CAST(max_dollars AS DOUBLE)
-                              / CAST(tot AS DOUBLE)
-                              * 1000000 + 0.5) AS DOUBLE) / 1000000
+                   {sql_half_up(
+                       "CAST(max_dollars AS DOUBLE) "
+                       "/ CAST(tot AS DOUBLE)",
+                       6,
+                   )}
                END AS top_share
         FROM g
     """,
-    "agg_pareto": """
+    "agg_pareto": f"""
         WITH per AS (
             SELECT o_custkey,
                    CAST(SUM(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
@@ -1609,13 +1615,12 @@ ORACLE = {
                      CAST(SUM(cents) AS BIGINT) AS tot FROM per)
         SELECT t.n AS n_customers,
                CAST(min(r.r) AS BIGINT) AS k_top_customers,
-               CAST(floor(CAST(min(r.r) AS DOUBLE) / t.n * 10000 + 0.5)
-                    AS DOUBLE) / 10000 AS pct_customers_for_80pct
+               {sql_half_up("CAST(min(r.r) AS DOUBLE) / t.n")} AS pct_customers_for_80pct
         FROM ranked r CROSS JOIN t
         WHERE 5 * (r.pre + r.cents) >= 4 * t.tot
         GROUP BY t.n
     """,
-    "agg_benford": """
+    "agg_benford": f"""
         WITH c AS (
             SELECT CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
             FROM orders
@@ -1633,13 +1638,14 @@ ORACLE = {
         SELECT g.digit, g.n_obs,
                CAST((2 * t.n * ([301030, 176091, 124939, 96910, 79181, 66947, 57992, 51153, 45757])[g.digit] + 1000000)
                     // 2000000 AS BIGINT) AS n_expected,
-               CAST(floor(CAST(g.n_obs * 1000000 AS DOUBLE)
-                          / CAST(t.n * ([301030, 176091, 124939, 96910, 79181, 66947, 57992, 51153, 45757])[g.digit]
-                                 AS DOUBLE) * 10000 + 0.5)
-                    AS DOUBLE) / 10000 AS obs_over_exp
+               {sql_half_up(
+                   "CAST(g.n_obs * 1000000 AS DOUBLE) "
+                   "/ CAST(t.n * ([301030, 176091, 124939, 96910, 79181, 66947, 57992, 51153, 45757])[g.digit] "
+                   "AS DOUBLE)"
+               )} AS obs_over_exp
         FROM g CROSS JOIN tot t
     """,
-    "agg_gini": """
+    "agg_gini": f"""
         WITH per AS (
             SELECT o_custkey,
                    CAST(SUM(CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT))
@@ -1661,16 +1667,18 @@ ORACLE = {
         )
         SELECT n AS n_customers, sx AS total_cents,
                CASE WHEN n > 0 AND sx > 0 THEN
-                   CAST(floor((2.0 * CAST(srx AS DOUBLE)
-                               - CAST(n + 1 AS DOUBLE) * CAST(sx AS DOUBLE))
-                              / (CAST(n AS DOUBLE) * CAST(sx AS DOUBLE))
-                              * 1000000 + 0.5) AS DOUBLE) / 1000000
+                   {sql_half_up(
+                       "(2.0 * CAST(srx AS DOUBLE) "
+                       "- CAST(n + 1 AS DOUBLE) * CAST(sx AS DOUBLE)) "
+                       "/ (CAST(n AS DOUBLE) * CAST(sx AS DOUBLE))",
+                       6,
+                   )}
                END AS gini
         FROM t
     """,
     # the quadratic self-join phrasing — the SEMANTICS the x7 explode
     # replaces at scale
-    "agg_rolling_wau": """
+    "agg_rolling_wau": f"""
         WITH ed AS (
             SELECT DISTINCT user_id,
                    CAST(date_trunc('day', ts) AS TIMESTAMP) AS day
@@ -1688,8 +1696,7 @@ ORACLE = {
             FROM ed GROUP BY day
         )
         SELECT d.day, d.dau, w.wau,
-               CAST(floor(CAST(d.dau AS DOUBLE) / w.wau * 10000 + 0.5)
-                    AS DOUBLE) / 10000 AS stickiness
+               {sql_half_up("CAST(d.dau AS DOUBLE) / w.wau")} AS stickiness
         FROM dau d JOIN wau w ON d.day = w.day
     """,
     "agg_weighted_median": """
@@ -1745,18 +1752,18 @@ ORACLE = {
                (max(g) * count(*) > 5 * SUM(g)) AS salting_recommended
         FROM sizes
     """,
-    "agg_corr_matrix": """
-        SELECT 'l_quantity' AS col_a, 'l_extendedprice' AS col_b, CAST(floor(corr(l_quantity, l_extendedprice) * 10000 + 0.5) AS DOUBLE) / 10000 AS pearson_r FROM lineitem
+    "agg_corr_matrix": f"""
+        SELECT 'l_quantity' AS col_a, 'l_extendedprice' AS col_b, {sql_half_up("corr(l_quantity, l_extendedprice)")} AS pearson_r FROM lineitem
         UNION ALL
-        SELECT 'l_quantity' AS col_a, 'l_discount' AS col_b, CAST(floor(corr(l_quantity, l_discount) * 10000 + 0.5) AS DOUBLE) / 10000 AS pearson_r FROM lineitem
+        SELECT 'l_quantity' AS col_a, 'l_discount' AS col_b, {sql_half_up("corr(l_quantity, l_discount)")} AS pearson_r FROM lineitem
         UNION ALL
-        SELECT 'l_quantity' AS col_a, 'l_tax' AS col_b, CAST(floor(corr(l_quantity, l_tax) * 10000 + 0.5) AS DOUBLE) / 10000 AS pearson_r FROM lineitem
+        SELECT 'l_quantity' AS col_a, 'l_tax' AS col_b, {sql_half_up("corr(l_quantity, l_tax)")} AS pearson_r FROM lineitem
         UNION ALL
-        SELECT 'l_extendedprice' AS col_a, 'l_discount' AS col_b, CAST(floor(corr(l_extendedprice, l_discount) * 10000 + 0.5) AS DOUBLE) / 10000 AS pearson_r FROM lineitem
+        SELECT 'l_extendedprice' AS col_a, 'l_discount' AS col_b, {sql_half_up("corr(l_extendedprice, l_discount)")} AS pearson_r FROM lineitem
         UNION ALL
-        SELECT 'l_extendedprice' AS col_a, 'l_tax' AS col_b, CAST(floor(corr(l_extendedprice, l_tax) * 10000 + 0.5) AS DOUBLE) / 10000 AS pearson_r FROM lineitem
+        SELECT 'l_extendedprice' AS col_a, 'l_tax' AS col_b, {sql_half_up("corr(l_extendedprice, l_tax)")} AS pearson_r FROM lineitem
         UNION ALL
-        SELECT 'l_discount' AS col_a, 'l_tax' AS col_b, CAST(floor(corr(l_discount, l_tax) * 10000 + 0.5) AS DOUBLE) / 10000 AS pearson_r FROM lineitem
+        SELECT 'l_discount' AS col_a, 'l_tax' AS col_b, {sql_half_up("corr(l_discount, l_tax)")} AS pearson_r FROM lineitem
     """,
     "agg_hll_intersect": """
         SELECT CAST((SELECT count(*) FROM (
@@ -1827,25 +1834,21 @@ ORACLE = {
     """,
     "agg_global": f"""
         SELECT COUNT(*) AS n_rows,
-               {sql_dsum('l_quantity', 'sum_qty')},
-               CAST(floor(AVG(l_extendedprice) * 10000 + 0.5) AS DOUBLE)
-                   / 10000 AS avg_price,
+               {sql_dsum('l_quantity')} AS sum_qty,
+               {sql_half_up("AVG(l_extendedprice)")} AS avg_price,
                MIN(l_shipdate) AS min_ship,
                MAX(l_shipdate) AS max_ship
         FROM lineitem
     """,
     "agg_groupby": f"""
         SELECT l_returnflag, l_linestatus,
-               {sql_dsum('l_quantity', 'sum_qty')},
-               {sql_dsum('l_extendedprice', 'sum_base_price')},
-               {sql_dsum('l_extendedprice * (1 - l_discount)', 'sum_disc_price')},
-               {sql_dsum('l_extendedprice * (1 - l_discount) * (1 + l_tax)', 'sum_charge')},
-               CAST(floor(AVG(l_quantity) * 10000 + 0.5) AS DOUBLE)
-                   / 10000 AS avg_qty,
-               CAST(floor(AVG(l_extendedprice) * 10000 + 0.5) AS DOUBLE)
-                   / 10000 AS avg_price,
-               CAST(floor(AVG(l_discount) * 10000 + 0.5) AS DOUBLE)
-                   / 10000 AS avg_disc,
+               {sql_dsum('l_quantity')} AS sum_qty,
+               {sql_dsum('l_extendedprice')} AS sum_base_price,
+               {sql_dsum('l_extendedprice * (1 - l_discount)')} AS sum_disc_price,
+               {sql_dsum('l_extendedprice * (1 - l_discount) * (1 + l_tax)')} AS sum_charge,
+               {sql_half_up("AVG(l_quantity)")} AS avg_qty,
+               {sql_half_up("AVG(l_extendedprice)")} AS avg_price,
+               {sql_half_up("AVG(l_discount)")} AS avg_disc,
                COUNT(*) AS count_order
         FROM lineitem
         WHERE l_shipdate <= TIMESTAMP '1998-09-02'
@@ -1860,7 +1863,7 @@ ORACLE = {
     """,
     "agg_having": f"""
         SELECT o_custkey, COUNT(*) AS n_orders,
-               {sql_dsum('o_totalprice', 'total_spent')}
+               {sql_dsum('o_totalprice')} AS total_spent
         FROM orders GROUP BY o_custkey HAVING COUNT(*) >= 5
     """,
     "agg_filter_clause": """
@@ -1884,7 +1887,7 @@ ORACLE = {
     """,
     "agg_cube": f"""
         SELECT l_returnflag, l_linestatus, COUNT(*) AS n_rows,
-               {sql_dsum('l_quantity', 'sum_qty')}
+               {sql_dsum('l_quantity')} AS sum_qty
         FROM lineitem
         GROUP BY CUBE (l_returnflag, l_linestatus)
         HAVING COUNT(*) >= 1
@@ -1936,23 +1939,17 @@ ORACLE = {
                COUNT(*) AS n_orders
         FROM orders GROUP BY o_custkey
     """,
-    "agg_stats": """
+    "agg_stats": f"""
         SELECT l_returnflag,
-               CAST(floor(STDDEV_SAMP(l_quantity) * 10000 + 0.5) AS DOUBLE)
-                   / 10000 AS sd_qty,
-               CAST(floor(VAR_SAMP(l_discount) * 10000 + 0.5) AS DOUBLE)
-                   / 10000 AS var_disc,
-               CAST(floor(CORR(l_quantity, l_extendedprice) * 10000 + 0.5)
-                   AS DOUBLE) / 10000 AS corr_qty_price,
-               CAST(floor(QUANTILE_CONT(l_quantity, 0.5) * 10000 + 0.5)
-                   AS DOUBLE) / 10000 AS median_qty
+               {sql_half_up("STDDEV_SAMP(l_quantity)")} AS sd_qty,
+               {sql_half_up("VAR_SAMP(l_discount)")} AS var_disc,
+               {sql_half_up("CORR(l_quantity, l_extendedprice)")} AS corr_qty_price,
+               {sql_half_up("QUANTILE_CONT(l_quantity, 0.5)")} AS median_qty
         FROM lineitem GROUP BY l_returnflag
     """,
-    "agg_approx_quantile": """
-        SELECT CAST(floor(QUANTILE_CONT(l_extendedprice, 0.5) * 10000 + 0.5)
-                   AS DOUBLE) / 10000 AS exact_p50,
-               CAST(floor(QUANTILE_CONT(l_extendedprice, 0.95) * 10000 + 0.5)
-                   AS DOUBLE) / 10000 AS exact_p95,
+    "agg_approx_quantile": f"""
+        SELECT {sql_half_up("QUANTILE_CONT(l_extendedprice, 0.5)")} AS exact_p50,
+               {sql_half_up("QUANTILE_CONT(l_extendedprice, 0.95)")} AS exact_p95,
                TRUE AS p50_ok,
                TRUE AS p95_ok
         FROM lineitem

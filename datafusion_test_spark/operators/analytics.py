@@ -28,8 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .._util import DEC, finite, half_up, r4, sql_half_up as _sql_hu
-from ..io import table
+from .._util import DEC, finite, half_up, r4, sql_half_up
+from ..io import SQL_FINITE_EVENTS, table
 
 
 def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -711,8 +711,6 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _autocorr_sql() -> str:
-    from .._util import sql_half_up
-
     lag_cols = ",\n                   ".join(
         f"lag(value, {k}) OVER w AS l{k}" for k in range(1, _ACF_LAGS + 1)
     )
@@ -730,7 +728,7 @@ def _autocorr_sql() -> str:
         WITH lagged AS (
             SELECT event_type, value AS v,
                    {lag_cols}
-            FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events) events WHERE value IS NOT NULL
+            FROM {SQL_FINITE_EVENTS} events WHERE value IS NOT NULL
             WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id)
         ),
         t AS (
@@ -749,8 +747,6 @@ def _pagerank_sql() -> str:
     """Unrolled oracle: a fixed iteration count means the loop can be a
     plain (non-recursive) CTE chain pr0 → pr1 → … — same integer
     arithmetic, no recursive-CTE aggregate restrictions to fight."""
-    from .._util import sql_half_up
-
     chain = f"""e AS (
             SELECT DISTINCT l_orderkey * 2 AS src, l_partkey * 2 + 1 AS dst
             FROM lineitem
@@ -1895,7 +1891,7 @@ _STD_Z = (
 )
 
 ORACLE = {
-    "join_basket_lift": """
+    "join_basket_lift": f"""
         WITH li AS (
             SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem
         ),
@@ -1921,16 +1917,13 @@ ORACLE = {
                    ORDER BY (n_ab * n * 10000) // (n_a * n_b) DESC, pa, pb
                ) AS INTEGER) AS rk,
                pa, pb, n_ab, n_a, n_b,
-               CAST(floor(CAST(n_ab AS DOUBLE) / n * 10000 + 0.5)
-                    AS DOUBLE) / 10000 AS support,
-               CAST(floor(CAST(n_ab AS DOUBLE) / n_a * 10000 + 0.5)
-                    AS DOUBLE) / 10000 AS confidence,
-               CAST(floor(CAST(n_ab * n AS DOUBLE) / (n_a * n_b)
-                          * 10000 + 0.5) AS DOUBLE) / 10000 AS lift
+               {sql_half_up("CAST(n_ab AS DOUBLE) / n")} AS support,
+               {sql_half_up("CAST(n_ab AS DOUBLE) / n_a")} AS confidence,
+               {sql_half_up("CAST(n_ab * n AS DOUBLE) / (n_a * n_b)")} AS lift
         FROM j
         QUALIFY rk <= 50
     """,
-    "seq_path_census": """
+    "seq_path_census": f"""
         WITH t AS (
             SELECT event_type AS step1,
                    lead(event_type, 1) OVER w AS step2,
@@ -1948,16 +1941,15 @@ ORACLE = {
                    ORDER BY n DESC, step1, step2, step3
                ) AS INTEGER) AS rk,
                step1, step2, step3, n,
-               CAST(floor(CAST(n AS DOUBLE) / total * 10000 + 0.5)
-                    AS DOUBLE) / 10000 AS share
+               {sql_half_up("CAST(n AS DOUBLE) / total")} AS share
         FROM g CROSS JOIN tot
         QUALIFY rk <= 20
     """,
-    "ts_peaks": """
+    "ts_peaks": f"""
         WITH t AS (
             SELECT event_type, event_id, ts, value,
                    CAST(floor(value * 10000 + 0.5) AS BIGINT) AS v_s
-            FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events) events WHERE value IS NOT NULL
+            FROM {SQL_FINITE_EVENTS} events WHERE value IS NOT NULL
         ),
         s AS (
             SELECT *, lag(v_s) OVER w AS prev_s, lead(v_s) OVER w AS next_s
@@ -1971,8 +1963,8 @@ ORACLE = {
         WHERE prev_s IS NOT NULL AND next_s IS NOT NULL
           AND LEAST(v_s - prev_s, v_s - next_s) >= 200000
     """,
-    "feature_rfm_score": """
-        WITH f AS (SELECT max(epoch_us(ts)) AS max_us FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events) events),
+    "feature_rfm_score": f"""
+        WITH f AS (SELECT max(epoch_us(ts)) AS max_us FROM {SQL_FINITE_EVENTS} events),
         per AS (
             SELECT user_id,
                    CAST(max(epoch_us(ts)) AS BIGINT) AS last_us,
@@ -1980,7 +1972,7 @@ ORACLE = {
                    CAST(COALESCE(SUM(CAST(floor(value * 10000 + 0.5)
                                           AS BIGINT)), 0) AS BIGINT)
                        AS money_s
-            FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events) events GROUP BY user_id
+            FROM {SQL_FINITE_EVENTS} events GROUP BY user_id
         ),
         r AS (
             SELECT p.*,
@@ -2046,7 +2038,7 @@ ORACLE = {
         )
         SELECT * FROM credited UNION ALL SELECT * FROM unattributed
     """,
-    "agg_life_table": """
+    "agg_life_table": f"""
         WITH per AS (
             SELECT user_id,
                    CAST(min(epoch_us(ts)) AS BIGINT) AS first_us,
@@ -2078,11 +2070,10 @@ ORACLE = {
         )
         SELECT CAST(k AS BIGINT) AS lifetime_day, n_at_risk,
                d AS n_churned, c AS n_censored,
-               CAST(floor(CAST(d AS DOUBLE) / n_at_risk * 1000000 + 0.5)
-                    AS DOUBLE) / 1000000 AS hazard
+               {sql_half_up("CAST(d AS DOUBLE) / n_at_risk", 6)} AS hazard
         FROM t
     """,
-    "ts_absence_alarm": """
+    "ts_absence_alarm": f"""
         WITH per AS (
             SELECT user_id, CAST(max(epoch_us(ts)) AS BIGINT) AS last_us,
                    CAST(count(*) AS BIGINT) AS n_events
@@ -2091,17 +2082,18 @@ ORACLE = {
         f AS (SELECT CAST(max(epoch_us(ts)) AS BIGINT) AS max_us FROM events)
         SELECT p.user_id, p.n_events,
                CAST(f.max_us - p.last_us AS BIGINT) AS silent_us,
-               CAST(floor(CAST(f.max_us - p.last_us AS DOUBLE)
-                          / 86400000000.0 * 10000 + 0.5)
-                    AS DOUBLE) / 10000 AS silent_days,
+               {sql_half_up(
+                   "CAST(f.max_us - p.last_us AS DOUBLE) "
+                   "/ 86400000000.0"
+               )} AS silent_days,
                (f.max_us - p.last_us > 172800000000) AS alarm
         FROM per p CROSS JOIN f
     """,
-    "feature_winsorize": """
+    "feature_winsorize": f"""
         WITH t AS (
             SELECT event_type, event_id,
                    CAST(floor(value * 10000 + 0.5) AS BIGINT) AS v_s
-            FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events) events WHERE value IS NOT NULL
+            FROM {SQL_FINITE_EVENTS} events WHERE value IS NOT NULL
         ),
         r AS (
             SELECT *,
@@ -2129,15 +2121,17 @@ ORACLE = {
                CAST(SUM(CASE WHEN t.v_s > c.p95_s THEN 1 ELSE 0 END)
                     AS BIGINT) AS n_above,
                CASE WHEN SUM(t.v_s) > 0 THEN
-                   CAST(floor(CAST(SUM(CASE WHEN t.v_s > c.p95_s
-                                   THEN t.v_s - c.p95_s ELSE 0 END)
-                              AS DOUBLE) / SUM(t.v_s)
-                              * 1000000 + 0.5) AS DOUBLE) / 1000000
+                   {sql_half_up(
+                       "CAST(SUM(CASE WHEN t.v_s > c.p95_s "
+                       "THEN t.v_s - c.p95_s ELSE 0 END) "
+                       "AS DOUBLE) / SUM(t.v_s)",
+                       6,
+                   )}
                END AS clipped_share
         FROM t JOIN caps c USING (event_type)
         GROUP BY t.event_type
     """,
-    "seq_markov_transitions": """
+    "seq_markov_transitions": f"""
         WITH p AS (
             SELECT lag(event_type) OVER w AS from_state,
                    event_type AS to_state
@@ -2152,12 +2146,10 @@ ORACLE = {
         SELECT from_state, to_state, n,
                CAST(SUM(n) OVER (PARTITION BY from_state) AS BIGINT)
                    AS row_total,
-               CAST(floor(CAST(n AS DOUBLE)
-                          / SUM(n) OVER (PARTITION BY from_state)
-                          * 10000 + 0.5) AS DOUBLE) / 10000 AS p
+               {sql_half_up("CAST(n AS DOUBLE) / SUM(n) OVER (PARTITION BY from_state)")} AS p
         FROM g
     """,
-    "ts_period_growth": """
+    "ts_period_growth": f"""
         WITH g AS (
             SELECT event_type,
                    CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
@@ -2168,9 +2160,7 @@ ORACLE = {
                CAST(lag(n) OVER w AS BIGINT) AS prev_n,
                CAST(n - lag(n) OVER w AS BIGINT) AS delta,
                CASE WHEN lag(n) OVER w > 0 THEN
-                   CAST(floor(CAST(n - lag(n) OVER w AS DOUBLE)
-                              / lag(n) OVER w * 10000 + 0.5)
-                        AS DOUBLE) / 10000
+                   {sql_half_up("CAST(n - lag(n) OVER w AS DOUBLE) / lag(n) OVER w")}
                END AS growth
         FROM g
         WINDOW w AS (PARTITION BY event_type ORDER BY day)
@@ -2181,7 +2171,7 @@ ORACLE = {
                    CAST(date_trunc('day', ts) AS TIMESTAMP) AS day,
                    CAST(date_part('hour', ts) AS INTEGER) AS hr,
                    CAST(floor(value * 10000 + 0.5) AS BIGINT) AS v_s
-            FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events) events WHERE value IS NOT NULL
+            FROM {SQL_FINITE_EVENTS} events WHERE value IS NOT NULL
         ),
         ld AS (SELECT max(day) AS last_day FROM b),
         train AS (
@@ -2198,7 +2188,7 @@ ORACLE = {
                CAST(COALESCE(any_value(tr.n_train), 0) AS BIGINT)
                    AS n_train,
                CASE WHEN any_value(tr.n_train) IS NOT NULL THEN
-                   {_sql_hu(
+                   {sql_half_up(
                        "CAST(SUM(abs(t.v_s * tr.n_train - tr.s_train))"
                        " AS DOUBLE)"
                        " / CAST(any_value(tr.n_train) * 10000 * count(*)"
@@ -2212,7 +2202,7 @@ ORACLE = {
         WITH rows_ AS (
             SELECT event_id, event_type, value,
                    CAST(floor(value * 10000 + 0.5) AS BIGINT) AS v_s
-            FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events) events WHERE value IS NOT NULL
+            FROM {SQL_FINITE_EVENTS} events WHERE value IS NOT NULL
         ),
         g AS (
             SELECT event_type, CAST(count(*) AS BIGINT) AS n,
@@ -2224,7 +2214,7 @@ ORACLE = {
                CASE WHEN n > 1
                      AND CAST(n AS DOUBLE) * CAST(q AS DOUBLE)
                          - CAST(s AS DOUBLE) * CAST(s AS DOUBLE) > 0
-                    THEN {_sql_hu(_STD_Z)} END AS z
+                    THEN {sql_half_up(_STD_Z)} END AS z
         FROM rows_ r JOIN g USING (event_type)
     """,
     "join_interval_relations": """
@@ -2294,7 +2284,7 @@ ORACLE = {
                    CAST(count(*) AS BIGINT) AS n,
                    CAST(SUM(CAST(floor(value * 10000 + 0.5) AS BIGINT))
                         AS BIGINT) AS s
-            FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events) events WHERE value IS NOT NULL
+            FROM {SQL_FINITE_EVENTS} events WHERE value IS NOT NULL
             GROUP BY event_type, hr
         ),
         t AS (
@@ -2306,8 +2296,8 @@ ORACLE = {
             FROM g
         )
         SELECT event_type, hr, n,
-               {_sql_hu("CAST(s AS DOUBLE) / (n * 10000)")} AS mean_value,
-               CASE WHEN tot_s <> 0 THEN {_sql_hu(
+               {sql_half_up("CAST(s AS DOUBLE) / (n * 10000)")} AS mean_value,
+               CASE WHEN tot_s <> 0 THEN {sql_half_up(
                    "CAST(s * tot_n AS DOUBLE) / CAST(tot_s * n AS DOUBLE)"
                )} END AS seasonal_index
         FROM t
@@ -2330,11 +2320,11 @@ ORACLE = {
             FROM o
         )
         SELECT o.o_orderkey, o.cat, o.y, s.n_cat,
-               CASE WHEN s.n_cat > 1 THEN {_sql_hu(
+               CASE WHEN s.n_cat > 1 THEN {sql_half_up(
                    "CAST(s.sum_cat - o.y AS DOUBLE)"
                    " / CAST(s.n_cat - 1 AS DOUBLE)"
                )} END AS loo_enc,
-               {_sql_hu(
+               {sql_half_up(
                    f"CAST((s.sum_cat - o.y) * t.n_tot + {_TE_M} * t.s_tot"
                    f" AS DOUBLE)"
                    f" / CAST((s.n_cat - 1 + {_TE_M}) * t.n_tot AS DOUBLE)"
@@ -2357,20 +2347,18 @@ ORACLE = {
         )
         SELECT part_a, part_b, common,
                da.deg AS deg_a, db.deg AS deg_b,
-               CAST(floor(CAST(common AS DOUBLE)
-                          / (da.deg + db.deg - common) * 10000 + 0.5)
-                    AS DOUBLE) / 10000 AS jaccard
+               {sql_half_up("CAST(common AS DOUBLE) / (da.deg + db.deg - common)")} AS jaccard
         FROM pairs
         JOIN deg da ON da.p = part_a
         JOIN deg db ON db.p = part_b
         ORDER BY common DESC, part_a, part_b
         LIMIT {_CN_TOPK}
     """,
-    "ts_changepoint": """
+    "ts_changepoint": f"""
         WITH u AS (
             SELECT event_type, ts, event_id,
                    CAST(floor(value * 10000 + 0.5) AS BIGINT) AS v_s
-            FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events) events WHERE value IS NOT NULL
+            FROM {SQL_FINITE_EVENTS} events WHERE value IS NOT NULL
         ),
         r AS (
             SELECT event_type,
@@ -2402,27 +2390,24 @@ ORACLE = {
         SELECT event_type, n, i AS cp_index, CAST(diff AS BIGINT) AS max_dev
         FROM rk WHERE rr = 1
     """,
-    "agg_regression": """
+    "agg_regression": f"""
         SELECT event_type,
                CAST(regr_count(value, CAST(hour(ts) AS DOUBLE)) AS BIGINT)
                    AS n_points,
-               CAST(floor(regr_slope(value, CAST(hour(ts) AS DOUBLE))
-                   * 10000 + 0.5) AS DOUBLE) / 10000 AS slope,
-               CAST(floor(regr_intercept(value, CAST(hour(ts) AS DOUBLE))
-                   * 10000 + 0.5) AS DOUBLE) / 10000 AS intercept,
-               CAST(floor(regr_r2(value, CAST(hour(ts) AS DOUBLE))
-                   * 10000 + 0.5) AS DOUBLE) / 10000 AS r2
-        FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events) events GROUP BY event_type
+               {sql_half_up("regr_slope(value, CAST(hour(ts) AS DOUBLE))")} AS slope,
+               {sql_half_up("regr_intercept(value, CAST(hour(ts) AS DOUBLE))")} AS intercept,
+               {sql_half_up("regr_r2(value, CAST(hour(ts) AS DOUBLE))")} AS r2
+        FROM {SQL_FINITE_EVENTS} events GROUP BY event_type
     """,
     "anomaly_mad": f"""
         WITH med AS (
             SELECT event_type, quantile_cont(value, 0.5) AS med
-            FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events) events GROUP BY event_type
+            FROM {SQL_FINITE_EVENTS} events GROUP BY event_type
         ),
         dev AS (
             SELECT e.event_type, m.med,
                    abs(e.value - m.med) AS adev
-            FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events) e JOIN med m USING (event_type)
+            FROM {SQL_FINITE_EVENTS} e JOIN med m USING (event_type)
         ),
         mad AS (
             SELECT event_type, quantile_cont(adev, 0.5) AS mad
@@ -2430,10 +2415,8 @@ ORACLE = {
         )
         SELECT d.event_type,
                CAST(count(*) AS BIGINT) AS n_events,
-               CAST(floor(any_value(d.med) * 10000 + 0.5) AS DOUBLE)
-                   / 10000 AS med,
-               CAST(floor(any_value(ma.mad) * 10000 + 0.5) AS DOUBLE)
-                   / 10000 AS mad,
+               {sql_half_up("any_value(d.med)")} AS med,
+               {sql_half_up("any_value(ma.mad)")} AS mad,
                CAST(count(*) FILTER (WHERE d.adev > {_MAD_K!r} * ma.mad)
                     AS BIGINT) AS n_outliers
         FROM dev d JOIN mad ma USING (event_type)

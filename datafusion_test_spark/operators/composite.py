@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .._util import dsum, r4, sql_dsum
+from .._util import dsum, r4, sql_dsum, sql_half_up
 from ..io import parallel, table
 
 
@@ -265,16 +265,13 @@ QUERIES = {
 ORACLE = {
     "tpch_q1_shape": f"""
         SELECT l_returnflag, l_linestatus,
-               {sql_dsum('l_quantity', 'sum_qty')},
-               {sql_dsum('l_extendedprice', 'sum_base_price')},
-               {sql_dsum('l_extendedprice * (1 - l_discount)', 'sum_disc_price')},
-               {sql_dsum('l_extendedprice * (1 - l_discount) * (1 + l_tax)', 'sum_charge')},
-               CAST(floor(AVG(l_quantity) * 10000 + 0.5) AS DOUBLE)
-                   / 10000 AS avg_qty,
-               CAST(floor(AVG(l_extendedprice) * 10000 + 0.5) AS DOUBLE)
-                   / 10000 AS avg_price,
-               CAST(floor(AVG(l_discount) * 10000 + 0.5) AS DOUBLE)
-                   / 10000 AS avg_disc,
+               {sql_dsum('l_quantity')} AS sum_qty,
+               {sql_dsum('l_extendedprice')} AS sum_base_price,
+               {sql_dsum('l_extendedprice * (1 - l_discount)')} AS sum_disc_price,
+               {sql_dsum('l_extendedprice * (1 - l_discount) * (1 + l_tax)')} AS sum_charge,
+               {sql_half_up("AVG(l_quantity)")} AS avg_qty,
+               {sql_half_up("AVG(l_extendedprice)")} AS avg_price,
+               {sql_half_up("AVG(l_discount)")} AS avg_disc,
                COUNT(*) AS count_order
         FROM lineitem
         WHERE l_shipdate <= TIMESTAMP '2000-09-02'
@@ -282,7 +279,7 @@ ORACLE = {
         ORDER BY l_returnflag, l_linestatus
     """,
     "tpch_q6_shape": f"""
-        SELECT {sql_dsum('l_extendedprice * l_discount', 'revenue')},
+        SELECT {sql_dsum('l_extendedprice * l_discount')} AS revenue,
                COUNT(*) AS n_items
         FROM lineitem
         WHERE l_shipdate >= TIMESTAMP '1998-01-01'
@@ -291,7 +288,7 @@ ORACLE = {
           AND l_quantity < 24
     """,
     "tpch_q19_shape": f"""
-        SELECT {sql_dsum('l_extendedprice * (1 - l_discount)', 'revenue')},
+        SELECT {sql_dsum('l_extendedprice * (1 - l_discount)')} AS revenue,
                COUNT(*) AS n_items
         FROM lineitem JOIN part ON l_partkey = p_partkey
         WHERE (p_brand = 'Brand#11' AND p_size BETWEEN 1 AND 15
@@ -314,8 +311,8 @@ ORACLE = {
     "tpch_q14_shape": f"""
         WITH s AS (
             SELECT
-                {sql_dsum("CASE WHEN p_type = 'PROMO' THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END", 'promo_rev')},
-                {sql_dsum('l_extendedprice * (1 - l_discount)', 'total_rev')}
+                {sql_dsum("CASE WHEN p_type = 'PROMO' THEN l_extendedprice * (1 - l_discount) ELSE 0.0 END")} AS promo_rev,
+                {sql_dsum('l_extendedprice * (1 - l_discount)')} AS total_rev
             FROM lineitem JOIN part ON l_partkey = p_partkey
             WHERE l_shipdate >= TIMESTAMP '1998-06-01'
               AND l_shipdate <  TIMESTAMP '1998-07-01'
@@ -326,7 +323,7 @@ ORACLE = {
     """,
     "tpch_q3_shape": f"""
         SELECT l_orderkey, o_orderdate,
-               {sql_dsum('l_extendedprice * (1 - l_discount)', 'revenue')}
+               {sql_dsum('l_extendedprice * (1 - l_discount)')} AS revenue
         FROM lineitem
         JOIN orders ON l_orderkey = o_orderkey
         JOIN customer ON o_custkey = c_custkey
@@ -339,7 +336,7 @@ ORACLE = {
     """,
     "tpch_q5_shape": f"""
         SELECT n_name,
-               {sql_dsum('l_extendedprice * (1 - l_discount)', 'revenue')}
+               {sql_dsum('l_extendedprice * (1 - l_discount)')} AS revenue
         FROM lineitem
         JOIN orders ON l_orderkey = o_orderkey
         JOIN supplier ON l_suppkey = s_suppkey
@@ -353,9 +350,9 @@ ORACLE = {
     "tpch_q18_shape": f"""
         WITH big AS (
             SELECT l_orderkey,
-                   {sql_dsum('l_quantity', 'total_qty')}
+                   {sql_dsum('l_quantity')} AS total_qty
             FROM lineitem GROUP BY l_orderkey
-            HAVING CAST(SUM(CAST((l_quantity) AS DECIMAL(18,6))) AS DOUBLE) > 180.0
+            HAVING {sql_dsum("l_quantity")} > 180.0
         )
         SELECT o_orderkey, o_custkey, o_orderdate, o_totalprice, total_qty
         FROM orders JOIN big ON o_orderkey = l_orderkey
@@ -364,7 +361,7 @@ ORACLE = {
     """,
     "tpch_q10_shape": f"""
         SELECT c_custkey, c_name, n_name,
-               {sql_dsum('l_extendedprice * (1 - l_discount)', 'lost_revenue')},
+               {sql_dsum('l_extendedprice * (1 - l_discount)')} AS lost_revenue,
                COUNT(*) AS n_items
         FROM lineitem
         JOIN orders ON l_orderkey = o_orderkey

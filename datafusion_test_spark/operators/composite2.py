@@ -43,12 +43,6 @@ def _davg(col, alias):
     return (F.sum(col.cast(DEC)).cast("double") / F.count(F.lit(1))).alias(alias)
 
 
-def _sql_davg(expr, alias):
-    return (
-        f"CAST(SUM(CAST(({expr}) AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*) AS {alias}"
-    )
-
-
 _REV = "l_extendedprice * (1 - l_discount)"
 
 
@@ -499,7 +493,7 @@ QUERIES = {
 ORACLE = {
     "tpch_q7_shape": f"""
         SELECT supp_nation, cust_nation, l_year,
-               {sql_dsum(_REV, 'revenue')}
+               {sql_dsum(_REV)} AS revenue
         FROM (
             SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
                    CAST(EXTRACT(year FROM l_shipdate) AS INT) AS l_year,
@@ -536,8 +530,8 @@ ORACLE = {
               AND o_orderdate <  TIMESTAMP '1998-01-01'
         ), byyear AS (
             SELECT o_year,
-                   {sql_dsum("CASE WHEN supp_nation = 'NATION_7' THEN vol ELSE 0.0 END", 'nation_rev')},
-                   {sql_dsum('vol', 'total_rev')}
+                   {sql_dsum("CASE WHEN supp_nation = 'NATION_7' THEN vol ELSE 0.0 END")} AS nation_rev,
+                   {sql_dsum('vol')} AS total_rev
             FROM flat GROUP BY o_year
         )
         SELECT o_year, ROUND(nation_rev / total_rev, 4) AS mkt_share,
@@ -547,7 +541,7 @@ ORACLE = {
     "tpch_q9_shape": f"""
         SELECT n_name AS nation,
                CAST(EXTRACT(year FROM o_orderdate) AS INT) AS o_year,
-               {sql_dsum('l_extendedprice * (1 - l_discount) - 0.6 * p_retailprice * l_quantity', 'sum_profit')}
+               {sql_dsum('l_extendedprice * (1 - l_discount) - 0.6 * p_retailprice * l_quantity')} AS sum_profit
         FROM lineitem
         JOIN part ON l_partkey = p_partkey
         JOIN supplier ON l_suppkey = s_suppkey
@@ -563,10 +557,10 @@ ORACLE = {
             FROM lineitem JOIN supplier ON l_suppkey = s_suppkey
             WHERE s_nationkey = 5
         ), per_part AS (
-            SELECT l_partkey, {sql_dsum('l_extendedprice', 'value')}
+            SELECT l_partkey, {sql_dsum('l_extendedprice')} AS value
             FROM supplied GROUP BY l_partkey
         ), tot AS (
-            SELECT {sql_dsum('l_extendedprice', 'total_value')},
+            SELECT {sql_dsum('l_extendedprice')} AS total_value,
                    COUNT(DISTINCT l_partkey) AS n_parts
             FROM supplied
         )
@@ -604,7 +598,7 @@ ORACLE = {
     "tpch_q15_shape": f"""
         WITH revenue AS (
             SELECT l_suppkey AS supplier_no,
-                   {sql_dsum(_REV, 'total_revenue')}
+                   {sql_dsum(_REV)} AS total_revenue
             FROM lineitem
             WHERE l_shipdate >= TIMESTAMP '1997-01-01'
               AND l_shipdate <  TIMESTAMP '1997-04-01'
@@ -635,10 +629,10 @@ ORACLE = {
             WHERE p_brand = 'Brand#11' AND p_type = 'SMALL'
         ), avg_q AS (
             SELECT l_partkey AS a_partkey,
-                   {_sql_davg('l_quantity', 'avg_qty')}
+                   {sql_dsum('l_quantity')} / COUNT(*) AS avg_qty
             FROM pli GROUP BY l_partkey
         ), small AS (
-            SELECT {sql_dsum('l_extendedprice', 'total_price')},
+            SELECT {sql_dsum('l_extendedprice')} AS total_price,
                    COUNT(*) AS n_lines
             FROM pli JOIN avg_q ON l_partkey = a_partkey
             WHERE l_quantity < 0.5 * avg_qty
@@ -678,7 +672,7 @@ ORACLE = {
     """,
     "tpch_q20_shape": f"""
         WITH qualifying AS (
-            SELECT l_suppkey, {sql_dsum('l_quantity', 'red_qty')}
+            SELECT l_suppkey, {sql_dsum('l_quantity')} AS red_qty
             FROM lineitem
             WHERE l_shipdate >= TIMESTAMP '1997-01-01'
               AND l_shipdate <  TIMESTAMP '1998-01-01'
@@ -686,7 +680,7 @@ ORACLE = {
                   SELECT p_partkey FROM part WHERE p_name LIKE 'red%'
               )
             GROUP BY l_suppkey
-            HAVING CAST(SUM(CAST((l_quantity) AS DECIMAL(18,6))) AS DOUBLE) > 300.0
+            HAVING {sql_dsum("l_quantity")} > 300.0
         )
         SELECT s_suppkey, s_name, red_qty
         FROM supplier JOIN qualifying ON s_suppkey = l_suppkey
@@ -720,11 +714,11 @@ ORACLE = {
             SELECT c_custkey, c_nationkey, c_acctbal
             FROM customer WHERE c_nationkey IN (11, 13, 15, 17, 19)
         ), avg_bal AS (
-            SELECT {_sql_davg('c_acctbal', 'avg_bal')}
+            SELECT {sql_dsum('c_acctbal')} / COUNT(*) AS avg_bal
             FROM sel WHERE c_acctbal > 0.0
         )
         SELECT c_nationkey AS cntry, COUNT(*) AS numcust,
-               {sql_dsum('c_acctbal', 'totacctbal')}
+               {sql_dsum('c_acctbal')} AS totacctbal
         FROM sel, avg_bal
         WHERE c_acctbal > avg_bal
           AND NOT EXISTS (

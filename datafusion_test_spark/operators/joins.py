@@ -25,8 +25,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .._util import dsum, finite, scratch_dir
-from ..io import table
+from .._util import dsum, finite, scratch_dir, sql_dsum
+from ..io import SQL_FINITE_EMBEDDINGS, SQL_FINITE_EVENTS, table
 
 
 def join_inner(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -863,12 +863,11 @@ QUERIES = {
 ORACLE = {
     # the naive per-event subquery the window phrasing replaces — the
     # oracle states the SEMANTICS (strictly-preceding hour), not the plan
-    "join_asof_aggregate": """
+    "join_asof_aggregate": f"""
         WITH e AS (
             SELECT user_id, event_id, ts, event_type, value,
                    epoch_us(ts) AS us
-            FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value
-                  END) AS value) FROM events) events
+            FROM {SQL_FINITE_EVENTS} events
             WHERE event_type IN ('click', 'view')
         )
         SELECT c.user_id, c.event_id, c.ts,
@@ -904,7 +903,7 @@ ORACLE = {
         WITH p AS (
             SELECT vec_id, CAST(embedding[1] AS DOUBLE) AS x,
                    CAST(embedding[2] AS DOUBLE) AS y
-            FROM (SELECT * REPLACE ((CASE WHEN len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(CAST(x AS DOUBLE)))) = 0 THEN embedding END) AS embedding) FROM embeddings) embeddings
+            FROM {SQL_FINITE_EMBEDDINGS} embeddings
         )
         SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
                (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) AS d2
@@ -984,25 +983,24 @@ ORACLE = {
         FROM o JOIN dim ON o.k IS NOT DISTINCT FROM dim.k
         GROUP BY status_name
     """,
-    "join_bucketed": """
+    "join_bucketed": f"""
         SELECT o_orderstatus, COUNT(*) AS n_items,
-               CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE)
-                   AS sum_price,
+               {sql_dsum("l_extendedprice")} AS sum_price,
                TRUE AS bucketed_no_shuffle
         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         GROUP BY o_orderstatus
     """,
-    "join_skew_salted": """
+    "join_skew_salted": f"""
         SELECT o_orderpriority, COUNT(*) AS n_items,
-               CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS sum_qty
+               {sql_dsum("l_quantity")} AS sum_qty
         FROM lineitem JOIN orders ON l_orderkey = o_orderkey
         GROUP BY o_orderpriority
     """,
     # the plain skewed-key join aggregate; skew_handled is the Spark-side
     # plan property (OptimizeSkewedJoin split, or <20k probe rows)
-    "plan_aqe_skew_join": """
+    "plan_aqe_skew_join": f"""
         SELECT o_orderpriority, COUNT(*) AS n_items,
-               CAST(SUM(CAST(l_quantity AS DECIMAL(18,6))) AS DOUBLE) AS sum_qty,
+               {sql_dsum("l_quantity")} AS sum_qty,
                TRUE AS skew_handled
         FROM (SELECT CASE WHEN l_orderkey % 10 < 9
                           THEN (SELECT MIN(o_orderkey) FROM orders)
@@ -1063,10 +1061,9 @@ ORACLE = {
              (SELECT user_id, ts, value FROM events WHERE event_type = 'purchase') p
           ON c.user_id = p.user_id AND p.ts <= c.ts
     """,
-    "join_partition_pruned": """
+    "join_partition_pruned": f"""
         SELECT 'closed' AS status_name, count(*) AS n_orders,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE)
-                   AS total_price,
+               {sql_dsum("o_totalprice")} AS total_price,
                true AS dpp_applied
         FROM orders WHERE o_orderstatus = 'F'
     """,
@@ -1090,12 +1087,12 @@ ORACLE = {
           ON c.user_id = p.user_id AND p.ts <= c.ts
     """,
     # the naive inequality join the bucketed Spark plan must equal exactly
-    "join_range": """
+    "join_range": f"""
         SELECT l.event_id AS anchor_id,
                COUNT(*) AS n_next10m,
-               CAST(SUM(CAST(r.value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        FROM (SELECT event_id, ts FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events) events WHERE event_type = 'click') l
-        JOIN (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events) r
+               {sql_dsum("r.value")} AS sum_value
+        FROM (SELECT event_id, ts FROM {SQL_FINITE_EVENTS} events WHERE event_type = 'click') l
+        JOIN {SQL_FINITE_EVENTS} r
           ON r.ts >= l.ts AND r.ts < l.ts + INTERVAL 10 MINUTE
         GROUP BY l.event_id
     """,

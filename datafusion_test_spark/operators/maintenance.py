@@ -57,7 +57,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .._util import finite, DEC, dsum, sql_dsum, scratch_dir
-from ..io import table
+from ..io import SQL_FINITE_EVENTS, table
 
 _BLOOM_BRAND = "Brand#4"   # 96 of 2000 parts at sf0.01 — selective dim filter
 _BLOOM_HEX = 3             # md5-prefix chars -> 16^3 = 4096 buckets
@@ -678,7 +678,7 @@ ORACLE = {
         SELECT l_suppkey,
                CAST(count(*) AS BIGINT) AS n_items,
                CAST(SUM(CAST(l_quantity AS BIGINT)) AS BIGINT) AS total_qty,
-               {sql_dsum('l_extendedprice', 'total_price')},
+               {sql_dsum('l_extendedprice')} AS total_price,
                TRUE AS bucketed_no_shuffle
         FROM lineitem GROUP BY l_suppkey
     """,
@@ -744,7 +744,7 @@ ORACLE = {
                    count(*) AS pn,
                    SUM(CAST(value AS DECIMAL(18,6))) AS psum,
                    min(value) AS pmin, max(value) AS pmax
-            FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events) events GROUP BY event_type, event_id % 2
+            FROM {SQL_FINITE_EVENTS} events GROUP BY event_type, event_id % 2
         ),
         merged AS (
             SELECT event_type, CAST(SUM(pn) AS BIGINT) AS n_events,
@@ -754,9 +754,9 @@ ORACLE = {
         ),
         direct AS (
             SELECT event_type, count(*) AS dn,
-                   {sql_dsum('value', 'dsum_value')},
+                   {sql_dsum('value')} AS dsum_value,
                    min(value) AS dmin, max(value) AS dmax
-            FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events) events GROUP BY event_type
+            FROM {SQL_FINITE_EVENTS} events GROUP BY event_type
         )
         SELECT m.event_type, n_events, sum_value, min_value, max_value,
                (n_events = dn) AS count_matches,
@@ -781,7 +781,7 @@ ORACLE = {
         ),
         j AS (
             SELECT count(*) AS n_joined,
-                   {sql_dsum('l_quantity', 'sum_qty')}
+                   {sql_dsum('l_quantity')} AS sum_qty
             FROM cand JOIN dim ON cand.l_partkey = dim.p_partkey
         )
         SELECT (SELECT count(*) FROM lineitem) AS n_fact,

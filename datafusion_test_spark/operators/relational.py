@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from .._util import sql_dsum
 from ..io import table
 
 
@@ -218,10 +219,9 @@ ORACLE = {
         SELECT o_orderkey, o_orderdate FROM orders ORDER BY o_orderkey LIMIT 500
     """,
     "load_inmemory": "SELECT * FROM nation",
-    "observe_metrics": """
+    "observe_metrics": f"""
         SELECT COUNT(*) AS n_rows,
-               CAST(SUM(CAST(l_extendedprice AS DECIMAL(18,6))) AS DOUBLE)
-                   AS sum_price,
+               {sql_dsum("l_extendedprice")} AS sum_price,
                MIN(l_orderkey) AS min_orderkey,
                MAX(l_orderkey) AS max_orderkey
         FROM lineitem

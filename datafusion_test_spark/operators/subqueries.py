@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .._util import DEC
+from .._util import DEC, sql_dsum
 from ..io import register_views, table
 
 
@@ -406,10 +406,10 @@ ORACLE = {
                 WHERE c.c_nationkey = n.n_nationkey) AS n_customers
         FROM nation n
     """,
-    "cte_multi": """
+    "cte_multi": f"""
         WITH big AS (
             SELECT o_custkey,
-                   CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE) AS spent
+                   {sql_dsum("o_totalprice")} AS spent
             FROM orders GROUP BY o_custkey
         ),
         ranked AS (
@@ -419,7 +419,7 @@ ORACLE = {
             FROM big
         )
         SELECT band, COUNT(*) AS n_custs,
-               CAST(SUM(CAST(spent AS DECIMAL(18,6))) AS DOUBLE) AS band_spent
+               {sql_dsum("spent")} AS band_spent
         FROM ranked GROUP BY band
     """,
     "pivot_wide": """

@@ -21,8 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
 
-from .._util import finite
-from ..io import table
+from .._util import finite, sql_sane_ts_where
+from ..io import SQL_FINITE_EMBEDDINGS, SQL_FINITE_EVENTS, table
 
 
 def udf_python(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -328,7 +328,7 @@ _DISC_SQL = """
 
 ORACLE = {
     # the grouped-pandas fit must equal the ANSI regression aggregates
-    "udf_grouped_train": """
+    "udf_grouped_train": f"""
         SELECT event_type,
                CAST(regr_count(value, CAST(hour(ts) AS DOUBLE)) AS BIGINT)
                    AS n_points,
@@ -336,23 +336,21 @@ ORACLE = {
                    AS slope,
                round(regr_intercept(value, CAST(hour(ts) AS DOUBLE)), 4)
                    AS intercept
-        FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events) events WHERE value IS NOT NULL
+        FROM {SQL_FINITE_EVENTS} events WHERE value IS NOT NULL
         GROUP BY event_type
     """,
-    "udf_cogrouped": """
+    "udf_cogrouped": f"""
         WITH c AS (
             SELECT user_id, count(*) AS n_clicks, min(ts) AS first_click
             FROM events
-            WHERE ts >= TIMESTAMP '1900-01-01'
-              AND ts < TIMESTAMP '2100-01-01'
+            WHERE {sql_sane_ts_where()}
               AND event_type = 'click'
             GROUP BY user_id
         ),
         p AS (
             SELECT user_id, count(*) AS n_purchases, max(ts) AS last_purchase
             FROM events
-            WHERE ts >= TIMESTAMP '1900-01-01'
-              AND ts < TIMESTAMP '2100-01-01'
+            WHERE {sql_sane_ts_where()}
               AND event_type = 'purchase'
             GROUP BY user_id
         )
@@ -371,9 +369,9 @@ ORACLE = {
                ROUND(EXP(AVG(LN(l_extendedprice))), 2) AS geo_price
         FROM lineitem GROUP BY l_returnflag
     """,
-    "udtf_explode": """
+    "udtf_explode": f"""
         SELECT vec_id, CAST(i AS INT) AS pos, embedding[i] AS val
-        FROM (SELECT * REPLACE ((CASE WHEN len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(CAST(x AS DOUBLE)))) = 0 THEN embedding END) AS embedding) FROM embeddings) embeddings, UNNEST(generate_series(1, len(embedding))) AS t(i)
+        FROM {SQL_FINITE_EMBEDDINGS} embeddings, UNNEST(generate_series(1, len(embedding))) AS t(i)
         WHERE vec_id < 50
     """,
     # Python's str.split(' ') and DuckDB's string_split agree exactly,

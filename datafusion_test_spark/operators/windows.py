@@ -16,8 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .._util import DEC, finite, half_up
-from ..io import table
+from .._util import DEC, finite, half_up, sql_half_up
+from ..io import SQL_FINITE_EVENTS, table
 
 # Deterministic per-customer order timeline.
 def _w(spark, sf_dir):
@@ -535,8 +535,6 @@ QUERIES = {
 }
 
 def _ewma_oracle() -> str:
-    from .._util import sql_half_up
-
     lag_cols = ",\n                   ".join(
         f"lag(value, {j}) OVER w AS lag_{j}" for j in range(1, _EWMA_LAGS)
     )
@@ -558,7 +556,7 @@ def _ewma_oracle() -> str:
         WITH lagged AS (
             SELECT event_id, user_id, ts, value,
                    {lag_cols}
-            FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events) events
+            FROM {SQL_FINITE_EVENTS} events
             WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
         )
         SELECT event_id, user_id, ts,
@@ -570,8 +568,6 @@ def _ewma_oracle() -> str:
 
 
 def _rolling_slope_oracle() -> str:
-    from .._util import sql_half_up
-
     sxy = (
         "list_aggregate(list_transform(generate_series(1, len(ys)), "
         "i -> i * ys[i]), 'sum')"
@@ -613,11 +609,11 @@ def _rolling_slope_oracle() -> str:
 
 
 ORACLE = {
-    "win_drawdown": """
+    "win_drawdown": f"""
         WITH t AS (
             SELECT event_type, event_id, ts,
                    CAST(floor(value * 10000 + 0.5) AS BIGINT) AS v_s
-            FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events) events WHERE value IS NOT NULL
+            FROM {SQL_FINITE_EVENTS} events WHERE value IS NOT NULL
         ),
         c AS (
             SELECT *,
@@ -649,7 +645,7 @@ ORACLE = {
         WITH t AS (
             SELECT event_type, event_id, ts, value,
                    CAST(floor(value * 10000 + 0.5) AS BIGINT) AS v_s
-            FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events) events WHERE value IS NOT NULL
+            FROM {SQL_FINITE_EVENTS} events WHERE value IS NOT NULL
         ),
         s AS (
             SELECT *,
@@ -670,7 +666,7 @@ ORACLE = {
                END AS out_of_control
         FROM s
     """,
-    "win_ratio_to_report": """
+    "win_ratio_to_report": f"""
         WITH o AS (
             SELECT o_orderkey, o_custkey, o_orderdate,
                    CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
@@ -688,10 +684,8 @@ ORACLE = {
             FROM o
         )
         SELECT o_orderkey, o_custkey,
-               CAST(floor(CAST(cents AS DOUBLE) / CAST(tot AS DOUBLE)
-                          * 10000 + 0.5) AS DOUBLE) / 10000 AS share,
-               CAST(floor(CAST(cum AS DOUBLE) / CAST(tot AS DOUBLE)
-                          * 10000 + 0.5) AS DOUBLE) / 10000 AS cum_share
+               {sql_half_up("CAST(cents AS DOUBLE) / CAST(tot AS DOUBLE)")} AS share,
+               {sql_half_up("CAST(cum AS DOUBLE) / CAST(tot AS DOUBLE)")} AS cum_share
         FROM t
     """,
     # DuckDB's native windowed DISTINCT aggregate — the semantics the
@@ -758,12 +752,12 @@ ORACLE = {
                   AND ru.run_len = s.longest_streak) AS longest_streak_type
         FROM summary s
     """,
-    "win_time_range": """
+    "win_time_range": f"""
         SELECT event_id, user_id, ts,
                count(*) OVER w AS n_trailing_1h,
                CAST(SUM(CAST(value AS DECIMAL(18,6))) OVER w AS DOUBLE)
                    AS sum_trailing_1h
-        FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events) events
+        FROM {SQL_FINITE_EVENTS} events
         WINDOW w AS (PARTITION BY user_id ORDER BY ts
                      RANGE BETWEEN INTERVAL 1 HOUR PRECEDING AND CURRENT ROW)
     """,
@@ -797,10 +791,10 @@ ORACLE = {
     """,
     "win_moving_avg": f"""
         SELECT o_orderkey, o_custkey,
-               CAST(floor(AVG(o_totalprice) OVER (
-                   PARTITION BY o_custkey {_ORDER}
-                   ROWS BETWEEN 3 PRECEDING AND CURRENT ROW
-               ) * 10000 + 0.5) AS DOUBLE) / 10000 AS moving_avg
+               {sql_half_up(
+                   f"AVG(o_totalprice) OVER (PARTITION BY o_custkey {_ORDER} "
+                   "ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)"
+               )} AS moving_avg
         FROM orders
     """,
     "win_range_frame": """

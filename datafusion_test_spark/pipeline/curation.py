@@ -34,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .._util import ascii_lower, sql_half_up
+from .._util import ascii_lower, sql_ascii_lower, sql_half_up
 from ..io import table
 from ._expr import shingles_of_words, sql_shingles
 
@@ -742,11 +742,10 @@ ORACLE = {
         n_out AS (SELECT lang, COUNT(*) AS n_out FROM resampled GROUP BY lang)
         SELECT n_in.lang, n_in.n_in,
                COALESCE(n_out.n_out, 0) AS n_out,
-               CAST(floor(COALESCE(n_out.n_out, 0) / CAST(n_in.n_in AS DOUBLE)
-                   * 10000 + 0.5) AS DOUBLE) / 10000 AS achieved_rate
+               {sql_half_up("COALESCE(n_out.n_out, 0) / CAST(n_in.n_in AS DOUBLE)")} AS achieved_rate
         FROM n_in LEFT JOIN n_out ON n_in.lang = n_out.lang
     """,
-    "dedup_url": """
+    "dedup_url": f"""
         WITH u AS (
             SELECT doc_id,
                    'https://' || source || '.Example.COM/' || lang || '/doc/'
@@ -765,8 +764,8 @@ ORACLE = {
         ),
         n AS (
             SELECT doc_id,
-                   translate(regexp_extract(url, '^([a-z]+)://', 1), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz') || '://'
-                   || translate(regexp_extract(url, '^[a-z]+://([^/?#]+)', 1), 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz')
+                   {sql_ascii_lower("regexp_extract(url, '^([a-z]+)://', 1)")} || '://'
+                   || {sql_ascii_lower("regexp_extract(url, '^[a-z]+://([^/?#]+)', 1)")}
                    || regexp_extract(url, '^[a-z]+://[^/?#]+([^?#]*)', 1)
                    || '?id=' || regexp_extract(url, '[?&]id=([0-9]+)', 1)
                        AS norm_url

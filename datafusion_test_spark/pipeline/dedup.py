@@ -42,7 +42,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..io import clear_memo, memo, parallel, table
+from .._util import sql_half_up
+from ..io import SQL_FINITE_EMBEDDINGS, clear_memo, memo, parallel, table
 from ._expr import (
     dot,
     lsh_bits,
@@ -1486,11 +1487,9 @@ _JACCARD_CTES = f"""sh0 AS (
         ),
         jpairs AS (
             SELECT doc_a, doc_b,
-                   CAST(floor(n_common / CAST(n_a + n_b - n_common AS DOUBLE)
-                        * 10000 + 0.5) AS DOUBLE) / 10000 AS jaccard
+                   {sql_half_up("n_common / CAST(n_a + n_b - n_common AS DOUBLE)")} AS jaccard
             FROM cpairs
-            WHERE CAST(floor(n_common / CAST(n_a + n_b - n_common AS DOUBLE)
-                        * 10000 + 0.5) AS DOUBLE) / 10000 >= 0.6
+            WHERE {sql_half_up("n_common / CAST(n_a + n_b - n_common AS DOUBLE)")} >= 0.6
         )"""
 
 _SWEEP_BRANCH = """
@@ -1511,7 +1510,7 @@ ORACLE = {
         ),
     ),
     "graph_triangles": f"""
-        WITH {{_JACCARD_CTES}},
+        WITH {_JACCARD_CTES},
         exact AS (
             SELECT mn AS a, doc_id AS b FROM (
                 SELECT doc_id, MIN(doc_id) OVER (PARTITION BY text) AS mn
@@ -1540,35 +1539,31 @@ ORACLE = {
                (SELECT CAST(SUM(d * (d - 1) // 2) AS BIGINT) FROM deg)
                    AS n_wedges,
                CASE WHEN (SELECT SUM(d * (d - 1) // 2) FROM deg) > 0
-                    THEN CAST(floor(3.0 * n_triangles /
-                         CAST((SELECT SUM(d * (d - 1) // 2) FROM deg)
-                              AS DOUBLE) * 10000 + 0.5) AS DOUBLE) / 10000
+                    THEN {sql_half_up(
+                             "3.0 * n_triangles / "
+                             "CAST((SELECT SUM(d * (d - 1) // 2) FROM deg) "
+                             "AS DOUBLE)"
+                         )}
                END AS closure
         FROM tri
-    """.format(_JACCARD_CTES=_JACCARD_CTES),
+    """,
     "dedup_exact": """
         SELECT MIN(doc_id) AS keep_id, COUNT(*) AS n_copies, text
         FROM documents GROUP BY text
     """,
     "dedup_ngram_jaccard": f"""
-        WITH {{_JACCARD_CTES}}
+        WITH {_JACCARD_CTES}
         SELECT doc_a, doc_b, jaccard FROM jpairs
-    """.format(_JACCARD_CTES=_JACCARD_CTES),
-    "dedup_containment": """
+    """,
+    "dedup_containment": f"""
         WITH {_JACCARD_CTES}
         SELECT doc_a, doc_b, CAST(n_common AS BIGINT) AS n_common,
-               CAST(floor(CAST(n_common AS DOUBLE) / LEAST(n_a, n_b)
-                          * 10000 + 0.5) AS DOUBLE) / 10000 AS containment,
-               (CAST(floor(n_common / CAST(n_a + n_b - n_common AS DOUBLE)
-                     * 10000 + 0.5) AS DOUBLE) / 10000
+               {sql_half_up("CAST(n_common AS DOUBLE) / LEAST(n_a, n_b)")} AS containment,
+               ({sql_half_up("n_common / CAST(n_a + n_b - n_common AS DOUBLE)")}
                 >= 0.6) AS jaccard_also
         FROM cpairs
         WHERE {_CONTAIN_DEN} * n_common >= {_CONTAIN_NUM} * LEAST(n_a, n_b)
-    """.format(
-        _JACCARD_CTES=_JACCARD_CTES,
-        _CONTAIN_DEN=_CONTAIN_DEN,
-        _CONTAIN_NUM=_CONTAIN_NUM,
-    ),
+    """,
     # the same first-occurrence-by-(doc_id,pos) rule stated with a
     # window; string_agg reassembles in paragraph order (COALESCE: a
     # zero-kept clone reassembles to '', matching array_join of empty)
@@ -1722,11 +1717,11 @@ ORACLE = {
     """.format(_JACCARD_CTES=_JACCARD_CTES),
     "dedup_embed_cosine": f"""
         WITH cool AS (
-            SELECT label FROM (SELECT * REPLACE ((CASE WHEN len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(CAST(x AS DOUBLE)))) = 0 THEN embedding END) AS embedding) FROM embeddings) embeddings GROUP BY label HAVING count(*) <= {_DF_CAP}
+            SELECT label FROM {SQL_FINITE_EMBEDDINGS} embeddings GROUP BY label HAVING count(*) <= {_DF_CAP}
         )
         SELECT a.vec_id AS vec_a, b.vec_id AS vec_b,
                ROUND({sql_cosine('a.embedding', 'b.embedding')}, 4) AS cos_sim
-        FROM (SELECT * REPLACE ((CASE WHEN len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(CAST(x AS DOUBLE)))) = 0 THEN embedding END) AS embedding) FROM embeddings) a JOIN (SELECT * REPLACE ((CASE WHEN len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(CAST(x AS DOUBLE)))) = 0 THEN embedding END) AS embedding) FROM embeddings) b
+        FROM {SQL_FINITE_EMBEDDINGS} a JOIN {SQL_FINITE_EMBEDDINGS} b
           ON a.label = b.label AND a.vec_id < b.vec_id
         WHERE {sql_cosine('a.embedding', 'b.embedding')} >= 0.95
           AND a.label IN (SELECT label FROM cool)
@@ -1760,8 +1755,8 @@ ORACLE = {
                TRUE AS found_all_planted
         FROM low
     """,
-    "dedup_embed_lsh": """
-        WITH low AS (SELECT vec_id, embedding FROM (SELECT * REPLACE ((CASE WHEN len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(CAST(x AS DOUBLE)))) = 0 THEN embedding END) AS embedding) FROM embeddings) embeddings
+    "dedup_embed_lsh": f"""
+        WITH low AS (SELECT vec_id, embedding FROM {SQL_FINITE_EMBEDDINGS} embeddings
                      ORDER BY vec_id LIMIT 50)
         SELECT CAST(COUNT(*) AS BIGINT) AS n_planted_pairs,
                CAST(COUNT(*) FILTER (WHERE embedding IS NULL) AS BIGINT)

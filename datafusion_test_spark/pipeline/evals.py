@@ -48,8 +48,8 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .._util import DEC, finite, half_up, sql_half_up, two_phase_prefix
-from ..io import parallel, table
+from .._util import DEC, finite, half_up, sql_dsum, sql_half_up, two_phase_prefix
+from ..io import SQL_FINITE_EVENTS, parallel, table
 from .prep import _PP_MIN_MARGIN, preference_pairs
 
 _POS, _NEG = "purchase", "click"
@@ -1257,7 +1257,7 @@ _J = f"""
             SELECT value AS s,
                    CAST(CASE WHEN event_type = '{_POS}' THEN 1 ELSE 0 END
                         AS BIGINT) AS y
-            FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events) events
+            FROM {SQL_FINITE_EVENTS} events
             WHERE event_type IN ('{_POS}', '{_NEG}') AND value IS NOT NULL
 """
 
@@ -1272,7 +1272,7 @@ _RANKED = f"""
                    row_number() OVER (
                        PARTITION BY user_id ORDER BY value DESC, event_id
                    ) AS rk
-            FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events) events
+            FROM {SQL_FINITE_EVENTS} events
             WHERE event_type IN ('{_POS}', '{_NEG}') AND value IS NOT NULL
 """
 
@@ -1659,8 +1659,7 @@ ORACLE = {
     "eval_bootstrap_ci": f"""
         WITH base AS (
             SELECT event_id, value AS v
-            FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value
-                  END) AS value) FROM events) events
+            FROM {SQL_FINITE_EVENTS} events
             WHERE event_type = '{_POS}' AND value IS NOT NULL
         ),
         bs AS (
@@ -1672,8 +1671,7 @@ ORACLE = {
         ),
         means AS (
             SELECT b,
-                   {sql_half_up("CAST(SUM(CAST(w * v AS DECIMAL(18,6))) AS DOUBLE) / SUM(w)")}
-                       AS mean_b
+                   {sql_half_up(f"{sql_dsum('w * v')} / SUM(w)")} AS mean_b
             FROM bs GROUP BY b HAVING SUM(w) > 0
         ),
         r AS (
@@ -1683,8 +1681,7 @@ ORACLE = {
         tot AS (SELECT CAST(count(*) AS BIGINT) AS bb FROM r),
         f AS (
             SELECT CAST(count(*) AS BIGINT) AS n,
-                   {sql_half_up("CAST(SUM(CAST(v AS DECIMAL(18,6))) AS DOUBLE) / count(*)")}
-                       AS mean_value
+                   {sql_half_up(f"{sql_dsum('v')} / count(*)")} AS mean_value
             FROM base
         )
         SELECT n, bb AS b_resamples, mean_value,
@@ -1717,7 +1714,7 @@ ORACLE = {
                      THEN CAST(floor(value * 10000 + 0.5) AS BIGINT)
                           * CAST(floor(value * 10000 + 0.5) AS BIGINT)
                      ELSE 0 END) AS BIGINT) AS q_b
-            FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events) events
+            FROM {SQL_FINITE_EVENTS} events
             WHERE event_type IN ('{_AB_A}', '{_AB_B}')
               AND value IS NOT NULL
         )
@@ -1796,9 +1793,7 @@ ORACLE = {
         )
         SELECT bin, CAST(count(*) AS BIGINT) AS n,
                CAST(SUM(y) AS BIGINT) AS n_pos,
-               {sql_half_up(
-                   "CAST(SUM(CAST(s AS DECIMAL(18,6))) AS DOUBLE) / count(*)"
-               )} AS mean_score,
+               {sql_half_up(f"{sql_dsum('s')} / count(*)")} AS mean_score,
                {sql_half_up("CAST(SUM(y) AS DOUBLE) / count(*)")} AS pos_rate
         FROM b GROUP BY bin
     """,
@@ -1855,7 +1850,7 @@ ORACLE = {
             SELECT user_id, event_id,
                    CAST(CASE WHEN event_type = '{_POS}' THEN 1 ELSE 0 END
                         AS BIGINT) AS y
-            FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events) events
+            FROM {SQL_FINITE_EVENTS} events
             WHERE event_type IN ('{_POS}', '{_NEG}') AND value IS NOT NULL
         ),
         capped AS (

@@ -31,7 +31,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..io import table
+from ..io import SQL_FINITE_EMBEDDINGS, table
 
 
 def multimodal_cols(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -457,7 +457,7 @@ def _clip_oracle() -> str:
                a.vec_id AS img_id, b.vec_id AS txt_id,
                round({c}, 4) AS clip_sim,
                ({c} >= 0.0) AS kept
-        FROM (SELECT * REPLACE ((CASE WHEN len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(CAST(x AS DOUBLE)))) = 0 THEN embedding END) AS embedding) FROM embeddings) a JOIN (SELECT * REPLACE ((CASE WHEN len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(CAST(x AS DOUBLE)))) = 0 THEN embedding END) AS embedding) FROM embeddings) b
+        FROM {SQL_FINITE_EMBEDDINGS} a JOIN {SQL_FINITE_EMBEDDINGS} b
           ON a.vec_id // 2 = b.vec_id // 2
         WHERE a.vec_id % 2 = 0 AND b.vec_id % 2 = 1
     """
@@ -489,17 +489,17 @@ ORACLE = {
             PARTITION BY doc_id ORDER BY score, ord
         ) = 1
     """,
-    "mm_dataset_manifest": """
+    "mm_dataset_manifest": f"""
         WITH ids AS (
             SELECT doc_id AS sample_id FROM documents
-            UNION SELECT vec_id FROM (SELECT * REPLACE ((CASE WHEN len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(CAST(x AS DOUBLE)))) = 0 THEN embedding END) AS embedding) FROM embeddings) embeddings
+            UNION SELECT vec_id FROM {SQL_FINITE_EMBEDDINGS} embeddings
         ),
         d AS (
             SELECT doc_id AS sample_id, n_chars FROM documents
             WHERE doc_id % 9 <> 0
         ),
         e AS (
-            SELECT vec_id AS sample_id, label FROM (SELECT * REPLACE ((CASE WHEN len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(CAST(x AS DOUBLE)))) = 0 THEN embedding END) AS embedding) FROM embeddings) embeddings
+            SELECT vec_id AS sample_id, label FROM {SQL_FINITE_EMBEDDINGS} embeddings
             WHERE vec_id % 11 <> 0
         )
         SELECT i.sample_id,
@@ -517,14 +517,14 @@ ORACLE = {
         LEFT JOIN e USING (sample_id)
     """,
     "mm_clip_filter": _clip_oracle(),
-    "multimodal_cols": """
+    "multimodal_cols": f"""
         SELECT d.doc_id, d.lang, d.n_chars,
                CAST(len(e.embedding) AS INT) AS dim,
                e.embedding[1] AS e0,
                e.label,
                k.max_k
         FROM documents d
-        JOIN (SELECT * REPLACE ((CASE WHEN len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(CAST(x AS DOUBLE)))) = 0 THEN embedding END) AS embedding) FROM embeddings) e ON d.doc_id = e.vec_id
+        JOIN {SQL_FINITE_EMBEDDINGS} e ON d.doc_id = e.vec_id
         LEFT JOIN (
             SELECT user_id,
                    MAX(CAST(json_extract_string(props, '$.k') AS INT)) AS max_k

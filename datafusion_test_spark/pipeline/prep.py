@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .._util import sql_half_up
 from ..io import table
 from ._expr import sql_indexed_unnest
 from .text import _HITS_SQL, _PRED_SQL, langid_exprs
@@ -369,11 +370,11 @@ ORACLE = {
                    CAST(len(string_split(text, ' ')) AS INT) AS n_words
             FROM deduped
             WHERE n_chars > 0
-              AND CAST(floor(
-                      (least(len(string_split(text, ' ')) / 100.0, 1.0) * 0.5
-                       + least(length(regexp_replace(text, '[^A-Za-z]', '', 'g'))
-                               / CAST(n_chars AS DOUBLE), 1.0) * 0.5)
-                      * 10000 + 0.5) AS DOUBLE) / 10000
+              AND {sql_half_up(
+                      "(least(len(string_split(text, ' ')) / 100.0, 1.0) * 0.5 "
+                      "+ least(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) "
+                      "/ CAST(n_chars AS DOUBLE), 1.0) * 0.5)"
+                  )}
                   >= {_MIN_QUALITY}
         ),
         scored AS (

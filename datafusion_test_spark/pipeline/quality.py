@@ -39,9 +39,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .._util import DEC, ascii_lower, finite, half_up, sql_half_up as _sql_half_up
+from .._util import (
+    DEC,
+    ascii_lower,
+    finite,
+    half_up,
+    sql_ascii_lower,
+    sql_dsum,
+    sql_half_up,
+)
 from ._expr import sql_indexed_unnest
-from ..io import table
+from ..io import SQL_FINITE_EVENTS, table
 
 # Quality thresholds, chosen to discriminate on the synthetic corpus
 # (doc-level medians: distinct-ratio 0.46, mean word len 4.5, top-word
@@ -776,7 +784,7 @@ QUERIES = {
     "sample_systematic": sample_systematic,
 }
 
-_SQL_KS_RATIO = _sql_half_up(
+_SQL_KS_RATIO = sql_half_up(
     "CAST(max(abs(cum_a * t.nb - cum_b * t.na)) AS DOUBLE) / (t.na * t.nb)",
     6,
 )
@@ -789,14 +797,13 @@ ORACLE = {
             SELECT md5('{_PSEUDO_SALT}' || CAST(user_id AS VARCHAR))
                        AS pseudonym,
                    user_id, event_type, value
-            FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events) events
+            FROM {SQL_FINITE_EVENTS} events
         ),
         g AS (
             SELECT pseudonym,
                    CAST(count(*) AS BIGINT) AS n_events,
                    CAST(count(DISTINCT event_type) AS BIGINT) AS n_types,
-                   CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE)
-                       AS total_value
+                   {sql_dsum("value")} AS total_value
             FROM t GROUP BY pseudonym
         ),
         audit AS (
@@ -831,8 +838,7 @@ ORACLE = {
     "drift_psi": f"""
         WITH base AS (
             SELECT epoch_us(ts) AS us, value AS v
-            FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value
-                  END) AS value) FROM events) events
+            FROM {SQL_FINITE_EVENTS} events
             WHERE value IS NOT NULL AND ts IS NOT NULL
         ),
         bounds AS (
@@ -868,7 +874,7 @@ ORACLE = {
                CAST((pct_ref - pct_cur) *
                     ({_PSI_LN6_SQL}[pct_ref] - {_PSI_LN6_SQL}[pct_cur])
                     AS BIGINT) AS contrib_scaled,
-               {_sql_half_up("((pct_ref - pct_cur) * " + f"({_PSI_LN6_SQL}[pct_ref] - {_PSI_LN6_SQL}[pct_cur])" + ") / 1e8", 6)}
+               {sql_half_up("((pct_ref - pct_cur) * " + f"({_PSI_LN6_SQL}[pct_ref] - {_PSI_LN6_SQL}[pct_cur])" + ") / 1e8", 6)}
                    AS psi_contrib
         FROM p
     """,
@@ -978,7 +984,7 @@ ORACLE = {
     """,
     "lm_quality_filter": f"""
         WITH wd AS (
-            SELECT doc_id, string_split(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), ' ') AS w FROM documents
+            SELECT doc_id, string_split({sql_ascii_lower("text")}, ' ') AS w FROM documents
         ),
         bi AS (
             SELECT doc_id, u.w1 AS w1, u.w2 AS w2
@@ -1033,9 +1039,10 @@ ORACLE = {
             FROM words QUALIFY vocab_id <= {_VOCAB_K}
         )
         SELECT word, freq, vocab_id,
-               CAST(floor((1.0 - (SELECT SUM(freq) FROM v)
-                         / (SELECT CAST(SUM(freq) AS DOUBLE) FROM words))
-                     * 10000 + 0.5) AS DOUBLE) / 10000
+               {sql_half_up(
+                   "(1.0 - (SELECT SUM(freq) FROM v) "
+                   "/ (SELECT CAST(SUM(freq) AS DOUBLE) FROM words))"
+               )}
                    AS oov_rate
         FROM v
     """,
@@ -1103,9 +1110,7 @@ ORACLE = {
         )
         SELECT split, count(*) AS n_docs, min(doc_id) AS min_doc,
                max(doc_id) AS max_doc,
-               CAST(floor(count(*)
-                     / (SELECT CAST(count(*) AS DOUBLE) FROM documents)
-                     * 10000 + 0.5) AS DOUBLE) / 10000 AS frac
+               {sql_half_up("count(*) / (SELECT CAST(count(*) AS DOUBLE) FROM documents)")} AS frac
         FROM s GROUP BY split
     """,
     "agg_heavy_hitters": """

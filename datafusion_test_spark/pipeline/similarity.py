@@ -28,8 +28,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from .._util import sql_half_up
-from ..io import clear_memo, memo, parallel, table
+from .._util import sql_dsum, sql_half_up
+from ..io import SQL_FINITE_EMBEDDINGS, clear_memo, memo, parallel, table
 from ._expr import cosine, dot, l2, lsh_bits, norm2, rh_signature, sql_cosine
 
 _DIM = 64
@@ -1263,13 +1263,13 @@ ORACLE = {
     # claims contract (sim_ivfpq's style): xxhash64 signatures have no
     # DuckDB twin, so the oracle states the invariants the harness must
     # produce from real data
-    "sim_index_persist": """
+    "sim_index_persist": f"""
         SELECT CAST(min(vec_id) AS BIGINT) AS query_id,
                true AS self_is_top,
                CAST(1.0 AS DOUBLE) AS top_cos,
                true AS partition_pruned,
                true AS probed_subset
-        FROM (SELECT * REPLACE ((CASE WHEN len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(CAST(x AS DOUBLE)))) = 0 THEN embedding END) AS embedding) FROM embeddings) embeddings
+        FROM {SQL_FINITE_EMBEDDINGS} embeddings
         WHERE embedding IS NOT NULL
         HAVING count(*) > 0
     """,
@@ -1278,7 +1278,7 @@ ORACLE = {
             SELECT vec_id, label, embedding,
                    list_max(list_transform(embedding,
                        x -> abs(CAST(x AS DOUBLE)))) AS absmax
-            FROM (SELECT * REPLACE ((CASE WHEN len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(CAST(x AS DOUBLE)))) = 0 THEN embedding END) AS embedding) FROM embeddings) embeddings
+            FROM {SQL_FINITE_EMBEDDINGS} embeddings
         ),
         qd AS (
             SELECT vec_id, label, embedding,
@@ -1309,42 +1309,41 @@ ORACLE = {
         ORDER BY cos_sim DESC, vec_id
         LIMIT {_RERANK_K}
     """,
-    "sim_ivfpq": """
+    "sim_ivfpq": f"""
         SELECT CAST(min(vec_id) AS BIGINT) AS query_id,
                CAST(count(*) AS BIGINT) AS n_vectors,
                true AS self_is_top,
                true AS twin_survives_with_equal_adc,
                true AS probed_subset
-        FROM (SELECT * REPLACE ((CASE WHEN len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(CAST(x AS DOUBLE)))) = 0 THEN embedding END) AS embedding) FROM embeddings) embeddings
+        FROM {SQL_FINITE_EMBEDDINGS} embeddings
         WHERE embedding IS NOT NULL
         HAVING count(*) > 0
     """,
-    "agg_vector_centroid": """
+    "agg_vector_centroid": f"""
         SELECT label, CAST(g - 1 AS INTEGER) AS pos,
                CAST(floor(
-                   CAST(SUM(CAST(CAST(embedding[g] AS DOUBLE)
-                                 AS DECIMAL(18,6))) AS DOUBLE)
+                   {sql_dsum("CAST(embedding[g] AS DOUBLE)")}
                    / count(*) * 10000 + 0.5
                ) AS DOUBLE) / 10000 AS centroid_val,
                count(*) AS n_vecs
-        FROM (SELECT * REPLACE ((CASE WHEN len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(CAST(x AS DOUBLE)))) = 0 THEN embedding END) AS embedding) FROM embeddings) embeddings, (SELECT unnest(range(1, 65)) AS g)
+        FROM {SQL_FINITE_EMBEDDINGS} embeddings, (SELECT unnest(range(1, 65)) AS g)
         WHERE embedding IS NOT NULL
         GROUP BY label, pos
     """,
-    "embed_pq": """
+    "embed_pq": f"""
         SELECT CAST(count(*) AS BIGINT) AS n_vectors,
                4 AS m,
                16 AS k,
                64 AS compression_x,
                true AS planted_adc_equals_self,
                true AS codebook_bounded
-        FROM (SELECT * REPLACE ((CASE WHEN len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(CAST(x AS DOUBLE)))) = 0 THEN embedding END) AS embedding) FROM embeddings) embeddings
+        FROM {SQL_FINITE_EMBEDDINGS} embeddings
         WHERE embedding IS NOT NULL
         HAVING count(*) > 0
     """,
     "embed_matryoshka_recall": f"""
         WITH q AS (
-            SELECT vec_id AS qid, embedding AS qvec FROM (SELECT * REPLACE ((CASE WHEN len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(CAST(x AS DOUBLE)))) = 0 THEN embedding END) AS embedding) FROM embeddings) embeddings
+            SELECT vec_id AS qid, embedding AS qvec FROM {SQL_FINITE_EMBEDDINGS} embeddings
             ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {_MAT_Q}
         ),
         s AS (
@@ -1352,7 +1351,7 @@ ORACLE = {
                    {sql_cosine('e.embedding', 'q.qvec')} AS cos_full,
                    {sql_cosine(f'e.embedding[1:{_MAT_DIM}]',
                                f'q.qvec[1:{_MAT_DIM}]')} AS cos_pre
-            FROM (SELECT * REPLACE ((CASE WHEN len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(CAST(x AS DOUBLE)))) = 0 THEN embedding END) AS embedding) FROM embeddings) e, q WHERE e.vec_id <> q.qid
+            FROM {SQL_FINITE_EMBEDDINGS} e, q WHERE e.vec_id <> q.qid
         ),
         r AS (
             SELECT qid, vec_id,
@@ -1373,32 +1372,32 @@ ORACLE = {
                )} AS recall_at_k
         FROM r GROUP BY qid
     """,
-    "embed_pq_residual": """
+    "embed_pq_residual": f"""
         SELECT CAST(min(vec_id) AS BIGINT) AS query_id,
                CAST(count(*) AS BIGINT) AS n_vectors,
                true AS twin_same_cell,
                true AS twin_codes_match,
                true AS self_is_top_in_cell,
                true AS twin_ties_self_adc
-        FROM (SELECT * REPLACE ((CASE WHEN len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(CAST(x AS DOUBLE)))) = 0 THEN embedding END) AS embedding) FROM embeddings) embeddings
+        FROM {SQL_FINITE_EMBEDDINGS} embeddings
         WHERE embedding IS NOT NULL
         HAVING count(*) > 0
     """,
-    "embed_pca": """
+    "embed_pca": f"""
         SELECT count(*) AS n_vecs,
                CAST(min(len(embedding)) AS INTEGER) AS dim,
                4 AS k,
                true AS components_orthonormal,
                true AS eigs_nonincreasing,
                true AS proj_var_le_total
-        FROM (SELECT * REPLACE ((CASE WHEN len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(CAST(x AS DOUBLE)))) = 0 THEN embedding END) AS embedding) FROM embeddings) embeddings WHERE embedding IS NOT NULL
+        FROM {SQL_FINITE_EMBEDDINGS} embeddings WHERE embedding IS NOT NULL
     """,
-    "embed_quantize": """
+    "embed_quantize": f"""
         WITH base AS (
             SELECT vec_id, embedding,
                    list_max(list_transform(embedding,
                        x -> abs(CAST(x AS DOUBLE)))) AS absmax
-            FROM (SELECT * REPLACE ((CASE WHEN len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(CAST(x AS DOUBLE)))) = 0 THEN embedding END) AS embedding) FROM embeddings) embeddings
+            FROM {SQL_FINITE_EMBEDDINGS} embeddings
         ), nz AS (SELECT * FROM base WHERE absmax > 0.0),
         qd AS (
             SELECT vec_id, absmax, embedding,
@@ -1423,12 +1422,12 @@ ORACLE = {
     """,
     "sim_topk": f"""
         WITH q AS (
-            SELECT embedding AS qvec FROM (SELECT * REPLACE ((CASE WHEN len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(CAST(x AS DOUBLE)))) = 0 THEN embedding END) AS embedding) FROM embeddings) embeddings
-            WHERE vec_id = (SELECT MIN(vec_id) FROM (SELECT * REPLACE ((CASE WHEN len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(CAST(x AS DOUBLE)))) = 0 THEN embedding END) AS embedding) FROM embeddings) embeddings WHERE embedding IS NOT NULL)
+            SELECT embedding AS qvec FROM {SQL_FINITE_EMBEDDINGS} embeddings
+            WHERE vec_id = (SELECT MIN(vec_id) FROM {SQL_FINITE_EMBEDDINGS} embeddings WHERE embedding IS NOT NULL)
         )
         SELECT vec_id, label,
                ROUND({sql_cosine('embedding', 'qvec')}, 4) AS cos_sim
-        FROM (SELECT * REPLACE ((CASE WHEN len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(CAST(x AS DOUBLE)))) = 0 THEN embedding END) AS embedding) FROM embeddings) embeddings, q
+        FROM {SQL_FINITE_EMBEDDINGS} embeddings, q
         ORDER BY cos_sim DESC, vec_id
         LIMIT 20
     """,
@@ -1442,7 +1441,7 @@ ORACLE = {
                            PARTITION BY label
                            ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
                        ) AS blk_rank
-                FROM (SELECT * REPLACE ((CASE WHEN len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(CAST(x AS DOUBLE)))) = 0 THEN embedding END) AS embedding) FROM embeddings) e
+                FROM {SQL_FINITE_EMBEDDINGS} e
             )
             WHERE blk_rank <= {_SIM_BLOCK_CAP}
         )
@@ -1460,14 +1459,14 @@ ORACLE = {
     # base vector voids planted-pair dominance): when it fires, BOTH
     # engines emit the vacuity rows (NULL pair columns, degenerate=TRUE)
     # instead of an unstateable tied top-10 — no gate allowlist needed.
-    "sim_pairwise_lsh": """
+    "sim_pairwise_lsh": f"""
         WITH base AS (
             SELECT vec_id
-            FROM (SELECT * REPLACE ((CASE WHEN len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(CAST(x AS DOUBLE)))) = 0 THEN embedding END) AS embedding) FROM embeddings) embeddings
+            FROM {SQL_FINITE_EMBEDDINGS} embeddings
             WHERE embedding IS NOT NULL
         ), flag AS (
             SELECT count(*) > count(DISTINCT CAST(embedding AS VARCHAR)) AS degenerate
-            FROM (SELECT * REPLACE ((CASE WHEN len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(CAST(x AS DOUBLE)))) = 0 THEN embedding END) AS embedding) FROM embeddings) embeddings
+            FROM {SQL_FINITE_EMBEDDINGS} embeddings
             WHERE embedding IS NOT NULL
         )
         SELECT vec_id AS vec_a,
@@ -1480,19 +1479,19 @@ ORACLE = {
     """,
     # the FROM ... WHERE n > 0 wrapper mirrors the Spark side: an empty
     # corpus has no query vector, so neither engine emits a result row
-    "sim_ann_lsh": """
-        SELECT (SELECT MIN(vec_id) FROM (SELECT * REPLACE ((CASE WHEN len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(CAST(x AS DOUBLE)))) = 0 THEN embedding END) AS embedding) FROM embeddings) embeddings WHERE embedding IS NOT NULL) AS query_id,
+    "sim_ann_lsh": f"""
+        SELECT (SELECT MIN(vec_id) FROM {SQL_FINITE_EMBEDDINGS} embeddings WHERE embedding IS NOT NULL) AS query_id,
                TRUE AS self_is_top,
                CAST(1.0 AS DOUBLE) AS top_cos,
-               (SELECT label FROM (SELECT * REPLACE ((CASE WHEN len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(CAST(x AS DOUBLE)))) = 0 THEN embedding END) AS embedding) FROM embeddings) embeddings
-                WHERE vec_id = (SELECT MIN(vec_id) FROM (SELECT * REPLACE ((CASE WHEN len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(CAST(x AS DOUBLE)))) = 0 THEN embedding END) AS embedding) FROM embeddings) embeddings WHERE embedding IS NOT NULL)) AS label
-        FROM (SELECT count(*) AS n FROM (SELECT * REPLACE ((CASE WHEN len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(CAST(x AS DOUBLE)))) = 0 THEN embedding END) AS embedding) FROM embeddings) embeddings WHERE embedding IS NOT NULL) WHERE n > 0
+               (SELECT label FROM {SQL_FINITE_EMBEDDINGS} embeddings
+                WHERE vec_id = (SELECT MIN(vec_id) FROM {SQL_FINITE_EMBEDDINGS} embeddings WHERE embedding IS NOT NULL)) AS label
+        FROM (SELECT count(*) AS n FROM {SQL_FINITE_EMBEDDINGS} embeddings WHERE embedding IS NOT NULL) WHERE n > 0
     """,
-    "sim_ivf": """
-        SELECT (SELECT MIN(vec_id) FROM (SELECT * REPLACE ((CASE WHEN len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(CAST(x AS DOUBLE)))) = 0 THEN embedding END) AS embedding) FROM embeddings) embeddings WHERE embedding IS NOT NULL) AS query_id,
+    "sim_ivf": f"""
+        SELECT (SELECT MIN(vec_id) FROM {SQL_FINITE_EMBEDDINGS} embeddings WHERE embedding IS NOT NULL) AS query_id,
                TRUE AS self_is_top,
                CAST(1.0 AS DOUBLE) AS top_cos,
                TRUE AS probed_subset
-        FROM (SELECT count(*) AS n FROM (SELECT * REPLACE ((CASE WHEN len(list_filter(embedding, x -> x IS NULL OR NOT isfinite(CAST(x AS DOUBLE)))) = 0 THEN embedding END) AS embedding) FROM embeddings) embeddings WHERE embedding IS NOT NULL) WHERE n > 0
+        FROM (SELECT count(*) AS n FROM {SQL_FINITE_EMBEDDINGS} embeddings WHERE embedding IS NOT NULL) WHERE n > 0
     """,
 }

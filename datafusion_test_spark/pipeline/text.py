@@ -18,7 +18,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .._util import ascii_lower, dsum, half_up, r4, sql_dsum, sql_half_up
+from .._util import (
+    ascii_lower,
+    dsum,
+    half_up,
+    r4,
+    sql_ascii_lower,
+    sql_dsum,
+    sql_half_up,
+)
 from ..io import parallel, table
 from ._expr import sql_indexed_unnest
 
@@ -1104,7 +1112,7 @@ QUERIES = {
 
 _STOP_SQL = {lg: "[" + ", ".join(f"'{s}'" for s in stops) + "]" for lg, stops in _STOP.items()}
 _HITS_SQL = ",\n               ".join(
-    f"len(list_intersect(string_split(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), ' '), {_STOP_SQL[lg]})) AS hits_{lg}"
+    f"len(list_intersect(string_split({sql_ascii_lower('text')}, ' '), {_STOP_SQL[lg]})) AS hits_{lg}"
     for lg in _STOP
 )
 _BEST_SQL = "greatest(" + ", ".join(f"hits_{lg}" for lg in _STOP) + ")"
@@ -1121,7 +1129,6 @@ _BM25_IN = ", ".join(f"'{t}'" for t in _BM25_TERMS)
 
 
 def _corpus_jaccard_oracle() -> str:
-    from .._util import sql_half_up
     from ._expr import sql_shingles
     from .dedup import _DF_CAP
 
@@ -1173,7 +1180,7 @@ ORACLE = {
         WITH tok AS (
             SELECT doc_id, lang,
                    substring(md5(unnest(string_split(
-                       translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), ' '))), 1, 2) AS bkt
+                       {sql_ascii_lower("text")}, ' '))), 1, 2) AS bkt
             FROM documents
         ),
         cb AS (SELECT bkt, count(*) AS c_b FROM tok GROUP BY 1),
@@ -1197,8 +1204,7 @@ ORACLE = {
             CROSS JOIN tot
         )
         SELECT doc_id, lang, COUNT(*) AS n_tokens,
-               {sql_half_up("CAST(SUM(CAST(r AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*)")}
-                   AS dsir_weight
+               {sql_half_up(f"{sql_dsum('r')} / COUNT(*)")} AS dsir_weight
         FROM scored GROUP BY doc_id, lang
     """,
     "text_keywords_rake": f"""
@@ -1255,8 +1261,8 @@ ORACLE = {
     "text_blocklist_filter": f"""
         WITH d AS (
             SELECT doc_id,
-                   string_split(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), ' ') AS ws,
-                   list_filter(string_split(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), ' '),
+                   string_split({sql_ascii_lower("text")}, ' ') AS ws,
+                   list_filter(string_split({sql_ascii_lower("text")}, ' '),
                                x -> list_contains({_BLOCK_SQL}, x)) AS hits
             FROM documents
         )
@@ -1274,7 +1280,7 @@ ORACLE = {
     """,
     "corpus_vocab_growth": f"""
         WITH tok AS (
-            SELECT doc_id, unnest(string_split(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), ' ')) AS w
+            SELECT doc_id, unnest(string_split({sql_ascii_lower("text")}, ' ')) AS w
             FROM documents
         ),
         np AS (
@@ -1342,7 +1348,7 @@ ORACLE = {
     "corpus_jaccard_sources": _corpus_jaccard_oracle(),
     "text_bm25_topk": f"""
         WITH w AS (
-            SELECT doc_id, string_split(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), ' ') AS w FROM documents
+            SELECT doc_id, string_split({sql_ascii_lower("text")}, ' ') AS w FROM documents
         ),
         base AS (SELECT doc_id, CAST(len(w) AS BIGINT) AS dl, w FROM w),
         tok AS (
@@ -1378,8 +1384,7 @@ ORACLE = {
                CAST(row_number() OVER (ORDER BY score_dec DESC, doc_id)
                     AS INTEGER) AS rk,
                n_terms_hit,
-               CAST(floor(CAST(score_dec AS DOUBLE) * 10000 + 0.5)
-                    AS DOUBLE) / 10000 AS score
+               {sql_half_up("CAST(score_dec AS DOUBLE)")} AS score
         FROM s ORDER BY score_dec DESC, doc_id LIMIT {_BM25_TOPK}
     """,
     "text_ngram_lm": f"""
@@ -1398,19 +1403,19 @@ ORACLE = {
         )
         SELECT bi.doc_id,
                COUNT(*) AS n_bigrams,
-               CAST(floor(CAST(SUM(CAST(
-                   CAST(c1.c1 AS DOUBLE) / CAST(c12.c12 AS DOUBLE)
-                   AS DECIMAL(18,6))) AS DOUBLE) / COUNT(*)
-                   * 10000 + 0.5) AS DOUBLE) / 10000
+               {sql_half_up(
+                   f"{sql_dsum('CAST(c1.c1 AS DOUBLE) / CAST(c12.c12 AS DOUBLE)')}"
+                   " / COUNT(*)"
+               )}
                    AS avg_surprise
         FROM bi
         JOIN c12 ON bi.w1 = c12.w1 AND bi.w2 = c12.w2
         JOIN c1 ON bi.w1 = c1.w1
         GROUP BY bi.doc_id
     """,
-    "text_tfidf": """
+    "text_tfidf": f"""
         WITH tok AS (
-            SELECT doc_id, unnest(string_split(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), ' ')) AS term
+            SELECT doc_id, unnest(string_split({sql_ascii_lower("text")}, ' ')) AS term
             FROM documents
         ), tok_ne AS (
             SELECT doc_id, term FROM tok WHERE term <> ''
@@ -1428,7 +1433,7 @@ ORACLE = {
             FROM tf JOIN dfrel ON tf.term = dfrel.term CROSS JOIN nd
         )
         SELECT doc_id, rk, term, tf, df,
-               CAST(floor(score * 10000 + 0.5) AS DOUBLE) / 10000 AS score
+               {sql_half_up("score")} AS score
         FROM (
             SELECT *, CAST(ROW_NUMBER() OVER (
                 PARTITION BY doc_id ORDER BY score DESC, term
@@ -1488,7 +1493,7 @@ ORACLE = {
                    AS clean
         FROM gs GROUP BY doc_id
     """,
-    "text_profile": """
+    "text_profile": f"""
         SELECT COUNT(*) AS n_docs,
                COUNT(DISTINCT doc_id) AS n_ids,
                CAST(SUM(CASE WHEN text IS NULL THEN 1 ELSE 0 END) AS BIGINT)
@@ -1497,8 +1502,7 @@ ORACLE = {
                COUNT(DISTINCT source) AS n_sources,
                MIN(n_chars) AS min_chars,
                MAX(n_chars) AS max_chars,
-               CAST(floor(AVG(n_chars) * 10000 + 0.5) AS DOUBLE)
-                   / 10000 AS avg_chars
+               {sql_half_up("AVG(n_chars)")} AS avg_chars
         FROM documents
     """,
     "text_sample_stratified": """
@@ -1511,12 +1515,11 @@ ORACLE = {
             FROM documents
         ) WHERE rk <= 50
     """,
-    "text_stats": """
+    "text_stats": f"""
         SELECT lang,
                COUNT(*) AS n_docs,
                CAST(SUM(n_chars) AS BIGINT) AS total_chars,
-               CAST(floor(AVG(len(string_split(text, ' '))) * 10000 + 0.5)
-                   AS DOUBLE) / 10000 AS avg_tokens,
+               {sql_half_up("AVG(len(string_split(text, ' ')))")} AS avg_tokens,
                CAST(MAX(len(string_split(text, ' '))) AS INT) AS max_tokens,
                COUNT(DISTINCT source) AS n_sources
         FROM documents GROUP BY lang
@@ -1528,19 +1531,22 @@ ORACLE = {
                CAST(length(text) AS INT) AS chars
         FROM documents
     """,
-    "text_quality": """
+    "text_quality": f"""
         SELECT doc_id, lang,
                CAST(len(string_split(text, ' ')) AS INT) AS n_words,
-               CAST(floor(CAST(n_chars - (len(string_split(text, ' ')) - 1)
-                     AS DOUBLE) / len(string_split(text, ' '))
-                     * 10000 + 0.5) AS DOUBLE) / 10000 AS mean_word_len,
-               CAST(floor(length(regexp_replace(text, '[^A-Za-z]', '', 'g'))
-                     / CAST(n_chars AS DOUBLE)
-                     * 10000 + 0.5) AS DOUBLE) / 10000 AS alpha_ratio,
-               CAST(floor((least(len(string_split(text, ' ')) / 100.0, 1.0) * 0.5
-                     + least(length(regexp_replace(text, '[^A-Za-z]', '', 'g'))
-                             / CAST(n_chars AS DOUBLE), 1.0) * 0.5)
-                     * 10000 + 0.5) AS DOUBLE) / 10000 AS quality
+               {sql_half_up(
+                   "CAST(n_chars - (len(string_split(text, ' ')) - 1) "
+                   "AS DOUBLE) / len(string_split(text, ' '))"
+               )} AS mean_word_len,
+               {sql_half_up(
+                   "length(regexp_replace(text, '[^A-Za-z]', '', 'g')) "
+                   "/ CAST(n_chars AS DOUBLE)"
+               )} AS alpha_ratio,
+               {sql_half_up(
+                   "(least(len(string_split(text, ' ')) / 100.0, 1.0) * 0.5 "
+                   "+ least(length(regexp_replace(text, '[^A-Za-z]', '', 'g')) "
+                   "/ CAST(n_chars AS DOUBLE), 1.0) * 0.5)"
+               )} AS quality
         FROM documents
         WHERE n_chars > 0
     """,
@@ -1553,7 +1559,7 @@ ORACLE = {
         SELECT doc_id, lang, {_PRED_SQL} AS pred_lang, CAST({_BEST_SQL} AS INT) AS best_hits
         FROM scored
     """,
-    "corpus_datacard": """
+    "corpus_datacard": f"""
         WITH d AS (
             SELECT source, lang, text, n_chars,
                    len(string_split(text, ' ')) AS n_words
@@ -1571,13 +1577,9 @@ ORACLE = {
         )
         SELECT source, n_docs, n_langs,
                n_docs - n_unique AS n_dup_docs,
-               CAST(floor(CAST(n_docs - n_unique AS DOUBLE) / n_docs
-                          * 10000 + 0.5) AS DOUBLE) / 10000 AS dup_rate,
-               CAST(floor(CAST(sum_chars AS DOUBLE) / n_docs
-                          * 10000 + 0.5) AS DOUBLE) / 10000 AS avg_chars,
-               CAST(floor(CAST(n_minlen AS DOUBLE) / n_docs
-                          * 10000 + 0.5) AS DOUBLE) / 10000
-                   AS minlen_pass_rate
+               {sql_half_up("CAST(n_docs - n_unique AS DOUBLE) / n_docs")} AS dup_rate,
+               {sql_half_up("CAST(sum_chars AS DOUBLE) / n_docs")} AS avg_chars,
+               {sql_half_up("CAST(n_minlen AS DOUBLE) / n_docs")} AS minlen_pass_rate
         FROM g
     """,
     "text_langid_confusion": f"""
@@ -1610,10 +1612,10 @@ ORACLE = {
                AS fingerprint
         FROM documents
     """,
-    "text_topterms": """
+    "text_topterms": f"""
         WITH counts AS (
             SELECT lang, term, COUNT(*) AS n FROM (
-                SELECT lang, unnest(string_split(translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), ' ')) AS term
+                SELECT lang, unnest(string_split({sql_ascii_lower("text")}, ' ')) AS term
                 FROM documents
             ) WHERE term != ''
             GROUP BY lang, term

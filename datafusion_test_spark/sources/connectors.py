@@ -20,7 +20,7 @@ from functools import cached_property
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .._util import dsum, sql_dsum, scratch_dir
+from .._util import dsum, scratch_dir, sql_dsum, sql_half_up
 from ..io import table
 
 
@@ -1876,8 +1876,7 @@ _Z_SQL = " + ".join(
 
 _TT_V2_SUM = sql_dsum(
     "CASE WHEN o_orderstatus = 'O' THEN o_totalprice * 1.1 "
-    "ELSE o_totalprice END",
-    "total_v2",
+    "ELSE o_totalprice END"
 )
 
 ORACLE = {
@@ -1897,7 +1896,7 @@ ORACLE = {
                    AS n_newlines
         FROM d GROUP BY lang
     """,
-    "catalog_stats_sampled": """
+    "catalog_stats_sampled": f"""
         WITH t AS (
             SELECT CAST(floor(l_quantity * 100 + 0.5) AS BIGINT) AS q_s,
                    (strpos('0123456789abcdef',
@@ -1919,8 +1918,7 @@ ORACLE = {
                CAST(n_sample * 16 AS BIGINT) AS n_estimated,
                q_exact_s,
                CAST(q_sample_s * 16 AS BIGINT) AS q_estimated_s,
-               CAST(floor(CAST(abs(n_sample * 16 - n_exact) AS DOUBLE)
-                          / n_exact * 10000 + 0.5) AS DOUBLE) / 10000
+               {sql_half_up("CAST(abs(n_sample * 16 - n_exact) AS DOUBLE) / n_exact")}
                    AS row_est_rel_err
         FROM g
     """,
@@ -1969,8 +1967,8 @@ ORACLE = {
     """,
     "scan_time_travel": f"""
         SELECT o_orderstatus, count(*) AS n_orders,
-               {sql_dsum('o_totalprice', 'total_v1')},
-               {_TT_V2_SUM},
+               {sql_dsum('o_totalprice')} AS total_v1,
+               {_TT_V2_SUM} AS total_v2,
                CAST(SUM(CASE WHEN o_orderstatus = 'O'
                              AND o_totalprice * 1.1 <> o_totalprice
                         THEN 1 ELSE 0 END) AS BIGINT) AS n_changed
@@ -2028,10 +2026,9 @@ ORACLE = {
     """,
     # the same predicate over the FULL table: file pruning must be
     # row-invisible; manifest_pruned is the Spark-side IO proof
-    "scan_manifest_prune": """
+    "scan_manifest_prune": f"""
         SELECT o_orderpriority, COUNT(*) AS n_orders,
-               CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE)
-                   AS sum_price,
+               {sql_dsum("o_totalprice")} AS sum_price,
                TRUE AS manifest_pruned
         FROM orders
         WHERE o_totalprice <= 150000.0
@@ -2042,13 +2039,13 @@ ORACLE = {
     # bloom reader; the oracle restates the data-plane point lookup
     # (key = 'k'||o_orderkey is injective, so the key probe selects
     # exactly the min-orderkey rows)
-    "scan_parquet_bloom": """
+    "scan_parquet_bloom": f"""
         SELECT
             CAST((SELECT count(*) FROM orders) AS BIGINT) AS n_rows,
             CAST((SELECT count(*) FROM orders
                   WHERE o_orderkey = (SELECT min(o_orderkey) FROM orders))
                  AS BIGINT) AS hit_n,
-            (SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE)
+            (SELECT {sql_dsum("o_totalprice")}
              FROM orders
              WHERE o_orderkey = (SELECT min(o_orderkey) FROM orders))
                 AS hit_sum_price,
@@ -2061,13 +2058,13 @@ ORACLE = {
     # ordered_ok/point_prune_ok/below_min_excluded from parquet-mr's OWN
     # ColumnIndex reader; the oracle restates the data-plane point lookup
     # (Eq on the clustered min key selects exactly the min-orderkey rows)
-    "scan_parquet_pageindex": """
+    "scan_parquet_pageindex": f"""
         SELECT
             CAST((SELECT count(*) FROM orders) AS BIGINT) AS n_rows,
             CAST((SELECT count(*) FROM orders
                   WHERE o_orderkey = (SELECT min(o_orderkey) FROM orders))
                  AS BIGINT) AS hit_n,
-            (SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE)
+            (SELECT {sql_dsum("o_totalprice")}
              FROM orders
              WHERE o_orderkey = (SELECT min(o_orderkey) FROM orders))
                 AS hit_sum_price,
@@ -2092,7 +2089,7 @@ ORACLE = {
             CAST((SELECT count(*) FROM k) AS BIGINT) AS n_rows,
             CAST((SELECT count(*) FROM k
                   WHERE key = (SELECT min(key) FROM k)) AS BIGINT) AS hit_n,
-            (SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE)
+            (SELECT {sql_dsum("o_totalprice")}
              FROM k WHERE key = (SELECT min(key) FROM k)) AS hit_sum_price,
             TRUE AS index_written,
             TRUE AS page_granular,
@@ -2108,7 +2105,7 @@ ORACLE = {
     # the sum of parquet-mr's per-page null counts, the oracle recomputes
     # count(*) - count(key) from the identical key derivation; the data
     # plane restates BOTH pushed lookups (IS NULL and min-key Eq)
-    "scan_parquet_pageindex_nulls": """
+    "scan_parquet_pageindex_nulls": f"""
         WITH k AS (
             SELECT CASE WHEN o_orderkey % 3 = 0 THEN NULL
                         ELSE o_orderkey END AS key,
@@ -2120,11 +2117,11 @@ ORACLE = {
             CAST((SELECT count(*) - count(key) FROM k) AS BIGINT) AS n_nulls,
             CAST((SELECT count(*) FROM k WHERE key IS NULL) AS BIGINT)
                 AS null_hit_n,
-            (SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE)
+            (SELECT {sql_dsum("o_totalprice")}
              FROM k WHERE key IS NULL) AS null_sum_price,
             CAST((SELECT count(*) FROM k
                   WHERE key = (SELECT min(key) FROM k)) AS BIGINT) AS hit_n,
-            (SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE)
+            (SELECT {sql_dsum("o_totalprice")}
              FROM k WHERE key = (SELECT min(key) FROM k)) AS hit_sum_price,
             TRUE AS index_written,
             TRUE AS page_granular,
@@ -2142,7 +2139,7 @@ ORACLE = {
     # row budget; the oracle restates the two data-plane predicates with
     # the IDENTICAL k1/k2 integer derivation (min + span//2 ..
     # + greatest(span//100, 1)) so a drifted probe range hash-mismatches
-    "scan_parquet_pageindex_reader": """
+    "scan_parquet_pageindex_reader": f"""
         WITH k AS (
             SELECT CASE WHEN o_orderkey % 3 = 0 THEN NULL
                         ELSE o_orderkey END AS key,
@@ -2159,12 +2156,12 @@ ORACLE = {
             CAST((SELECT count(*) FROM k) AS BIGINT) AS n_rows,
             CAST((SELECT count(*) FROM k WHERE key IS NULL) AS BIGINT)
                 AS null_hit_n,
-            (SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE)
+            (SELECT {sql_dsum("o_totalprice")}
              FROM k WHERE key IS NULL) AS null_sum_price,
             CAST((SELECT count(*) FROM k, b
                   WHERE key >= b.k1 AND key <= b.k2) AS BIGINT)
                 AS range_hit_n,
-            (SELECT CAST(SUM(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE)
+            (SELECT {sql_dsum("o_totalprice")}
              FROM k, b WHERE key >= b.k1 AND key <= b.k2)
                 AS range_sum_price,
             TRUE AS single_rowgroup_ok,

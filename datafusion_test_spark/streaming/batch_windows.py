@@ -20,7 +20,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .._util import sane_ts_filter, DEC, finite
+from .._util import (
+    DEC,
+    finite,
+    sane_ts_filter,
+    sql_dsum,
+    sql_finite,
+    sql_half_up,
+    sql_sane_ts_where,
+)
 from ..io import table
 
 
@@ -564,13 +572,20 @@ QUERIES = {
     "rollup_ohlc": rollup_ohlc,
 }
 
+# The oracles' events read: finite values inside the operational time
+# domain, the twins of the finite and sane_ts_filter guards above.
+_SANE_EVENTS = (
+    f"(SELECT * REPLACE ({sql_finite('value')} AS value) FROM events "
+    f"WHERE {sql_sane_ts_where()})"
+)
+
 ORACLE = {
-    "rollup_ohlc": """
+    "rollup_ohlc": f"""
         WITH b AS (
             SELECT event_type,
                    CAST(date_trunc('hour', ts) AS TIMESTAMP) AS bucket,
                    ts, event_id, value
-            FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events WHERE ts >= TIMESTAMP '1900-01-01' AND ts < TIMESTAMP '2100-01-01') events WHERE value IS NOT NULL
+            FROM {_SANE_EVENTS} events WHERE value IS NOT NULL
         ),
         r AS (
             SELECT *,
@@ -590,15 +605,14 @@ ORACLE = {
                min(value) AS low,
                max(CASE WHEN rl = 1 THEN value END) AS close,
                CAST(count(*) AS BIGINT) AS volume,
-               CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE)
-                   AS sum_value
+               {sql_dsum("value")} AS sum_value
         FROM r GROUP BY event_type, bucket
     """,
-    "stream_topk_windowed": """
+    "stream_topk_windowed": f"""
         WITH counts AS (
             SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS window_start,
                    event_type, count(*) AS n_events
-            FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events WHERE ts >= TIMESTAMP '1900-01-01' AND ts < TIMESTAMP '2100-01-01') events GROUP BY 1, 2
+            FROM {_SANE_EVENTS} events GROUP BY 1, 2
         )
         SELECT window_start,
                CAST(row_number() OVER (
@@ -609,13 +623,13 @@ ORACLE = {
         FROM counts
         QUALIFY rk <= 3
     """,
-    "ts_resample_interp": """
+    "ts_resample_interp": f"""
         WITH hourly AS (
             SELECT event_type,
                    CAST(date_trunc('hour', ts) AS TIMESTAMP) AS bucket,
-                   CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE)
+                   {sql_dsum("value")}
                        / count(*) AS v
-            FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events WHERE ts >= TIMESTAMP '1900-01-01' AND ts < TIMESTAMP '2100-01-01') events
+            FROM {_SANE_EVENTS} events
             GROUP BY 1, 2
         ),
         grid AS (
@@ -655,28 +669,30 @@ ORACLE = {
         )
         SELECT event_type, bucket,
                (v IS NULL) AS is_interpolated,
-               CAST(floor((CASE WHEN v IS NOT NULL THEN v
-                                WHEN pv IS NULL THEN nv
-                                WHEN nv IS NULL THEN pv
-                                ELSE pv + (nv - pv) * ((t - pt) / (nt - pt))
-                           END) * 10000 + 0.5) AS DOUBLE) / 10000 AS v_interp
+               {sql_half_up(
+                   "(CASE WHEN v IS NOT NULL THEN v "
+                   "WHEN pv IS NULL THEN nv "
+                   "WHEN nv IS NULL THEN pv "
+                   "ELSE pv + (nv - pv) * ((t - pt) / (nt - pt)) "
+                   "END)"
+               )} AS v_interp
         FROM f
     """,
-    "stream_join_outer": """
+    "stream_join_outer": f"""
         SELECT c.event_id AS click_id, c.user_id, c.ts AS click_ts,
                p.ts AS purchase_ts, p.value AS purchase_value
-        FROM (SELECT * FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events WHERE ts >= TIMESTAMP '1900-01-01' AND ts < TIMESTAMP '2100-01-01') events WHERE event_type = 'click') c
-        LEFT JOIN (SELECT * FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events WHERE ts >= TIMESTAMP '1900-01-01' AND ts < TIMESTAMP '2100-01-01') events WHERE event_type = 'purchase') p
+        FROM (SELECT * FROM {_SANE_EVENTS} events WHERE event_type = 'click') c
+        LEFT JOIN (SELECT * FROM {_SANE_EVENTS} events WHERE event_type = 'purchase') p
           ON c.user_id = p.user_id
          AND p.ts >= c.ts AND p.ts < c.ts + INTERVAL 30 MINUTE
     """,
-    "rollup_gapfill": """
+    "rollup_gapfill": f"""
         WITH hourly AS (
             SELECT event_type,
                    CAST(date_trunc('hour', ts) AS TIMESTAMP) AS bucket,
                    count(*) AS n_events,
-                   CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-            FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events WHERE ts >= TIMESTAMP '1900-01-01' AND ts < TIMESTAMP '2100-01-01') events
+                   {sql_dsum("value")} AS sum_value
+            FROM {_SANE_EVENTS} events
             GROUP BY 1, 2
         ),
         grid AS (
@@ -696,59 +712,59 @@ ORACLE = {
         LEFT JOIN hourly h
           ON g.event_type = h.event_type AND g.bucket = h.bucket
     """,
-    "stream_join_interval": """
+    "stream_join_interval": f"""
         SELECT c.event_id AS click_id, c.user_id, c.ts AS click_ts,
                p.ts AS purchase_ts, p.value AS purchase_value
-        FROM (SELECT * FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events WHERE ts >= TIMESTAMP '1900-01-01' AND ts < TIMESTAMP '2100-01-01') events WHERE event_type = 'click') c
-        JOIN (SELECT * FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events WHERE ts >= TIMESTAMP '1900-01-01' AND ts < TIMESTAMP '2100-01-01') events WHERE event_type = 'purchase') p
+        FROM (SELECT * FROM {_SANE_EVENTS} events WHERE event_type = 'click') c
+        JOIN (SELECT * FROM {_SANE_EVENTS} events WHERE event_type = 'purchase') p
           ON c.user_id = p.user_id
          AND p.ts >= c.ts AND p.ts < c.ts + INTERVAL 30 MINUTE
     """,
     # three resolutions stated as a UNION ALL — value-identical to the
     # single-pass GROUPING SETS plan on the Spark side
-    "rollup_timeseries": """
+    "rollup_timeseries": f"""
         SELECT 'minute' AS resolution,
                CAST(date_trunc('minute', ts) AS TIMESTAMP) AS bucket,
                COUNT(*) AS n_events,
-               CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events WHERE ts >= TIMESTAMP '1900-01-01' AND ts < TIMESTAMP '2100-01-01') events GROUP BY 2
+               {sql_dsum("value")} AS sum_value
+        FROM {_SANE_EVENTS} events GROUP BY 2
         UNION ALL
         SELECT 'hour',
                CAST(date_trunc('hour', ts) AS TIMESTAMP),
                COUNT(*),
-               CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE)
-        FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events WHERE ts >= TIMESTAMP '1900-01-01' AND ts < TIMESTAMP '2100-01-01') events GROUP BY 2
+               {sql_dsum("value")}
+        FROM {_SANE_EVENTS} events GROUP BY 2
         UNION ALL
         SELECT 'day',
                CAST(date_trunc('day', ts) AS TIMESTAMP),
                COUNT(*),
-               CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE)
-        FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events WHERE ts >= TIMESTAMP '1900-01-01' AND ts < TIMESTAMP '2100-01-01') events GROUP BY 2
+               {sql_dsum("value")}
+        FROM {_SANE_EVENTS} events GROUP BY 2
     """,
-    "stream_tumbling": """
+    "stream_tumbling": f"""
         SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS window_start,
                CAST(date_trunc('hour', ts) + INTERVAL 1 HOUR AS TIMESTAMP) AS window_end,
                event_type,
                COUNT(*) AS n_events,
-               CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events WHERE ts >= TIMESTAMP '1900-01-01' AND ts < TIMESTAMP '2100-01-01') events
+               {sql_dsum("value")} AS sum_value
+        FROM {_SANE_EVENTS} events
         GROUP BY 1, 2, 3
     """,
-    "stream_sliding": """
+    "stream_sliding": f"""
         SELECT CAST(time_bucket(INTERVAL 15 MINUTE, ts)
                     - i * INTERVAL 15 MINUTE AS TIMESTAMP) AS window_start,
                event_type,
                COUNT(*) AS n_events
-        FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events WHERE ts >= TIMESTAMP '1900-01-01' AND ts < TIMESTAMP '2100-01-01') events, UNNEST(generate_series(0, 3)) AS t(i)
+        FROM {_SANE_EVENTS} events, UNNEST(generate_series(0, 3)) AS t(i)
         GROUP BY 1, 2
     """,
-    "stream_session_gap_stats": """
+    "stream_session_gap_stats": f"""
         WITH marked AS (
             SELECT user_id, event_id, ts,
                    epoch_us(ts) - epoch_us(
                        LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
                    ) AS gap
-            FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events WHERE ts >= TIMESTAMP '1900-01-01' AND ts < TIMESTAMP '2100-01-01') events
+            FROM {_SANE_EVENTS} events
         ),
         flagged AS (
             SELECT *, CASE WHEN gap >= 1800000000 THEN 1 ELSE 0 END AS new_session
@@ -770,19 +786,18 @@ ORACLE = {
                MAX(g) AS max_gap_us,
                CAST(SUM(g) AS BIGINT) AS sum_gap_us,
                CASE WHEN COUNT(g) > 0 THEN
-                   CAST(floor(SUM(g) / CAST(COUNT(g) AS DOUBLE)
-                        * 10000 + 0.5) AS DOUBLE) / 10000
+                   {sql_half_up("SUM(g) / CAST(COUNT(g) AS DOUBLE)")}
                END AS mean_gap_us
         FROM numbered
         GROUP BY user_id, session_seq
     """,
-    "stream_session": """
+    "stream_session": f"""
         WITH marked AS (
             SELECT user_id, event_id, ts,
                    CASE WHEN epoch_us(ts) - epoch_us(
                             LAG(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id)
                         ) >= 1800000000 THEN 1 ELSE 0 END AS new_session
-            FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events WHERE ts >= TIMESTAMP '1900-01-01' AND ts < TIMESTAMP '2100-01-01') events
+            FROM {_SANE_EVENTS} events
         ),
         numbered AS (
             SELECT user_id, ts,
@@ -802,25 +817,25 @@ ORACLE = {
     # withWatermark is a no-op in batch mode, so the batch result equals the
     # plain tumbling aggregation — hash-checkable; the streaming late-drop
     # semantics are asserted in tests/test_streaming.py
-    "stream_watermark_late": """
+    "stream_watermark_late": f"""
         SELECT CAST(date_trunc('hour', ts) AS TIMESTAMP) AS window_start,
                CAST(date_trunc('hour', ts) + INTERVAL 1 HOUR AS TIMESTAMP) AS window_end,
                event_type,
                COUNT(*) AS n_events,
-               CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
-        FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events WHERE ts >= TIMESTAMP '1900-01-01' AND ts < TIMESTAMP '2100-01-01') events
+               {sql_dsum("value")} AS sum_value
+        FROM {_SANE_EVENTS} events
         GROUP BY 1, 2, 3
     """,
-    "stream_stateful_count": """
+    "stream_stateful_count": f"""
         SELECT user_id, COUNT(*) AS n_events,
-               CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS total_value
-        FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events WHERE ts >= TIMESTAMP '1900-01-01' AND ts < TIMESTAMP '2100-01-01') events GROUP BY user_id
+               {sql_dsum("value")} AS total_value
+        FROM {_SANE_EVENTS} events GROUP BY user_id
     """,
-    "stream_dedup": """
+    "stream_dedup": f"""
         SELECT event_id,
                MIN(ts) AS ts,
                MIN(user_id) AS user_id,
                MIN(event_type) AS event_type
-        FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events WHERE ts >= TIMESTAMP '1900-01-01' AND ts < TIMESTAMP '2100-01-01') events GROUP BY event_id
+        FROM {_SANE_EVENTS} events GROUP BY event_id
     """,
 }

@@ -25,8 +25,8 @@ from pyspark.sql import functions as F
 
 from itertools import count as _count
 
-from .._util import half_up
-from ..io import table
+from .._util import half_up, sql_dsum, sql_half_up
+from ..io import SQL_FINITE_EVENTS, table
 from ..session import tune
 
 _RUN_SEQ = _count()
@@ -503,12 +503,10 @@ ORACLE = {
     """,
     # Python-side float accumulation differs from the decimal sum only in
     # ~1e-12 ulps; round(4) absorbs it on both sides.
-    "stream_stateful_run": """
+    "stream_stateful_run": f"""
         SELECT user_id, COUNT(*) AS n_events,
-               CAST(floor(CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE)
-                   * 10000 + 0.5) AS DOUBLE) / 10000
-                   AS total_value
-        FROM (SELECT * REPLACE ((CASE WHEN isfinite(value) THEN value END) AS value) FROM events) events GROUP BY user_id
+               {sql_half_up(sql_dsum("value"))} AS total_value
+        FROM {SQL_FINITE_EVENTS} events GROUP BY user_id
     """,
     "stream_idempotent_sink": """
         SELECT CAST(COUNT(*) AS BIGINT) AS n_events,
