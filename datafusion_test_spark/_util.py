@@ -7,8 +7,11 @@ order-dependent; Spark's partial/final aggregation and DuckDB's parallel sum
 can disagree in the last ulps.  We therefore:
 
 - SUM: cast the addend to DECIMAL(18,6) pre-sum (exact, associative integer
-  arithmetic in both engines), cast the result back to double.  Both sides of
-  every oracle pair use the same cast, so results are bit-identical.
+  arithmetic in both engines), cast the result back to double.  The cast
+  rounds a 7th-decimal tie HALF_UP on the double's shortest decimal form,
+  as Spark does (123456.7890125 -> 123456.789013); DuckDB's own cast rounds
+  the binary value instead (-> .789012), so the oracle twin casts through
+  that shortest form, VARCHAR (see :func:`sql_dsum`).
 - AVG / STDDEV / CORR: round(…, 4) — the error of a mean/variance is
   O(sum_error / n), far below 1e-4 at our scales.
 - Alias every computed column identically in Spark code and oracle SQL
@@ -43,8 +46,13 @@ def r4(col: Column, alias: str) -> Column:
 
 
 def sql_dsum(expr: str) -> str:
-    """Oracle-side twin of :func:`dsum` (callers add ``AS alias``)."""
-    return f"CAST(SUM(CAST(({expr}) AS DECIMAL(18,6))) AS DOUBLE)"
+    """Oracle-side twin of :func:`dsum` (callers add ``AS alias``).
+
+    The addend goes through its VARCHAR form: DuckDB prints a DOUBLE in its
+    shortest round-trip form, the string Spark rounds, and prints BIGINT
+    and DECIMAL values exactly.  A FLOAT addend must be cast to DOUBLE
+    first, as Spark widens it before the cast."""
+    return f"CAST(SUM(CAST(CAST(({expr}) AS VARCHAR) AS DECIMAL(18,6))) AS DOUBLE)"
 
 
 _SCRATCH_ROOT: list[str] = []

@@ -330,6 +330,69 @@ def test_half_up_three_way_agreement_on_ties(spark):
     assert got == want
 
 
+def test_dsum_engine_parity(spark):
+    """Spark dsum and DuckDB sql_dsum give the same double per group.
+
+    Spark casts a double to DECIMAL(18,6) through its shortest decimal
+    string, HALF_UP; DuckDB's plain cast rounds the binary value, so the
+    two disagree on 7th-decimal ties (123456.7890125 -> .789013 vs
+    .789012).  Inputs: ties of both signs, 2-dp money values, full-
+    precision doubles and doubles rounded to 2-12 decimals, BIGINT and
+    DECIMAL columns, NULLs, and a group summing every tie."""
+    import random
+    from decimal import Decimal
+
+    import pyarrow as pa
+
+    from pyspark.sql import functions as F
+
+    from datafusion_test_spark._util import dsum, sql_dsum
+
+    rng = random.Random(14)
+    ties = [123456.7890125, -123456.7890125, 5e-07, -5e-07, 1.0000005]
+    ties += [
+        float(f"{s}{rng.randrange(100000)}.{rng.randrange(10**6):06d}5")
+        for s in ("", "-") for _ in range(100)
+    ]
+    vals = ties + [round(rng.uniform(-1e4, 1e4), 2) for _ in range(200)]
+    vals += [rng.uniform(-1e6, 1e6) for _ in range(200)]
+    vals += [round(rng.uniform(-1e6, 1e6), rng.randint(2, 12)) for _ in range(400)]
+    rows = [
+        (g, v, rng.randrange(-(10**11), 10**11), Decimal(f"{rng.uniform(-1e6, 1e6):.2f}"))
+        for g, v in enumerate(vals, start=1)
+    ]
+    rows += [(0, v, None, None) for v in ties]  # one group sums every tie
+    rows += [(-1, None, None, None), (-2, None, 7, Decimal("0.05"))]
+
+    sdf = spark.createDataFrame(rows, "g int, v double, n bigint, m decimal(12,2)")
+    got = {
+        r["g"]: (r["sv"], r["sn"], r["sm"])
+        for r in sdf.groupBy("g")
+        .agg(dsum(F.col("v"), "sv"), dsum(F.col("n"), "sn"), dsum(F.col("m"), "sm"))
+        .collect()
+    }
+    t = pa.table(
+        {
+            "g": pa.array([r[0] for r in rows], pa.int32()),
+            "v": pa.array([r[1] for r in rows], pa.float64()),
+            "n": pa.array([r[2] for r in rows], pa.int64()),
+            "m": pa.array([r[3] for r in rows], pa.decimal128(12, 2)),
+        }
+    )
+    con = duckdb.connect()
+    con.register("t", t)
+    want = {
+        g: (sv, sn, sm)
+        for g, sv, sn, sm in con.execute(
+            f"SELECT g, {sql_dsum('v')}, {sql_dsum('n')}, {sql_dsum('m')} "
+            "FROM t GROUP BY g"
+        ).fetchall()
+    }
+    diff = {g: (got[g], want[g]) for g in want if got.get(g) != want[g]}
+    assert got.keys() == want.keys()
+    assert not diff, f"{len(diff)} groups differ, e.g. {list(diff.items())[:5]}"
+
+
 def test_safe_corr_matches_duckdb_and_nulls_on_zero_variance(spark):
     """_util.safe_corr must (a) equal each engine's Pearson corr to 4
     decimals on varying data and (b) be NULL on a constant column — where
