@@ -223,7 +223,7 @@ def test_ascii_lower_engine_parity(spark):
 # (Spark raises, DuckDB raises on its side), long-overflow in cents-scaled
 # sums of Inf, and ANN self-verification anchored on a poisoned query
 # vector.  The contract: _util.finite/finite_vec at the observed-rows
-# base, io.table's embeddings guard, and the matching SELECT * REPLACE
+# base, io.table's embeddings guard, and its twin io.SQL_FINITE_EMBEDDINGS
 # in every oracle.
 IEEE_SENSITIVE = [
     "feature_rfm_score",     # cast(floor(value*10000)) of NaN raised

@@ -37,9 +37,9 @@ def _dump(tree: Path) -> dict[str, str]:
     return json.loads(out.stdout)
 
 
-def _tree(con, sql: str):
-    """DuckDB's parse tree of sql without source positions, or None if it
-    does not parse."""
+def _tree(con, sql: str | None):
+    """DuckDB's parse tree of sql without source positions, or None if
+    there is no sql or it does not parse."""
 
     def strip(node):
         if isinstance(node, dict):
@@ -48,6 +48,8 @@ def _tree(con, sql: str):
             return [strip(v) for v in node]
         return node
 
+    if sql is None:
+        return None
     text = con.execute("SELECT json_serialize_sql($1::VARCHAR)", [sql]).fetchone()[0]
     tree = json.loads(text)
     return None if tree.get("error") else strip(tree)
@@ -62,20 +64,22 @@ def main(rev: str) -> int:
         old = _dump(Path(tmp))
     new = _dump(ROOT)
     con = duckdb.connect()
+    names = sorted(old.keys() | new.keys())
     same_bytes, same_tree, differ = 0, 0, []
-    for name in sorted(old.keys() | new.keys()):
+    for name in names:
         a, b = old.get(name), new.get(name)
         if a == b:
             same_bytes += 1
-        elif None not in (a, b) and _tree(con, a) == _tree(con, b) is not None:
+            continue
+        ta, tb = _tree(con, a), _tree(con, b)
+        if ta is not None and ta == tb:
             same_tree += 1
         else:
-            differ.append(name)
+            differ.append(name + ("" if tb else " (missing or does not parse)"))
     print(f"{same_bytes} byte-identical, {same_tree} parse-identical, "
-          f"{len(differ)} differ (of {len(old.keys() | new.keys())})")
+          f"{len(differ)} differ (of {len(names)})")
     for name in differ:
-        parses = new.get(name) is not None and _tree(con, new[name]) is not None
-        print("  differs:", name, "" if parses else "(does not parse)")
+        print("  differs:", name)
     return 1 if differ else 0
 
 
