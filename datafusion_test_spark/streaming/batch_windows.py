@@ -34,8 +34,8 @@ from ..io import table
 
 def _events(spark, sf_dir):
     # finite-measurement contract: NaN/Inf value reads as NULL (absent).
-    # Every oracle in this module carries the matching SELECT * REPLACE
-    # guard (see _util.finite; ieee corpus, round 7).
+    # Every oracle in this module reads events through _SANE_EVENTS, its
+    # twin (see _util.finite; ieee corpus, round 7).
     #
     # sane-time-domain contract (time corpus, round 8): this module is the
     # event-TIME surface — every operator here buckets, windows, or
@@ -47,8 +47,7 @@ def _events(spark, sf_dir):
     # overflows the representable year range.  Out-of-domain timestamps
     # are data errors and quarantined BEFORE the event-time column is
     # used — the raw-column range filter keeps parquet row-group pruning
-    # (the round-7 pushdown lesson).  Every oracle in this module carries
-    # the matching WHERE inside its derived-events base.
+    # (the round-7 pushdown lesson).  _SANE_EVENTS states the same WHERE.
     return sane_ts_filter(table(spark, sf_dir, "events")).withColumn(
         "value", finite("value")
     )
@@ -573,7 +572,7 @@ QUERIES = {
 }
 
 # The oracles' events read: finite values inside the operational time
-# domain, the twins of the finite and sane_ts_filter guards above.
+# domain, the twins of _events' finite and sane_ts_filter guards.
 _SANE_EVENTS = (
     f"(SELECT * REPLACE ({sql_finite('value')} AS value) FROM events "
     f"WHERE {sql_sane_ts_where()})"
